@@ -8,11 +8,22 @@ edges partitioned by subject idspace; skewed hubs (GO/CHEBI-sized
 prefixes) get a salt column so no single write task or downstream join
 partition owns an entire hub prefix (AQE skew-join handles reads, but a
 `partitionBy(idspace)` WRITE of a hot prefix needs explicit salt).
+
+``graph_writers`` / ``write_graph`` is the one node/edge layout writer.
+The canonical chain arrives partitioned by document key with zero
+exchanges; the writer then adds ONE hash exchange — edges on
+``(idspace, salt)``, nodes on ``idspace`` — so every output leaf has
+exactly one writer task and a batch adds one parquet file per leaf, not
+one per (task, leaf). File count is a fixed per-batch cost on local
+filesystems: without libhadoop, Hadoop's ``RawLocalFileSystem`` forks a
+``chmod`` process for every file, ``.crc`` file and directory it creates.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import DataFrame, DataFrameWriter, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -144,14 +155,50 @@ def with_salt(df: DataFrame, key: str = "obj", n_salts: int = 16) -> DataFrame:
     return df.withColumn("salt", F.pmod(F.xxhash64(F.col(key)), F.lit(n_salts)).cast("int"))
 
 
+# the KG output layout: partition columns per table
+GRAPH_PARTITIONS = {"nodes": ("idspace",), "edges": ("idspace", "salt")}
+
+
+def graph_writers(
+    nodes: DataFrame,
+    edges: DataFrame,
+    n_salts: int = 16,
+    row_counts: dict[str, Observation] | None = None,
+) -> dict[str, DataFrameWriter]:
+    """One append-mode writer per table in the :data:`GRAPH_PARTITIONS`
+    layout (edges salted on ``subj``).
+
+    Rows are hash-distributed on the partition columns first, so one task
+    owns each leaf and writes one file into it. The explicit partition
+    count (``spark.sql.shuffle.partitions``) keeps AQE from coalescing the
+    exchange into one serial write task. This is where the salt pays off:
+    a hub idspace spreads over ``n_salts`` leaves and so over up to
+    ``n_salts`` write tasks.
+
+    ``row_counts`` observes each table's written rows as ``n``. The
+    observation sits above the exchange: below it, AQE drops the
+    observed operator from the plan when the exchange turns out empty,
+    and the observation never completes."""
+    n = int(nodes.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    graph = {
+        "nodes": nodes.repartition(n, "idspace"),
+        "edges": with_salt(edges, "subj", n_salts).repartition(n, "idspace", "salt"),
+    }
+    writers = {}
+    for table, df in graph.items():
+        if row_counts is not None:
+            df = df.observe(row_counts[table], F.count(F.lit(1)).alias("n"))
+        writers[table] = df.write.mode("append").partitionBy(*GRAPH_PARTITIONS[table])
+    return writers
+
+
 def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str, n_salts: int = 16) -> None:
-    """Materialize node/edge parquet partitioned by idspace (+ salt for
-    edges). On a cluster these are Iceberg tables; parquet directories are
-    the sandbox stand-in (identical partition layout)."""
-    nodes.write.mode("overwrite").partitionBy("idspace").parquet(f"{out_dir}/nodes")
-    with_salt(edges, "subj", n_salts).write.mode("overwrite").partitionBy("idspace", "salt").parquet(
-        f"{out_dir}/edges"
-    )
+    """Append node/edge parquet under ``out_dir/{nodes,edges}`` in the
+    :func:`graph_writers` layout. On a cluster these are Iceberg tables;
+    parquet directories are the sandbox stand-in (identical partition
+    layout)."""
+    for table, writer in graph_writers(nodes, edges, n_salts).items():
+        writer.parquet(os.path.join(out_dir, table))
 
 
 def hub_degrees(edges: DataFrame, n_salts: int = 16) -> DataFrame:

@@ -6,7 +6,15 @@ North-rule requirements implemented here:
     a restarted run anti-joins the corpus against the manifest and only
     processes the remainder (no reference analogue — fastobo-py is a
     single-process library; this is the 10^12-file-scale addition).
-  * metrics: per-stage row counts written next to the outputs.
+  * metrics: per-stage row counts written next to the outputs, plus the
+    files each table gained and the generated-code compiles the batch
+    paid for (its fixed costs).
+
+Exchanges: the canonical chain runs with zero exchanges of the edge
+table over the doc_key-partitioned clause cache; exactly one
+``(idspace, salt)`` hash exchange then feeds the writer
+(``materialize.graph_writers``), so a batch adds one file per output
+leaf, not one per (write task, leaf).
 
 The manifest is append-only parquet (an Iceberg table on a real cluster,
 where commit atomicity comes from the table format; locally, parquet
@@ -30,8 +38,9 @@ from pyspark.sql import functions as F
 
 from fastobo_py_spark.operators.canonicalize import rewrite_edges
 from fastobo_py_spark.operators.idents import edge_idspace
-from fastobo_py_spark.operators.materialize import build_nodes, with_salt
+from fastobo_py_spark.operators.materialize import build_nodes, graph_writers
 from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
+from fastobo_py_spark.session import codegen_compiles
 
 MANIFEST_COLS = ("doc_sha", "repo", "path", "commit")
 
@@ -384,7 +393,8 @@ def run_pipeline(
 
     Stages: filter+parse → quarantine split → triple extraction →
     treat-xrefs macros → alias/obsolete rewrite → equivalence CC →
-    nodes+edges write (idspace-partitioned, salted) → manifest append.
+    nodes+edges write (idspace-partitioned, salted; one file per leaf) →
+    snapshot commit → manifest append.
 
     ``snapshot_branch``: commit the batch's snapshot to a named branch
     instead of main (write-audit-publish): snapshot readers of HEAD
@@ -395,6 +405,7 @@ def run_pipeline(
     doc_sha) — identical re-submissions are resume-skipped by design.
     """
     t0 = time.time()
+    compiles0 = codegen_compiles(spark)
     batch_id = uuid.uuid4().hex[:12]
 
     # self-heal interrupted maintenance before anything reads the tables:
@@ -420,13 +431,24 @@ def run_pipeline(
     # Metrics ride on the write actions via Observation — counting after
     # the fact re-executed the whole macro/rewrite/CC chain (the job did
     # ~2x the work to report on itself).
-    obs = {k: Observation(k) for k in ("clauses", "quarantine", "edges", "nodes", "done")}
+    obs = {k: Observation(k) for k in ("parse", "edges", "nodes", "done")}
 
     # parse ONCE: both the clause and quarantine paths read this cache
     # (without it the quarantine write re-ran the mapInPandas parse)
     parsed = parse_corpus(src).persist()
-    clauses, quarantine = split_parsed(parsed)
-    quarantine = quarantine.observe(obs["quarantine"], F.count(F.lit(1)).alias("n"))
+    clauses, _ = split_parsed(parsed)
+    # clause and quarantine counts ride the quarantine write, the first
+    # and a FULL scan of the parse cache (a limit-style first action would
+    # record a partial count); observed below the split's error filter,
+    # the observation sees every parsed row
+    err = F.col("is_error")
+    _, quarantine = split_parsed(
+        parsed.observe(
+            obs["parse"],
+            F.count(F.when(~err, 1)).alias("clauses"),
+            F.count(F.when(err, 1)).alias("quarantine"),
+        )
+    )
     quarantine.write.mode("append").parquet(os.path.join(out_dir, "quarantine"))
 
     # one pass over the corpus feeds every downstream stage; hash-partition
@@ -476,17 +498,11 @@ def run_pipeline(
             )
         else:
             edges = _dedup_edges(e)
-    edges = edges.observe(obs["edges"], F.count(F.lit(1)).alias("n"))
-    # clause observation rides the node build: its write is a guaranteed
-    # FULL scan of the clause cache (a limit-style first action — e.g. the
-    # resolution-map probe — would otherwise record a partial count)
-    nodes = build_nodes(clauses.observe(obs["clauses"], F.count(F.lit(1)).alias("n")))
-    nodes = nodes.observe(obs["nodes"], F.count(F.lit(1)).alias("n"))
-
-    nodes.write.mode("append").partitionBy("idspace").parquet(os.path.join(out_dir, "nodes"))
-    with_salt(edges, "subj", n_salts).write.mode("append").partitionBy("idspace", "salt").parquet(
-        os.path.join(out_dir, "edges")
-    )
+    # the write_graph layout; its writes are issued from this function so
+    # a tracer that attributes Spark actions to their calling function
+    # (perfbench/trace.py) keeps charging them to this batch's layers
+    for table, writer in graph_writers(build_nodes(clauses), edges, n_salts, row_counts=obs).items():
+        writer.parquet(os.path.join(out_dir, table))
     parsed.unpersist()
     for c in caches:
         c.unpersist()
@@ -496,9 +512,10 @@ def run_pipeline(
     # manifest append, so a crash between the two reruns the batch
     # idempotently instead of losing it from snapshot visibility
     post_files = _snap.list_data_files(out_dir)
+    added = {t: sorted(post_files[t] - pre_files.get(t, set())) for t in _snap.TABLES}
     snapshot = _snap.commit_snapshot(
         out_dir,
-        added={t: sorted(post_files[t] - pre_files.get(t, set())) for t in _snap.TABLES},
+        added=added,
         op="append",
         batch_id=batch_id,
         branch=snapshot_branch,
@@ -524,8 +541,8 @@ def run_pipeline(
     metrics = {
         "batch_id": batch_id,
         "docs_in_batch": obs["done"].get["n"],
-        "clause_rows": obs["clauses"].get["n"],
-        "quarantined_docs": obs["quarantine"].get["n"],
+        "clause_rows": obs["parse"].get["clauses"],
+        "quarantined_docs": obs["parse"].get["quarantine"],
         "edges": obs["edges"].get["n"],
         "nodes": obs["nodes"].get["n"],
         "doc_key_collisions": n_key_collisions,
@@ -534,6 +551,8 @@ def run_pipeline(
         "snapshot_id": snapshot["snapshot_id"],
         "snapshot_sequence": snapshot["sequence"],
         "elapsed_sec": round(time.time() - t0, 3),
+        "files_added": {t: len(files) for t, files in added.items()},
+        "codegen_compiles": codegen_compiles(spark) - compiles0,
     }
     clauses.unpersist()
     metrics_dir = os.path.join(out_dir, "_metrics")

@@ -60,18 +60,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fastobo_py_spark.operators.materialize import GRAPH_PARTITIONS
+
 SNAP_DIR = "_snapshots"
 TABLES = ("nodes", "edges")
 # a merge source's distinct single-column key set at or below this size
 # is collected and pushed into the probe scan as an In filter (file-level
 # footer-stat skipping); above it the probe falls back to a semi-join
 _MERGE_PUSHDOWN_KEYS = 1000
-# the pipeline's write layout (run_pipeline's partitionBy) — the fallback
-# partition spec when a table is momentarily empty (e.g. a full
-# delete_where) and no on-disk leaf path can witness the layout; writing
-# FLAT there would poison every later partitioned read with Spark's
-# "conflicting directory structures" error
-TABLE_PARTITIONS = {"nodes": ("idspace",), "edges": ("idspace", "salt")}
 
 
 def _snap_root(out_dir: str) -> str:
@@ -1062,16 +1058,17 @@ def _uri_to_rel(uri: str, out_dir: str) -> str:
 def _part_cols_for(out_dir: str, table: str, layout_ref: str) -> list[str]:
     """Partition columns for a rewrite: read them off an existing leaf
     path when one exists (uniform per table — one writer produced the
-    layout), else fall back to the pipeline's known spec
-    (``TABLE_PARTITIONS``) so an insert into an emptied table cannot
-    write flat and break the directory structure."""
+    layout), else fall back to the pipeline's write layout
+    (``materialize.GRAPH_PARTITIONS``) so an insert into an emptied table
+    cannot write flat — that would poison every later partitioned read
+    with Spark's "conflicting directory structures" error."""
     if layout_ref:
         return [
             seg.split("=", 1)[0]
             for seg in os.path.dirname(layout_ref).split(os.sep)[1:]
             if "=" in seg
         ]
-    return list(TABLE_PARTITIONS.get(table, ()))
+    return list(GRAPH_PARTITIONS.get(table, ()))
 
 
 def _stage_and_adopt(

@@ -21,7 +21,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from fastobo_py_spark.operators.materialize import build_nodes, with_salt
+from fastobo_py_spark.operators.materialize import build_nodes, write_graph
 from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
 from fastobo_py_spark.plans.pipeline import canonical_edges
 from fastobo_py_spark.schema import CORPUS_SCHEMA
@@ -60,11 +60,7 @@ def _process_batch(out_dir: str, n_salts: int):
                 "shuffle_hash" if _surrogate.audit_doc_keys(clauses).count() == 0 else "auto"
             )
             edges = canonical_edges(clauses, strategy=strategy, persisted_out=caches)
-            nodes = build_nodes(clauses)
-            nodes.write.mode("append").partitionBy("idspace").parquet(os.path.join(out_dir, "nodes"))
-            with_salt(edges, "subj", n_salts).write.mode("append").partitionBy("idspace", "salt").parquet(
-                os.path.join(out_dir, "edges")
-            )
+            write_graph(build_nodes(clauses), edges, out_dir, n_salts)
             # same snapshot visibility contract as the batch pipeline:
             # one atomic commit per micro-batch. A checkpoint-REPLAYED
             # batch (crash after commit, before the checkpoint advanced)

@@ -692,7 +692,7 @@ def test_merge_into_op_semantics_and_edge_cases(spark):
         assert head == [("A", 1), ("B", 2), ("C", 30), ("D", 40)]
 
         # empty the table, then insert: the rewrite must keep the
-        # partitioned layout (TABLE_PARTITIONS fallback), not write flat
+        # partitioned layout (GRAPH_PARTITIONS fallback), not write flat
         S.delete_where(spark, out, "x IS NOT NULL", tables=("nodes",))
         assert S.read_table_at(spark, out, "nodes").count() == 0
         st4 = S.merge_into(
