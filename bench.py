@@ -131,9 +131,9 @@ def _timed_kg_flow(spark, corpus, n_files: int) -> dict:
     one doc_sha hash-partition shuffle → cache fill (the corpus-scan-
     bound fraction that dominates at real scale).
     Stage 'graph': the fully-distributed canonical edge chain
-    (plans/pipeline.canonical_edges, strategy=shuffle_hash — per-doc
-    applyInPandas resolution/CC, co-partitioned shuffle-hash dimension
-    joins, shuffle-free final dedup). Exactly TWO driver job submissions
+    (plans/pipeline.canonical_edges — one partition-wide resolution/CC
+    kernel, co-partitioned shuffle-hash dimension joins, shuffle-free
+    final dedup). Exactly TWO driver job submissions
     in the timed region; nothing else is serial.
     """
     from pyspark.sql import functions as F
@@ -163,7 +163,7 @@ def _timed_kg_flow(spark, corpus, n_files: int) -> dict:
     cpu_parse = _tree_cpu_seconds() - cpu0
 
     t1 = time.time()
-    e = canonical_edges(clauses, strategy="shuffle_hash")
+    e = canonical_edges(clauses)
     n_edges = e.count()
     t_graph = time.time() - t1
     cpu_graph = _tree_cpu_seconds() - cpu0 - cpu_parse

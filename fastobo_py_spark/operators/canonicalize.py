@@ -16,12 +16,13 @@ Reference semantics being reproduced:
 
 Scale notes: the alias and redirect maps are proportional to the number of
 *declared aliases*, orders of magnitude smaller than the edge table; macro
-lists are per-document header metadata. Two join strategies throughout:
-``auto`` size-gates a broadcast (map-side join, sort-merge fallback), and
-``shuffle_hash`` — the 10^12-file production default — joins every dim
-against the clause cache's doc_sha hash partitioning with zero exchanges
-of the edge table and zero driver materialization (the resolution map
-itself shards per document via ``applyInPandas``).
+lists are per-document header metadata. One composition of the three
+(:func:`plans.pipeline.canonical_edges`): the resolution map and the
+equivalence labels come out of one partition-wide kernel
+(:func:`combined_map_distributed`), the macros fuse into the extraction
+pass (:func:`extract_edges_with_macros`), and every dim joins the clause
+cache's document-key hash partitioning as a shuffle-hash join — zero
+exchanges of the edge table and zero driver materialization.
 """
 
 from __future__ import annotations
@@ -29,152 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.hints import gated_broadcast, known_rows
 from fastobo_py_spark.operators.idents import edge_idspace, ident_prefix
-
-
-def alias_map(clauses: DataFrame) -> DataFrame:
-    """(doc_sha, alias, canonical) from alt_id declarations (O8).
-
-    Conflicting declarations (two frames claiming the same alt_id) keep
-    the FIRST in document order — min_by (frame_ix, clause_ix) — the same
-    rule the pure-Python oracle applies by iterating clauses in parse
-    order; a dropDuplicates here kept an arbitrary survivor and could
-    disagree with the fused kernel run-to-run."""
-    return (
-        clauses.where((F.col("tag") == "alt_id") & (F.col("frame_id") != ""))
-        .groupBy("doc_sha", F.col("v1").alias("alias"))
-        .agg(
-            F.min_by(
-                F.col("frame_id"), F.struct(F.col("frame_ix"), F.col("clause_ix"))
-            ).alias("canonical")
-        )
-    )
-
-
-def replacement_map(clauses: DataFrame) -> DataFrame:
-    """(doc_sha, obsolete_id, replacement) from replaced_by (O9).
-
-    Only hard redirects; ``consider`` is advisory (kept on nodes, not used
-    to rewrite edges) per the reference's distinction.
-    Multi-valued replaced_by: first declared in DOCUMENT order wins —
-    min_by (frame_ix, clause_ix), the same tiebreak as alias_map (two
-    frames sharing a frame_id tie on clause_ix alone, and the oracle's
-    parse-order iteration keeps the earlier frame's target).
-    """
-    w = (
-        clauses.where((F.col("tag") == "replaced_by") & (F.col("frame_id") != ""))
-        .groupBy("doc_sha", F.col("frame_id").alias("obsolete_id"))
-        .agg(
-            F.min_by(
-                "v1", F.struct(F.col("frame_ix"), F.col("clause_ix"))
-            ).alias("replacement")
-        )
-    )
-    return w
-
-
-def _compose_resolution_pandas(both, max_hops: int):
-    """Compose alias+replacement chains in pandas: rows (doc_sha, old,
-    new, k) with k=0 alias / k=1 replaced_by → (doc_sha, old, new).
-
-    Shared by the driver-side path (whole map at once) and the
-    per-document ``applyInPandas`` kernel (one doc per call) — identical
-    semantics by construction: aliases win when both are declared, repl
-    keys enter at identity, every entry receives exactly ``max_hops``
-    replacement applications, identity entries dropped.
-    """
-    import pandas as pd
-
-    a = both[both["k"] == 0][["doc_sha", "old", "new"]]
-    r = both[both["k"] == 1][["doc_sha", "old", "new"]]
-    ident = r[["doc_sha", "old"]].copy()
-    ident["new"] = ident["old"]
-    base = pd.concat([a, ident], ignore_index=True).drop_duplicates(["doc_sha", "old"], keep="first")
-    lut = r.rename(columns={"old": "__k", "new": "__v"})
-    for _ in range(max_hops):
-        base = base.merge(lut, how="left", left_on=["doc_sha", "new"], right_on=["doc_sha", "__k"])
-        base["new"] = base["__v"].fillna(base["new"])
-        base = base.drop(columns=["__k", "__v"])
-    return base[base["old"] != base["new"]][["doc_sha", "old", "new"]]
-
-
-def _alias_repl_union(clauses: DataFrame) -> DataFrame:
-    aliases = alias_map(clauses)
-    repl = replacement_map(clauses)
-    return aliases.select(
-        F.col("alias").alias("old"), F.col("canonical").alias("new"), "doc_sha", F.lit(0).alias("k")
-    ).unionByName(
-        repl.select(
-            F.col("obsolete_id").alias("old"), F.col("replacement").alias("new"), "doc_sha", F.lit(1).alias("k")
-        )
-    )
-
-
-def resolution_map_distributed(clauses: DataFrame, max_hops: int = 3) -> DataFrame:
-    """Fully distributed resolution map: alias/replacement chains are
-    DOCUMENT-LOCAL (each OboDoc resolves independently), so the chain
-    composition shards perfectly by doc_sha — no driver collect, no
-    broadcast, nothing bounded by one machine. This is the 10^12-file
-    path; :func:`resolution_map` keeps the scale-adaptive driver shortcut
-    for interactive/small corpora.
-
-    Execution shape: ONE hash exchange on doc_sha (what a
-    ``groupBy(doc_sha).applyInPandas`` would also pay) followed by a
-    partition-wide ``mapInPandas`` kernel. ``_compose_resolution_pandas``
-    keys every merge on doc_sha, so one vectorized pass composes ALL
-    documents in the partition at once — the earlier per-document
-    ``applyInPandas`` paid pandas-DataFrame construction + three merges
-    per ~10-row group, a fixed Python tax of ~1 ms × n_docs that
-    dominated the graph stage's scaling profile. Memory is bounded by the
-    per-partition slice of the alias/replacement dim (tiny vs clauses);
-    size ``spark.sql.shuffle.partitions`` to the corpus as usual.
-    """
-    import pandas as pd
-
-    both = _alias_repl_union(clauses)
-    n = int(clauses.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-    def compose(batches):
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        yield _compose_resolution_pandas(pd.concat(pdfs, ignore_index=True), max_hops)
-
-    # the union above erases the clause cache's partitioning (UnionExec
-    # concatenates partition lists), so a doc's k=0 and k=1 rows land in
-    # different partitions — the explicit repartition restores doc-locality
-    return both.repartition(n, "doc_sha").mapInPandas(
-        compose, "doc_sha string, old string, new string"
-    )
-
-
-def resolution_map(clauses: DataFrame, max_hops: int = 3, driver_threshold: int = 5_000_000) -> DataFrame:
-    """Compose alias + replacement chains into ONE lookup map
-    (doc_sha, old, new).
-
-    The chain resolution iterates on the MAP (alias declarations only,
-    orders of magnitude smaller than the edge table), never on edges.
-    Scale-adaptive like the CC operator: below ``driver_threshold``
-    entries the composition happens driver-side in one pass (one Arrow
-    collect + one createDataFrame instead of 5 shuffle/broadcast jobs);
-    above it, the map composes distributedly by self-joining ``max_hops``
-    times. Semantics (alias first, then ``max_hops`` replacement
-    applications) match the sequential reference reading and oracle.py.
-    """
-    # ONE driver job fetches both maps (limit guards the driver: if the
-    # fetch hits the cap, fall through to the per-document distributed
-    # composition)
-    both = _alias_repl_union(clauses).limit(driver_threshold + 1).toPandas()
-    if len(both) <= driver_threshold:
-        base = _compose_resolution_pandas(both, max_hops)
-        spark = clauses.sparkSession
-        if base.empty:
-            return known_rows(spark.createDataFrame([], "doc_sha string, old string, new string"), 0)
-        return known_rows(
-            spark.createDataFrame(base, schema="doc_sha string, old string, new string"), len(base)
-        )
-    return resolution_map_distributed(clauses, max_hops)
 
 
 def combined_map_distributed(
@@ -189,17 +45,24 @@ def combined_map_distributed(
     operators/surrogate.py) — the surrogate also shrinks the Arrow
     transfer into the kernel by ~80 bytes/row.
 
-    Semantically identical to ``fuse_resolution_components(
-    resolution_map_distributed(dims), equivalence_components_from_clauses(
-    dims, ...))`` (test_canonical_edges_auto_matches_shuffle_hash and the
-    oracle tests pin this), but the compositional pipeline spends ~10
-    serial stage boundaries on kilobyte-sized dim tables — a constant
-    ~seconds of latency that does not shrink with cores and was the
-    measured dominant term of the graph stage's N→4N scaling loss. Here
-    every per-document step (alias/replaced_by chain composition,
-    treat-xrefs-as-equivalent macro pair synthesis, union-find, final
-    composition) runs inside one Python call per partition; doc-locality
-    comes from the explicit doc_sha repartition.
+    Per document, the map composes:
+
+    * resolution ``res``: an ``alt_id`` maps to its frame (first
+      declaration in document order wins), then ``max_hops``
+      ``replaced_by`` redirects apply (first declared target wins);
+    * equivalence labels ``comp``: union-find over the ``equivalent_to``
+      clauses plus the xrefs a ``treat-xrefs-as-equivalent`` macro covers,
+      endpoints taken through ``res`` first, each component labelled by
+      its smallest member (:class:`components.MinUnionFind`);
+    * ``combined(x) = comp(res(x)) ?? res(x)`` where ``res`` is defined,
+      else ``comp(x)``; identity entries are dropped.
+
+    ``oracle.build_canonical_maps`` is the pure-Python statement of the
+    same map, and the tests pin the kernel to it row for row. Every
+    per-document step runs inside one Python call per partition, so the
+    dim tables pay one stage boundary instead of a chain of kilobyte-
+    sized joins; doc-locality comes from the explicit ``key_col``
+    repartition.
     """
     import re
 
@@ -230,10 +93,10 @@ def combined_map_distributed(
                         d["spaces"].add(v1)
                 elif fid:
                     if tag == "alt_id":
-                        # first in DOCUMENT order wins (same rule as
-                        # alias_map's min_by and the oracle's parse-order
-                        # iteration) — partition arrival order after the
-                        # shuffle is not deterministic, so track the key
+                        # first in DOCUMENT order wins (the oracle's
+                        # parse-order rule) — partition arrival order
+                        # after the shuffle is not deterministic, so
+                        # track the key
                         cur = d["alias"].get(v1)
                         if cur is None or (fix, cix) < cur[1]:
                             d["alias"][v1] = (fid, (fix, cix))
@@ -309,67 +172,19 @@ def combined_map_distributed(
     )
 
 
-def fuse_resolution_components(res: DataFrame, comps: DataFrame) -> DataFrame:
-    """Compose the alias/obsolete resolution map with the equivalence
-    component labels into ONE (doc_sha, old, new) lookup.
+def rewrite_edges(edges: DataFrame, resolution: DataFrame, key_col: str) -> DataFrame:
+    """Canonicalize edge endpoints via the pre-composed ``(key_col, old,
+    new)`` map — one equi-join per endpoint.
 
-    The pipeline applies resolution first, then component rewrite, and
-    the component labels are keyed on POST-resolution ids (the pair
-    endpoints are rewritten through ``res`` before CC) — so the two maps
-    compose exactly:
-
-        combined(x) = comps(res(x)) ?? res(x)   if res(x) defined
-                    = comps(x)                   otherwise
-
-    Composing on the DIM side (two joins over the tiny maps) halves the
-    number of left joins against the edge table from four to two — the
-    edge table is the multi-million-row side, so this is the dominant
-    term at scale. Identity entries are dropped (a no-op join hit).
+    Zero probe jobs, zero broadcasts: both join keys lead with the
+    document key, and the edge side is already hash-partitioned on it (the
+    clause cache contract), so each shuffle-hash join co-locates without
+    exchanging the edge table — only the map side shuffles.
     """
-    c = comps.select(
-        F.col("doc_sha").alias("__cd"), F.col("id").alias("__ci"), F.col("component").alias("__cc")
-    )
-    through = res.join(
-        c, (res["doc_sha"] == F.col("__cd")) & (res["new"] == F.col("__ci")), "left"
-    ).select("doc_sha", "old", F.coalesce(F.col("__cc"), F.col("new")).alias("new"))
-    r = res.select(F.col("doc_sha").alias("__rd"), F.col("old").alias("__ro"))
-    direct = comps.join(
-        r, (comps["doc_sha"] == F.col("__rd")) & (comps["id"] == F.col("__ro")), "left_anti"
-    ).select("doc_sha", F.col("id").alias("old"), F.col("component").alias("new"))
-    return through.unionByName(direct).where(F.col("old") != F.col("new"))
-
-
-def rewrite_edges(
-    edges: DataFrame,
-    clauses: DataFrame,
-    max_hops: int = 3,
-    resolution: DataFrame | None = None,
-    broadcast_threshold: int | None = None,
-    strategy: str = "auto",
-    key_col: str = "doc_sha",
-) -> DataFrame:
-    """Canonicalize edge endpoints via the pre-composed resolution map —
-    one equi-join per endpoint.
-
-    strategy='auto': the map is bounded by *declared aliases*, usually a
-    tiny fraction of the corpus — when measurably small it broadcasts
-    (shuffling the 5M-row edge table twice costs far more than a driver
-    broadcast of the map); above the gate it falls back to a sort-merge
-    join on (doc_sha, key) so a pathological alias census cannot OOM
-    executors.
-
-    strategy='shuffle_hash': zero probe jobs, zero broadcasts — both join
-    keys lead with doc_sha, the edge side is already hash-partitioned by
-    doc_sha (the clause cache contract), so the per-partition hash join
-    co-locates without exchanging the edge table. The 10^12-file default
-    in run_pipeline/bench.
-    """
-    m = resolution_map(clauses, max_hops) if resolution is None else resolution
-    m = m.hint("shuffle_hash") if strategy == "shuffle_hash" else gated_broadcast(m, broadcast_threshold)
-
+    m = resolution.hint("shuffle_hash")
     ms = m.withColumnRenamed("old", "__ks").withColumnRenamed("new", "__vs").withColumnRenamed(key_col, "__ds")
     mo = m.withColumnRenamed("old", "__ko").withColumnRenamed("new", "__vo").withColumnRenamed(key_col, "__do")
-    out = (
+    return (
         edges.join(ms, (F.col(key_col) == F.col("__ds")) & (F.col("subj") == F.col("__ks")), "left")
         .withColumn("subj", F.coalesce(F.col("__vs"), F.col("subj")))
         .drop("__ks", "__vs", "__ds")
@@ -377,7 +192,6 @@ def rewrite_edges(
         .withColumn("obj", F.coalesce(F.col("__vo"), F.col("obj")))
         .drop("__ko", "__vo", "__do")
     )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -419,7 +233,20 @@ def macro_table(clauses: DataFrame, doc_col: str = "doc_sha") -> DataFrame:
 
 
 def _macro_emit(kind, rel, filler, s, x):
-    """Edges a (kind, rel, filler) macro synthesizes from an xref (s → x)."""
+    """Edges a (kind, rel, filler) macro synthesizes from an xref (s → x),
+    per macro kind (O11):
+
+      equivalent        → (s, 'equivalent_to', x)
+      is_a              → (s, 'is_a', x)
+      has-subclass      → (x, 'is_a', s)          [reversed]
+      relationship(rel) → (s, rel, x)
+      genus-differentia(rel, filler)
+                        → (s, 'intersection_of:genus', x)
+                          + (s, 'intersection_of:<rel>', filler)
+      reverse-genus-differentia
+                        → (x, 'intersection_of:genus', s)
+                          + (x, 'intersection_of:<rel>', filler)
+    """
     pair = lambda subj, pred, obj: F.struct(
         subj.alias("s"), pred.alias("p"), obj.alias("o"), F.lit("xref-macro").alias("st")
     )
@@ -448,14 +275,13 @@ def _macro_emit(kind, rel, filler, s, x):
 
 def extract_edges_with_macros(
     clauses: DataFrame,
-    strategy: str = "auto",
     macro_source: DataFrame | None = None,
     key_col: str = "doc_sha",
 ) -> DataFrame:
     """Single-pass triple extraction WITH treat-xrefs macro synthesis.
 
     ``extract_edges(...).unionByName(synthesized)`` loses the clause
-    cache's doc_sha hash partitioning (UnionExec concatenates partitions),
+    cache's document-key hash partitioning (UnionExec concatenates partitions),
     which re-introduces a full edge-table exchange at the final dedup.
     Fusing the macro join INTO the extraction pass — left-join each xref
     row against the per-(doc, idspace) macro dim, then ONE explode emits
@@ -481,13 +307,14 @@ def extract_edges_with_macros(
     # arrays): transform/flatten higher-order functions fall out of
     # whole-stage codegen and cost ~10x per row on the 14M-row hot path.
     # Several macros on one idspace duplicate the matched xref row — each
-    # duplicate re-emits the base edge, which the end-of-chain
-    # dropDuplicates(EDGE_KEY) removes; pure CaseWhen/CreateArray keeps
+    # duplicate re-emits the base edge, which the end-of-chain dedup
+    # removes; pure CaseWhen/CreateArray keeps
     # the whole emission inside codegen.
-    mspace = macro_table(
-        clauses if macro_source is None else macro_source, doc_col=key_col
-    ).withColumnRenamed(key_col, "__d")
-    mspace = mspace.hint("shuffle_hash") if strategy == "shuffle_hash" else gated_broadcast(mspace)
+    mspace = (
+        macro_table(clauses if macro_source is None else macro_source, doc_col=key_col)
+        .withColumnRenamed(key_col, "__d")
+        .hint("shuffle_hash")
+    )
 
     joined = ent.join(
         mspace,
@@ -503,58 +330,3 @@ def extract_edges_with_macros(
         key_col,
     )
     return edges.withColumn("idspace", edge_idspace(F.col("subj")))
-
-
-def apply_xref_macros(edges: DataFrame, clauses: DataFrame, strategy: str = "auto") -> DataFrame:
-    """Synthesize edges from xref rows per header macros (O11).
-
-    xref edges whose object prefix matches a macro idspace in the same doc
-    produce, per macro kind:
-      equivalent        → (subj, 'equivalent_to', xref)
-      is_a              → (subj, 'is_a', xref)
-      has-subclass      → (xref, 'is_a', subj)          [reversed]
-      relationship(rel) → (subj, rel, xref)
-      genus-differentia(rel, filler)
-                        → (subj, 'intersection_of:genus', xref)
-                          + (subj, 'intersection_of:<rel>', filler)
-      reverse-genus-differentia
-                        → (xref, 'intersection_of:genus', subj)
-                          + (xref, 'intersection_of:<rel>', filler)
-
-    Returns the input edges unioned with the synthesized ones. The macro
-    dim is broadcast; the xref scan shuffles nothing.
-    """
-    macros = macro_table(clauses).withColumnRenamed("doc_sha", "__d")
-    macros = macros.hint("shuffle_hash") if strategy == "shuffle_hash" else gated_broadcast(macros)
-    xr = edges.where(F.col("src_tag") == "xref")
-    m = xr.join(
-        macros,
-        (xr["doc_sha"] == macros["__d"]) & (ident_prefix(xr["obj"]) == macros["macro_idspace"]),
-        "inner",
-    ).drop("__d")
-
-    # SINGLE pass: each matched (xref, macro) row emits its 1-2 synthesized
-    # edges through one explode — the 8-branch union formulation re-scanned
-    # the join once per branch (measured 6.7s -> this shape is one stage).
-    # The emission when-chain is _macro_emit, shared with the fused
-    # extraction path, so the two strategies cannot drift.
-    emitted = _macro_emit(
-        F.col("kind"), F.col("rel"), F.col("filler"), F.col("subj"), F.col("obj")
-    )
-    synthesized = (
-        m.select("doc_sha", F.explode(emitted).alias("e"))
-        .select(
-            F.col("e.s").alias("subj"),
-            F.col("e.p").alias("pred"),
-            F.col("e.o").alias("obj"),
-            F.col("e.st").alias("src_tag"),
-            "doc_sha",
-            # re-derive from the SYNTHESIZED subject: reversed kinds
-            # (has-subclass, reverse-genus-differentia) change the edge's
-            # subject prefix, and the raw-edge write path partitions on
-            # this column — inheriting the xref edge's idspace would file
-            # those edges under the wrong partition
-            edge_idspace(F.col("e.s")).alias("idspace"),
-        )
-    )
-    return edges.unionByName(synthesized)

@@ -1,22 +1,26 @@
-"""O10: connected components over equivalence pairs — iterative min-label
-propagation as a DataFrame fixpoint.
+"""O10: connected components — min-representative union-find, plus an
+iterative min-label propagation as a DataFrame fixpoint.
 
 Reference semantics: ``treat-xrefs-as-equivalent: <IDspace>`` turns
 matching xrefs into equivalence statements
 (``/root/reference/src/py/header/clause.rs:1203-1272``); the transitive
-closure of those statements partitions ids into synonym groups.  Spark has
-no built-in CC, so this is the one explicitly-engineered iterative
-algorithm (SURVEY.md §4): alternating large-star/small-star style min-id
-propagation with ``localCheckpoint()`` per round to cut lineage — without
-the checkpoint the plan doubles every iteration and the 10th round
-recompiles a 2^10-deep DAG.
+closure of those statements partitions ids into synonym groups. Equivalence
+is per document, so the canonical chain labels those groups inside its
+fused per-partition kernel (``canonicalize.combined_map_distributed``)
+with :class:`MinUnionFind`. Cross-document graphs (the dedup operators'
+duplicate clusters) go through :func:`connected_components`: Spark has no
+built-in CC, so this is the one explicitly-engineered iterative algorithm
+(SURVEY.md §4): alternating large-star/small-star style min-id propagation
+with ``localCheckpoint()`` per round to cut lineage — without the
+checkpoint the plan doubles every iteration and the 10th round recompiles
+a 2^10-deep DAG.
 
 Convergence: label space shrinks monotonically; iterations are bounded by
 the graph diameter of the equivalence clusters (tiny in ontology practice:
 xref cliques), capped by ``max_iter`` with a logged warning.
 
-Also reused by the dedup operators (MinHash/SimHash bucket → duplicate
-clusters are exactly a CC problem).
+The dedup operators (MinHash/SimHash bucket → duplicate clusters) are
+its caller: duplicate clusters are exactly a CC problem.
 """
 
 from __future__ import annotations
@@ -24,21 +28,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.hints import gated_broadcast, known_rows
-
-# doc_sha is a fixed-width 64-char hex string, so (doc_sha, id) composites
-# are length-splittable without a separator; min over the composite equals
-# (doc_sha, min id) because components never span documents.
-_SHA_LEN = 64
+from fastobo_py_spark.operators.hints import known_rows
 
 
 class MinUnionFind:
     """Local union-find with path compression and MIN-element
     representatives — THE component-labeling invariant every path in this
-    package shares (driver shortcut, partition-wide kernel, and the fused
-    canonicalization kernel all label a component by its smallest member,
-    matching oracle.py). One implementation so the three call sites
-    cannot drift."""
+    package shares (the driver shortcut of :func:`connected_components`
+    and the fused canonicalization kernel both label a component by its
+    smallest member, matching oracle.py). One implementation so the call
+    sites cannot drift."""
 
     def __init__(self) -> None:
         self._parent: dict = {}
@@ -142,7 +141,7 @@ def _distributed_cc(e: DataFrame, max_iter: int) -> DataFrame:
     else:
         # the docstring's promised diagnostic: a diameter > max_iter graph
         # would otherwise return one real component under SEVERAL labels
-        # with no signal, and canonical_rewrite would silently split it
+        # with no signal, and every consumer would silently split it
         import warnings
 
         warnings.warn(
@@ -153,169 +152,3 @@ def _distributed_cc(e: DataFrame, max_iter: int) -> DataFrame:
             stacklevel=2,
         )
     return labels
-
-
-def _per_doc_cc(pairs_with_sha: DataFrame) -> DataFrame:
-    """(doc_sha, src, dst) pairs → (doc_sha, id, component) labels.
-
-    Equivalence scope is PER DOCUMENT (the reference resolves each OboDoc
-    independently, and so do rewrite_edges and oracle.py) — two documents
-    reusing the same local id must not leak equivalences into each other.
-    Vertices are keyed as the fixed-width composite concat(doc_sha, id) so
-    one CC job labels every document at once; the composite min equals the
-    per-document min-id representative because components cannot span
-    doc_sha prefixes.
-    """
-    composite = pairs_with_sha.select(
-        F.concat(F.col("doc_sha"), F.col("src")).alias("src"),
-        F.concat(F.col("doc_sha"), F.col("dst")).alias("dst"),
-    )
-    cc = connected_components(composite)
-    out = cc.select(
-        F.substring("id", 1, _SHA_LEN).alias("doc_sha"),
-        F.expr(f"substring(id, {_SHA_LEN + 1})").alias("id"),
-        F.expr(f"substring(component, {_SHA_LEN + 1})").alias("component"),
-    )
-    n = getattr(cc, "_known_rows", None)
-    return out if n is None else known_rows(out, n)
-
-
-def per_doc_components(pairs_with_sha: DataFrame) -> DataFrame:
-    """(doc_sha, src, dst) → (doc_sha, id, component), fully distributed.
-
-    Equivalence scope is per document, so CC shards perfectly by doc_sha:
-    no driver collect, no iterative min-label job sequence, nothing
-    bounded by one machine. Labels are the per-document min id, identical
-    to :func:`connected_components`' convention and oracle.py's union-find.
-
-    Execution shape: ONE hash exchange on doc_sha (what a
-    ``groupBy(doc_sha).applyInPandas`` would also pay) followed by a
-    partition-wide ``mapInPandas`` union-find over (doc_sha, id) composite
-    vertices — components cannot span documents, so min over composites
-    equals the per-document min id. One Python call labels every document
-    in the partition; the earlier per-document ``applyInPandas`` paid a
-    pandas-construction tax per ~5-row group that dominated the graph
-    stage's scaling profile.
-    """
-    import pandas as pd
-
-    def uf_partition(batches):
-        uf = MinUnionFind()
-        seen: set = set()
-        for pdf in batches:
-            for d, a, b in zip(pdf["doc_sha"], pdf["src"], pdf["dst"]):
-                if a is None or b is None:
-                    continue
-                ka, kb = (d, a), (d, b)
-                seen.add(ka)
-                seen.add(kb)
-                uf.union(ka, kb)
-        if not seen:
-            return
-        out = [(d, i, uf.find((d, i))[1]) for d, i in sorted(seen)]
-        yield pd.DataFrame(out, columns=["doc_sha", "id", "component"])
-
-    n = int(pairs_with_sha.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # the pair builders union/join several branches, so partitioning is
-    # unknown here — the explicit repartition restores doc-locality, the
-    # correctness precondition for the partition-wide kernel
-    return pairs_with_sha.repartition(n, "doc_sha").mapInPandas(
-        uf_partition, "doc_sha string, id string, component string"
-    )
-
-
-def equivalence_components(edges: DataFrame) -> DataFrame:
-    """CC over all 'equivalent_to' edges (incl. macro-synthesized) →
-    (doc_sha, id, component). Feed the output to :func:`canonical_rewrite`."""
-    pairs = edges.where(F.col("pred") == "equivalent_to").select(
-        "doc_sha", F.col("subj").alias("src"), F.col("obj").alias("dst")
-    )
-    return _per_doc_cc(pairs)
-
-
-def equivalence_components_from_clauses(
-    clauses: DataFrame, resolution: DataFrame | None = None, strategy: str = "auto"
-) -> DataFrame:
-    """Equivalence CC computed from the SMALL subset of clause rows —
-    avoids materializing (and double-evaluating) the full edge table just
-    to feed the fixpoint.
-
-    Pairs = explicit ``equivalent_to`` clauses ∪ xrefs matching a
-    ``treat-xrefs-as-equivalent`` macro, both endpoint-rewritten through
-    the alias/replaced_by resolution map so the labels agree with the
-    post-rewrite edge table they will be applied to.
-    """
-    from fastobo_py_spark.operators.canonicalize import macro_table, resolution_map
-    from fastobo_py_spark.operators.idents import ident_prefix
-
-    ent = clauses.where((F.col("frame_type") != "Header") & (F.col("frame_id") != ""))
-    explicit = ent.where((F.col("tag") == "equivalent_to") & F.col("v1").isNotNull()).select(
-        "doc_sha", F.col("frame_id").alias("src"), F.col("v1").alias("dst")
-    )
-    eq_macros = (
-        macro_table(clauses)
-        .where(F.col("kind") == "treat-xrefs-as-equivalent")
-        .select("doc_sha", "macro_idspace")
-        .withColumnRenamed("doc_sha", "__d")
-    )
-    xrefs = ent.where((F.col("tag") == "xref") & F.col("v1").isNotNull()).select(
-        "doc_sha", F.col("frame_id").alias("src"), F.col("v1").alias("dst")
-    )
-    shj = strategy == "shuffle_hash"
-    eq_macros = eq_macros.hint("shuffle_hash") if shj else gated_broadcast(eq_macros)
-    via_macro = xrefs.join(
-        eq_macros,
-        (xrefs["doc_sha"] == eq_macros["__d"]) & (ident_prefix(xrefs["dst"]) == eq_macros["macro_idspace"]),
-    ).select("doc_sha", "src", "dst")
-
-    pairs = explicit.unionByName(via_macro)
-    m = resolution_map(clauses) if resolution is None else resolution
-    m = m.hint("shuffle_hash") if shj else gated_broadcast(m)
-    for col in ("src", "dst"):
-        mm = m.withColumnRenamed("old", f"__k_{col}").withColumnRenamed("new", f"__v_{col}").withColumnRenamed(
-            "doc_sha", f"__d_{col}"
-        )
-        pairs = (
-            pairs.join(mm, (F.col("doc_sha") == F.col(f"__d_{col}")) & (F.col(col) == F.col(f"__k_{col}")), "left")
-            .withColumn(col, F.coalesce(F.col(f"__v_{col}"), F.col(col)))
-            .drop(f"__k_{col}", f"__v_{col}", f"__d_{col}")
-        )
-    if shj:
-        return per_doc_components(pairs)
-    return _per_doc_cc(pairs)
-
-
-def canonical_rewrite(
-    edges: DataFrame,
-    components: DataFrame,
-    broadcast_threshold: int | None = None,
-    strategy: str = "auto",
-) -> DataFrame:
-    """Rewrite edge endpoints to their component representative, joined on
-    (doc_sha, id) — equivalence never crosses documents.
-
-    The component map is usually small vs the edge table (only ids that
-    appear in equivalence statements) — the endpoint joins broadcast when
-    the map is measurably small, else fall back to sort-merge (the
-    100 TB guard: see operators/hints.py).
-    """
-    comp = (
-        components.hint("shuffle_hash")
-        if strategy == "shuffle_hash"
-        else gated_broadcast(components, broadcast_threshold)
-    )
-    comp_s = (
-        comp.withColumnRenamed("id", "__s").withColumnRenamed("component", "__cs").withColumnRenamed("doc_sha", "__ds")
-    )
-    comp_o = (
-        comp.withColumnRenamed("id", "__o").withColumnRenamed("component", "__co").withColumnRenamed("doc_sha", "__do")
-    )
-    out = (
-        edges.join(comp_s, (F.col("doc_sha") == F.col("__ds")) & (F.col("subj") == F.col("__s")), "left")
-        .withColumn("subj", F.coalesce(F.col("__cs"), F.col("subj")))
-        .drop("__s", "__cs", "__ds")
-        .join(comp_o, (F.col("doc_sha") == F.col("__do")) & (F.col("obj") == F.col("__o")), "left")
-        .withColumn("obj", F.coalesce(F.col("__co"), F.col("obj")))
-        .drop("__o", "__co", "__do")
-    )
-    return out

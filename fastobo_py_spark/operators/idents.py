@@ -56,14 +56,6 @@ def ident_prefix(col: Column) -> Column:
     return F.when(ident_kind(col) == "prefixed", F.substring_index(col, ":", 1))
 
 
-def ident_local(col: Column) -> Column:
-    """Local part after the first colon (PrefixedIdent.local)."""
-    return F.when(
-        ident_kind(col) == "prefixed",
-        F.substring(col, F.instr(col, ":") + F.lit(1), F.lit(2147483647)),
-    )
-
-
 def compact_url(col: Column) -> Column:
     """URL → prefixed via the default OBO PURL rule
     (``http://purl.obolibrary.org/obo/CHEBI_27958`` → ``CHEBI:27958``,

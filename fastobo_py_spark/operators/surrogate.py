@@ -28,10 +28,10 @@ under both doc_shas after the decode join) — but it is wrong, so:
   * ``audit_doc_keys`` reports colliding documents as a DataFrame (one
     exchange-free aggregate over the cache; run it once per corpus or
     wire it into a validation batch).
-  * ``strategy="auto"`` keeps the exact string spine end to end — the
-    fallback for corpora where the audit fires, and the twin that
-    ``test_canonical_edges_auto_matches_shuffle_hash`` compares against
-    so the two spines cannot drift.
+  * ``canonical_edges(..., key_col="doc_sha")`` runs the same chain on
+    the exact string spine end to end — the fallback ``run_pipeline`` and
+    the stream take for a batch where the audit fires; the tests pin the
+    two spines to identical output so they cannot drift.
   * At true 10¹²-doc scale the right fix is widening the key (two
     independently-seeded xxhash64 columns = 128 bits, P ≈ 10⁻¹⁵); the
     spine is written against the ``doc_key`` column name, so that swap

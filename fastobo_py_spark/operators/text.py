@@ -20,8 +20,6 @@ DE_STOP = ["der", "die", "das", "und", "ist", "nicht", "ein", "mit"]
 FR_STOP = ["le", "la", "les", "et", "est", "un", "une", "dans"]
 ES_STOP = ["el", "la", "los", "y", "es", "un", "una", "que"]
 
-PUNCT_CLASS = r"[.,;:!?]"
-
 
 def tokens(col: Column) -> Column:
     """Whitespace tokens; empty text → empty array."""
@@ -44,10 +42,6 @@ def _stop_hits_arr(toks: Column, words: list[str]) -> Column:
 
 def _stop_hits(col: Column, words: list[str]) -> Column:
     return _stop_hits_arr(tokens(F.lower(col)), words)
-
-
-def punct_count(col: Column) -> Column:
-    return F.length(col) - F.length(F.regexp_replace(col, PUNCT_CLASS, ""))
 
 
 def alpha_ratio(col: Column) -> Column:
@@ -75,30 +69,6 @@ def quality_score(col: Column) -> Column:
 
 def quality_ppm(col: Column) -> Column:
     return F.floor(quality_score(col) * 1_000_000).cast("long")
-
-
-def lang_id(col: Column) -> Column:
-    """Stopword-profile language guess with deterministic tie-break.
-
-    Non-ASCII-heavy text → 'zh'; otherwise argmax of per-language stopword
-    hits in fixed priority order (en, de, fr, es), 'und' when all zero.
-    """
-    non_ascii = F.length(F.regexp_replace(col, "[\\x00-\\x7F]", ""))
-    en, de, fr, es = (
-        _stop_hits(col, EN_STOP),
-        _stop_hits(col, DE_STOP),
-        _stop_hits(col, FR_STOP),
-        _stop_hits(col, ES_STOP),
-    )
-    best = F.greatest(en, de, fr, es)
-    return (
-        F.when(non_ascii > F.length(col) * 0.3, F.lit("zh"))
-        .when(best == 0, F.lit("und"))
-        .when(en == best, F.lit("en"))
-        .when(de == best, F.lit("de"))
-        .when(fr == best, F.lit("fr"))
-        .otherwise(F.lit("es"))
-    )
 
 
 # BPE-ish pre-tokenizer classes (GPT-2-style, minus lookaheads so the
@@ -151,13 +121,6 @@ def ngram_repetition_ppm_arr(ntoks: Column, n: int = 3) -> Column:
     return F.when(total > 0, F.floor((1.0 - distinct / total) * 1_000_000).cast("long")).otherwise(
         F.lit(0).cast("long")
     )
-
-
-def ngram_repetition_ppm(col: Column, n: int = 3) -> Column:
-    """Gopher-style repetition score: 1 − distinct/total word n-grams,
-    in ppm (0 = no repetition). High values flag boilerplate/spam docs
-    that near-dup passes miss because the repetition is INTERNAL."""
-    return ngram_repetition_ppm_arr(tokens(normalize_text(col)), n)
 
 
 def normalize_text(col: Column) -> Column:

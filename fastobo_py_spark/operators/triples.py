@@ -78,8 +78,3 @@ def extract_edges(clauses: DataFrame, include_xrefs: bool = True) -> DataFrame:
         "doc_sha",
     )
     return edges.withColumn("idspace", edge_idspace(F.col("subj")))
-
-
-def edge_counts_by_pred(edges: DataFrame) -> DataFrame:
-    """Metrics view: edges per predicate (partial-agg friendly)."""
-    return edges.groupBy("pred").agg(F.count("*").alias("n_edges"))

@@ -104,8 +104,9 @@ class _UnionFind:
 def build_edges(corpus_rows, canonicalize=True, apply_macros=True):
     """corpus rows → sorted list of (subj, pred, obj, src_tag, doc_sha).
 
-    Mirrors extract_edges + apply_xref_macros + rewrite_edges +
-    equivalence CC + dropDuplicates, implemented sequentially.
+    Mirrors ``plans.pipeline.canonical_edges`` (extraction, treat-xrefs
+    macros, alias/obsolete rewrite, equivalence CC, per-doc dedup),
+    implemented sequentially edge by edge.
     """
     clauses, _ = parse_rows(corpus_rows)
     by_doc = defaultdict(list)

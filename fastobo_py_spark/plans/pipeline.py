@@ -54,53 +54,46 @@ EDGE_KEY = ["subj", "pred", "obj", "doc_sha"]
 
 def canonical_edges(
     clauses: DataFrame,
-    strategy: str = "shuffle_hash",
     persisted_out: list | None = None,
-    _spine_key: str | None = None,
+    key_col: str = "doc_key",
 ) -> DataFrame:
-    """Clause rows → canonicalized, per-doc-deduped edge table.
+    """Clause rows → canonicalized, per-doc-deduped edge table — the one
+    composition of alias/obsolete resolution, equivalence components and
+    treat-xrefs macros in the package.
 
-    strategy='shuffle_hash' (the 10^12-file default): every dimension —
-    macro table, resolution map, component labels — flows as a
-    doc-key-co-partitioned shuffle-hash join against the already-
-    partitioned clause cache, and the resolution/CC computations shard
-    per document inside one partition-wide mapInPandas kernel. ZERO
-    driver collects, ZERO broadcast
-    builds, so the job's serial fraction is two job submissions no matter
-    the corpus size. strategy='auto' keeps the scale-adaptive driver
-    shortcuts + gated broadcasts (fastest for interactive small corpora).
+    Every dimension — macro table and the fused resolution/component map —
+    flows as a document-key co-partitioned shuffle-hash join against the
+    already-partitioned clause cache, and the resolution/CC computations
+    shard per document inside one partition-wide mapInPandas kernel
+    (``canonicalize.combined_map_distributed``). ZERO driver collects,
+    ZERO broadcast builds, so the job's serial fraction is two job
+    submissions no matter the corpus size. Every step is per document,
+    so any subset of documents canonicalizes exactly as it would inside
+    a larger corpus.
 
-    ``persisted_out``: internal caches (dims / resolution map / component
-    labels) are appended here so the caller can ``unpersist()`` them once
-    the edge table is materialized. Long-lived sessions — above all the
-    streaming path, which enters once per micro-batch — MUST pass a list
-    and clean up, or the CacheManager accumulates three relations per call.
+    ``persisted_out``: internal caches (dims / canonicalization map) are
+    appended here so the caller can ``unpersist()`` them once the edge
+    table is materialized. Long-lived sessions — above all the streaming
+    path, which enters once per micro-batch — MUST pass a list and clean
+    up, or the CacheManager accumulates two relations per call.
 
-    Spine key: the shuffle_hash path runs on the BIGINT surrogate
-    ``doc_key = xxhash64(doc_sha)`` (operators/surrogate.py) — the 64-hex
+    ``key_col`` is the spine: the BIGINT surrogate ``doc_key =
+    xxhash64(doc_sha)`` (operators/surrogate.py, the default) — the 64-hex
     doc_sha is pruned off every join/explode/aggregate row and restored
-    by one co-partitioned dictionary join at the end (collision math and
-    the audit helper live in the surrogate module; ``strategy='auto'``
-    is the exact string-spine twin). Callers should hash-partition the
-    clause cache on ``doc_key``; a cache without the column is healed
-    here (at the cost of the joins re-exchanging, same as any
-    mispartitioned input).
+    by one co-partitioned dictionary join at the end — or the exact
+    string ``doc_sha``, the fallback for a corpus whose ``doc_key`` audit
+    reports a collision. Callers should hash-partition the clause cache
+    on the spine column; a cache without ``doc_key`` is healed here (at
+    the cost of the joins re-exchanging, same as any mispartitioned
+    input).
     """
     from fastobo_py_spark.operators.canonicalize import (
         combined_map_distributed,
         extract_edges_with_macros,
-        fuse_resolution_components,
-        resolution_map,
     )
-    from fastobo_py_spark.operators.components import equivalence_components_from_clauses
     from fastobo_py_spark.operators.surrogate import with_doc_key
 
-    shj = strategy == "shuffle_hash"
-    # _spine_key: measurement override (tools/surrogate_ab.py) pinning the
-    # shuffle_hash chain to the string spine ("doc_sha") so the surrogate's
-    # effect can be isolated in one session; production callers leave it None
-    key = _spine_key or ("doc_key" if shj else "doc_sha")
-    if shj and key == "doc_key":
+    if key_col == "doc_key":
         clauses = with_doc_key(clauses)
     # The dim builders (macro table, alias/replacement map, equivalence
     # pairs) each rescan their input; against the full clause cache that
@@ -114,37 +107,24 @@ def canonical_edges(
     ).persist()
     if persisted_out is not None:
         persisted_out.append(dims)
-    if shj:
-        # eager fill: the res/comps/macro branches otherwise race to
-        # compute the same cache partitions and serialize on block locks
-        # (measured: 100+ task-seconds of cores held while blocked)
-        dims.count()
+    # eager fill: the map/macro branches otherwise race to compute the
+    # same cache partitions and serialize on block locks (measured: 100+
+    # task-seconds of cores held while blocked)
+    dims.count()
 
-    if shj:
-        # resolution ∘ components in ONE exchange + ONE partition-wide
-        # kernel (combined_map_distributed): the compositional pipeline's
-        # ~10 serial stage boundaries over kilobyte dim tables were the
-        # measured constant term dominating the graph stage's N→4N loss.
-        # The edge table then sees two left joins (subj, obj), not four.
-        combined = combined_map_distributed(dims, key_col=key).persist()
-        if persisted_out is not None:
-            persisted_out.append(combined)
-    else:
-        res = resolution_map(dims)
-        comps = equivalence_components_from_clauses(dims, resolution=res, strategy=strategy)
-        combined = fuse_resolution_components(res, comps)
+    # resolution ∘ components in ONE exchange + ONE partition-wide kernel:
+    # a compositional pipeline's ~10 serial stage boundaries over kilobyte
+    # dim tables were the measured constant term dominating the graph
+    # stage's N→4N loss. The edge table then sees two left joins (subj,
+    # obj), not four.
+    combined = combined_map_distributed(dims, key_col=key_col).persist()
+    if persisted_out is not None:
+        persisted_out.append(combined)
     # macro synthesis is FUSED into the extraction pass (no union) so the
     # clause cache's doc-key partitioning survives to the final dedup
-    e = extract_edges_with_macros(clauses, strategy=strategy, macro_source=dims, key_col=key)
-    e = rewrite_edges(e, clauses, resolution=combined, strategy=strategy, key_col=key)
-    if not shj or key == "doc_sha":
-        return _dedup_edges(e)
-    # decode the surrogate back to doc_sha: the dictionary is one row per
-    # document (exchange-free aggregate over the already-partitioned
-    # cache), and the edge side keeps its doc_key partitioning through
-    # the dedup aggregate, so this final join exchanges only the dict
-    doc_dict = clauses.select("doc_key", "doc_sha").distinct()
-    return _dedup_edges(e, key_col=key, doc_dict=doc_dict)
+    e = extract_edges_with_macros(clauses, macro_source=dims, key_col=key_col)
+    e = rewrite_edges(e, combined, key_col)
+    return _dedup_edges(e, clauses, key_col)
 
 
 # src_tag is a CLOSED 8-value set (triples._SIMPLE_EDGE_TAGS +
@@ -157,7 +137,7 @@ _SRC_TAG_ORDER = (
 )
 
 
-def _dedup_edges(e: DataFrame, key_col: str = "doc_sha", doc_dict: DataFrame | None = None) -> DataFrame:
+def _dedup_edges(e: DataFrame, clauses: DataFrame, key_col: str) -> DataFrame:
     """Per-doc edge dedup as a HashAggregate.
 
     ``dropDuplicates(EDGE_KEY)`` carries the src_tag/idspace STRINGS in
@@ -171,8 +151,9 @@ def _dedup_edges(e: DataFrame, key_col: str = "doc_sha", doc_dict: DataFrame | N
     changed the endpoint.
 
     On the surrogate spine (``key_col='doc_key'``) the aggregate hashes a
-    BIGINT instead of the 64-hex doc_sha, and ``doc_dict`` (doc_key →
-    doc_sha, one row per document) restores the output column with a
+    BIGINT instead of the 64-hex doc_sha, and a doc_key → doc_sha
+    dictionary (one row per document, an exchange-free aggregate over the
+    doc_key-partitioned ``clauses``) restores the output column with a
     shuffle-hash join that exchanges only the dict — the edge side still
     carries the aggregate's doc_key partitioning.
     """
@@ -187,7 +168,8 @@ def _dedup_edges(e: DataFrame, key_col: str = "doc_sha", doc_dict: DataFrame | N
         .groupBy("subj", "pred", "obj", key_col)
         .agg(F.min("__tc").alias("__tc"))
     )
-    if doc_dict is not None:
+    if key_col == "doc_key":
+        doc_dict = clauses.select("doc_key", "doc_sha").distinct()
         deduped = deduped.join(doc_dict.hint("shuffle_hash"), key_col, "inner")
     return deduped.select(
         "subj", "pred", "obj", dec.alias("src_tag"), "doc_sha",
@@ -464,40 +446,24 @@ def run_pipeline(
     # surrogate-key audit (ADVICE r5): a 64-bit doc_key collision would
     # silently merge two documents' edge scopes. The audit is one
     # exchange-free aggregate over the just-persisted cache; when it
-    # fires, this batch falls back to the exact string spine
-    # (strategy='auto' — the oracle-pinned twin), and the count is
-    # surfaced in the metrics dict either way.
+    # fires, this batch runs on the exact doc_sha spine instead (its
+    # joins then re-exchange — the documented cost of a corpus where the
+    # surrogate is not injective), and the count is surfaced in the
+    # metrics dict either way.
     n_key_collisions = _surrogate.audit_doc_keys(clauses).count()
-    spine_strategy = "shuffle_hash" if n_key_collisions == 0 else "auto"
+    spine = "doc_key" if n_key_collisions == 0 else "doc_sha"
 
     caches: list[DataFrame] = []
     if canonicalize:
-        edges = canonical_edges(clauses, strategy=spine_strategy, persisted_out=caches)
+        edges = canonical_edges(clauses, persisted_out=caches, key_col=spine)
     else:
-        # same spine discipline as the canonical path: the cache is
-        # doc_key-partitioned, so the dedup aggregate must group on
-        # doc_key (a dropDuplicates on doc_sha would re-exchange the
-        # whole edge table — the column isn't in the cache partitioning
-        # anymore) and doc_sha is restored by the dictionary join
         from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
 
         macro_dims = clauses.where(
             (F.col("frame_type") == "Header") | (F.col("tag") == "xref")
         )
-        # audit fallback mirrors the canonical path: on a collision the
-        # extraction and dedup key on the exact doc_sha (the joins then
-        # re-exchange — the documented cost of a corpus where the
-        # surrogate is not injective)
-        raw_key = "doc_key" if n_key_collisions == 0 else "doc_sha"
-        e = extract_edges_with_macros(
-            clauses, strategy="shuffle_hash", macro_source=macro_dims, key_col=raw_key
-        )
-        if raw_key == "doc_key":
-            edges = _dedup_edges(
-                e, key_col="doc_key", doc_dict=clauses.select("doc_key", "doc_sha").distinct()
-            )
-        else:
-            edges = _dedup_edges(e)
+        e = extract_edges_with_macros(clauses, macro_source=macro_dims, key_col=spine)
+        edges = _dedup_edges(e, clauses, spine)
     # the write_graph layout; its writes are issued from this function so
     # a tracer that attributes Spark actions to their calling function
     # (perfbench/trace.py) keeps charging them to this batch's layers
@@ -546,7 +512,7 @@ def run_pipeline(
         "edges": obs["edges"].get["n"],
         "nodes": obs["nodes"].get["n"],
         "doc_key_collisions": n_key_collisions,
-        "spine_strategy": spine_strategy if canonicalize else raw_key,
+        "spine_strategy": spine,
         "manifest_compaction": compaction,
         "snapshot_id": snapshot["snapshot_id"],
         "snapshot_sequence": snapshot["sequence"],

@@ -41,24 +41,20 @@ def sql_obo_edges_by_pred() -> str:
 
 def q_obo_canonical_edges_pato(spark: SparkSession, sf: str) -> DataFrame:
     """Fully canonicalized triples for the pato-like docs (exercises the
-    equivalence-CC fixpoint + URL compaction targets)."""
-    from fastobo_py_spark.operators.canonicalize import apply_xref_macros, rewrite_edges
-    from fastobo_py_spark.operators.components import canonical_rewrite, equivalence_components
+    equivalence-CC labels + URL compaction targets). The canonical chain
+    is per document, so filtering to the pato docs first yields exactly
+    their edges in the full corpus."""
+    from fastobo_py_spark.plans.pipeline import canonical_edges
 
     cl = _clauses(spark).where(F.col("path").startswith("ontologies/pato"))
-    from fastobo_py_spark.operators.triples import extract_edges
-
-    e = extract_edges(cl)
-    e = apply_xref_macros(e, cl)
-    e = rewrite_edges(e, cl)
-    comps = equivalence_components(e)
-    e = canonical_rewrite(e, comps)
-    return (
-        e.dropDuplicates(["subj", "pred", "obj", "doc_sha"])
-        .select("subj", "pred", "obj")
-        .dropDuplicates()
-        .orderBy("subj", "pred", "obj")
-    )
+    caches: list = []
+    e = canonical_edges(cl, persisted_out=caches)
+    out = e.select("subj", "pred", "obj").dropDuplicates().orderBy("subj", "pred", "obj")
+    # the chain persists its dims; materialize, then release them
+    rows = out.collect()
+    for c in caches:
+        c.unpersist()
+    return spark.createDataFrame(rows, out.schema)
 
 
 def sql_obo_canonical_edges_pato() -> str:

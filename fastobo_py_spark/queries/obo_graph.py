@@ -593,7 +593,7 @@ def q_obo_ancestors(spark: SparkSession, sf: str) -> DataFrame:
     cl = _clauses(spark)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     caches: list = []
-    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), strategy="shuffle_hash", persisted_out=caches)
+    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
     anc = transitive_ancestors(e)
     out = (
         anc.select(edge_idspace(F.col("id")).alias("idspace"), "id")
@@ -659,7 +659,7 @@ def q_obo_ancestors_seeded(spark: SparkSession, sf: str) -> DataFrame:
     cl = _clauses(spark)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     caches: list = []
-    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), strategy="shuffle_hash", persisted_out=caches)
+    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
     seeds = (
         e.where(F.col("pred") == "is_a")
         .select(F.col("subj").alias("id"))
@@ -743,7 +743,7 @@ def q_obo_descendants_seeded(spark: SparkSession, sf: str) -> DataFrame:
     cl = _clauses(spark)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     caches: list = []
-    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), strategy="shuffle_hash", persisted_out=caches)
+    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
     seeds = (
         e.where(F.col("pred") == "is_a")
         .select(F.col("obj").alias("id"))

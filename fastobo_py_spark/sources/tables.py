@@ -38,7 +38,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _TABLE_CACHE.pop(next(iter(_TABLE_CACHE)))
         _TABLE_CACHE[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -54,12 +54,10 @@ def _process_batch(out_dir: str, n_salts: int):
             caches.append(clauses)
             # surrogate-key audit per micro-batch (ADVICE r5): one
             # exchange-free aggregate over the cached batch; a colliding
-            # batch falls back to the exact string spine so its output
+            # batch falls back to the exact doc_sha spine so its output
             # is correct, matching run_pipeline's policy
-            strategy = (
-                "shuffle_hash" if _surrogate.audit_doc_keys(clauses).count() == 0 else "auto"
-            )
-            edges = canonical_edges(clauses, strategy=strategy, persisted_out=caches)
+            spine = "doc_key" if _surrogate.audit_doc_keys(clauses).count() == 0 else "doc_sha"
+            edges = canonical_edges(clauses, persisted_out=caches, key_col=spine)
             write_graph(build_nodes(clauses), edges, out_dir, n_salts)
             # same snapshot visibility contract as the batch pipeline:
             # one atomic commit per micro-batch. A checkpoint-REPLAYED

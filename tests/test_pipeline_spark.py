@@ -11,12 +11,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from fastobo_py_spark import oracle
-from fastobo_py_spark.operators.canonicalize import apply_xref_macros, rewrite_edges
-from fastobo_py_spark.operators.components import (
-    canonical_rewrite,
-    connected_components,
-    equivalence_components,
-)
+from fastobo_py_spark.operators.components import connected_components
 from fastobo_py_spark.operators.materialize import build_nodes, top_k_per_idspace
 from fastobo_py_spark.operators.parse import frame_counts, parse_corpus, split_parsed
 from fastobo_py_spark.operators.triples import extract_edges
@@ -57,18 +52,6 @@ def test_edges_raw_vs_oracle(spark, clauses, corpus_rows):
         for r in extract_edges(clauses).dropDuplicates(["subj", "pred", "obj", "doc_sha"]).collect()
     }
     want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=False, apply_macros=False))
-    p, r = oracle.precision_recall(got, want)
-    assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
-
-
-def test_edges_canonical_vs_oracle(spark, clauses, corpus_rows):
-    e = extract_edges(clauses)
-    e = apply_xref_macros(e, clauses)
-    e = rewrite_edges(e, clauses)
-    comps = equivalence_components(e)
-    e = canonical_rewrite(e, comps).dropDuplicates(["subj", "pred", "obj", "doc_sha"])
-    got = {(r["subj"], r["pred"], r["obj"], r["doc_sha"]) for r in e.collect()}
-    want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=True))
     p, r = oracle.precision_recall(got, want)
     assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
 
@@ -140,8 +123,9 @@ def test_pipeline_resume(spark, corpus):
 def test_pipeline_doc_key_audit_fallback(spark, corpus, monkeypatch):
     """run_pipeline audits the surrogate spine every batch (ADVICE r5):
     a clean corpus records zero collisions and keeps the doc_key spine;
-    a (forced) collision report flips the batch to the exact string
-    spine, with BIT-IDENTICAL edge output either way."""
+    a (forced) collision report flips the batch to the exact doc_sha
+    spine, with BIT-IDENTICAL edge output either way. ``spine_strategy``
+    names the spine the batch ran on."""
     from fastobo_py_spark.operators import surrogate
     from fastobo_py_spark.plans.pipeline import run_pipeline
 
@@ -150,7 +134,7 @@ def test_pipeline_doc_key_audit_fallback(spark, corpus, monkeypatch):
     try:
         m1 = run_pipeline(spark, corpus, out1)
         assert m1["doc_key_collisions"] == 0
-        assert m1["spine_strategy"] == "shuffle_hash"
+        assert m1["spine_strategy"] == "doc_key"
 
         def fake_audit(clauses):
             return clauses.sparkSession.createDataFrame(
@@ -161,7 +145,7 @@ def test_pipeline_doc_key_audit_fallback(spark, corpus, monkeypatch):
         monkeypatch.setattr(surrogate, "audit_doc_keys", fake_audit)
         m2 = run_pipeline(spark, corpus, out2)
         assert m2["doc_key_collisions"] == 1
-        assert m2["spine_strategy"] == "auto"
+        assert m2["spine_strategy"] == "doc_sha"
         cols = ["subj", "pred", "obj", "src_tag", "doc_sha"]
         e1 = {tuple(r) for r in spark.read.parquet(out1 + "/edges").select(*cols).collect()}
         e2 = {tuple(r) for r in spark.read.parquet(out2 + "/edges").select(*cols).collect()}
@@ -197,52 +181,58 @@ def test_spark_serializer_roundtrip(spark, clauses, corpus_rows):
     assert checked == 40
 
 
+def _obo_corpus(spark, docs: dict):
+    """{path: OBO text} → (corpus rows, corpus DataFrame, {path: doc_sha})."""
+    import hashlib
+
+    from fastobo_py_spark.schema import CORPUS_SCHEMA
+
+    rows = [
+        {"repo": "r", "path": path, "commit": "c1", "lang": "OBO", "content": text}
+        for path, text in docs.items()
+    ]
+    df = spark.createDataFrame(
+        [tuple(r[c.name] for c in CORPUS_SCHEMA) for r in rows], schema=CORPUS_SCHEMA
+    )
+    shas = {path: hashlib.sha256(text.encode()).hexdigest() for path, text in docs.items()}
+    return rows, df, shas
+
+
 def test_equivalence_scope_is_per_document(spark):
     """Two documents reusing the same local ids must not leak equivalences
     into each other (reference: each OboDoc resolves independently)."""
-    sha_a, sha_b = "a" * 64, "b" * 64
-    edges = spark.createDataFrame(
-        [
-            # doc A declares X:1 == Y:9; doc B merely *uses* X:1
-            (sha_a, "X:1", "equivalent_to", "Y:9", "equivalent_to", "X"),
-            (sha_a, "X:1", "is_a", "Z:5", "is_a", "X"),
-            (sha_b, "X:1", "is_a", "Z:5", "is_a", "X"),
-        ],
-        "doc_sha string, subj string, pred string, obj string, src_tag string, idspace string",
-    )
-    comps = equivalence_components(edges)
-    got = {(r["doc_sha"], r["subj"]) for r in canonical_rewrite(edges, comps).collect()}
-    # doc A's X:1 rewrites to the component min (X:1 < Y:9 so stays X:1);
-    # the real check: doc B's rows are untouched even when A merges ids
-    assert (sha_b, "X:1") in got
-    comp_rows = {(r["doc_sha"], r["id"]): r["component"] for r in comps.collect()}
-    assert set(k[0] for k in comp_rows) == {sha_a}  # only doc A has labels
+    from fastobo_py_spark.plans.pipeline import canonical_edges
 
-
-def test_rewrite_without_broadcast_matches(spark, clauses, corpus_rows):
-    """Force the gated broadcast OFF (threshold 0 → sort-merge fallback):
-    results must be identical to the broadcast plan."""
-    e = extract_edges(clauses)
-    e = apply_xref_macros(e, clauses)
-    smj = rewrite_edges(e, clauses, broadcast_threshold=0)
-    comps = equivalence_components(smj)
-    smj = canonical_rewrite(smj, comps, broadcast_threshold=0).dropDuplicates(
-        ["subj", "pred", "obj", "doc_sha"]
-    )
-    got = {(r["subj"], r["pred"], r["obj"], r["doc_sha"]) for r in smj.collect()}
-    want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=True))
-    p, r = oracle.precision_recall(got, want)
-    assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
+    # doc A declares X:1 == W:0; doc B merely *uses* X:1
+    rows, corpus, shas = _obo_corpus(spark, {
+        "a.obo": "format-version: 1.2\n\n[Term]\nid: X:1\nequivalent_to: W:0\nis_a: Z:5\n",
+        "b.obo": "format-version: 1.2\n\n[Term]\nid: X:1\nis_a: Z:5\n",
+    })
+    clauses, _ = split_parsed(parse_corpus(corpus))
+    got = {
+        (r["doc_sha"], r["subj"], r["pred"], r["obj"])
+        for r in canonical_edges(clauses).collect()
+    }
+    sha_a, sha_b = shas["a.obo"], shas["b.obo"]
+    # doc A's X:1 rewrites to its component min W:0 ...
+    assert {(s, p, o) for d, s, p, o in got if d == sha_a} == {
+        ("W:0", "equivalent_to", "W:0"), ("W:0", "is_a", "Z:5"),
+    }
+    # ... while doc B's rows are untouched even though A merged the id
+    assert {(s, p, o) for d, s, p, o in got if d == sha_b} == {("X:1", "is_a", "Z:5")}
+    want = {(sha, s, p, o) for s, p, o, sha in oracle.edge_key_set(oracle.build_edges(rows))}
+    assert got == want
 
 
 def test_canonical_edges_shuffle_hash_vs_oracle(spark, clauses, corpus_rows):
-    """The fully-distributed path (per-doc applyInPandas resolution + CC,
-    shuffle-hash dimension joins, no broadcasts, no driver collects) must
-    produce the exact oracle edge set."""
+    """The fully-distributed chain (one partition-wide resolution/CC
+    kernel, shuffle-hash dimension joins, no broadcasts, no driver
+    collects) must produce the exact oracle edge set — here on a cache
+    partitioned by doc_sha, which the chain heals onto the doc_key spine."""
     from fastobo_py_spark.plans.pipeline import canonical_edges
 
     cl = clauses.repartition(4, "doc_sha")
-    e = canonical_edges(cl, strategy="shuffle_hash")
+    e = canonical_edges(cl)
     got = {(r["subj"], r["pred"], r["obj"], r["doc_sha"]) for r in e.collect()}
     want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=True))
     p, r = oracle.precision_recall(got, want)
@@ -302,24 +292,27 @@ def test_pipeline_resume_with_gzip_rows(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_canonical_edges_auto_matches_shuffle_hash(spark, clauses, corpus_rows):
-    """Both join strategies of the shared flow produce the oracle set —
-    the exact-string spine (auto) and the BIGINT doc_key surrogate spine
-    (shuffle_hash) cannot drift from each other or from the oracle."""
+def test_canonical_edges_doc_key_and_doc_sha_spines_agree(spark, clauses, corpus_rows):
+    """The BIGINT doc_key surrogate spine (production) and the exact
+    doc_sha spine (the audit-collision fallback) give identical edge
+    rows — src_tag and idspace included — and both match the oracle."""
+    from fastobo_py_spark.operators.surrogate import with_doc_key
     from fastobo_py_spark.plans.pipeline import canonical_edges
 
-    cl = clauses.repartition(4, "doc_sha")
-    got_auto = {
-        (r["subj"], r["pred"], r["obj"], r["doc_sha"])
-        for r in canonical_edges(cl, strategy="auto").collect()
-    }
-    got_shj = {
-        (r["subj"], r["pred"], r["obj"], r["doc_sha"])
-        for r in canonical_edges(cl, strategy="shuffle_hash").collect()
-    }
-    assert got_auto == got_shj, "string spine and surrogate spine diverged"
+    def run(cache, key):
+        cache = cache.persist()
+        caches: list = []
+        rows = {tuple(r) for r in canonical_edges(cache, persisted_out=caches, key_col=key).collect()}
+        for c in caches + [cache]:
+            c.unpersist()
+        return rows
+
+    by_key = run(with_doc_key(clauses).repartition(4, "doc_key"), "doc_key")
+    by_sha = run(clauses.repartition(4, "doc_sha"), "doc_sha")
+    assert by_key == by_sha and by_key, "doc_sha spine and doc_key spine diverged"
+    got = {(r[0], r[1], r[2], r[4]) for r in by_key}
     want = oracle.edge_key_set(oracle.build_edges(corpus_rows, canonicalize=True))
-    p, r = oracle.precision_recall(got_auto, want)
+    p, r = oracle.precision_recall(got, want)
     assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
 
 
@@ -370,13 +363,16 @@ def test_canonical_edges_larger_corpus_vs_oracle(spark):
     from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
 
     cl, _ = split_parsed(parse_corpus(corpus))
-    cl = cl.repartition(8, "doc_sha")
-    e = canonical_edges(cl, strategy="shuffle_hash")
+    cl = cl.repartition(8, "doc_sha").persist()
+    e = canonical_edges(cl)
     got = {(r["subj"], r["pred"], r["obj"], r["doc_sha"]) for r in e.collect()}
     want = oracle.edge_key_set(oracle.build_edges(rows, canonicalize=True))
     p, r = oracle.precision_recall(got, want)
     assert (p, r) == (1.0, 1.0), f"precision={p} recall={r}"
     assert len(got) > 8000  # genuinely larger than the default corpus
+    # the canonicalization map itself equals the pure-Python statement
+    assert _kernel_map_rows(cl) == _oracle_map_rows(rows)
+    cl.unpersist()
 
 
 def test_pipeline_resume_with_broadcast_gate_forced_shut(spark, corpus, monkeypatch):
@@ -403,33 +399,49 @@ def test_pipeline_resume_with_broadcast_gate_forced_shut(spark, corpus, monkeypa
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_fused_rewrite_map_equals_sequential(spark):
-    """fuse_resolution_components must equal resolution-then-components
-    applied sequentially, on the adversarial shapes: alias into an
-    equivalence member, component id itself aliased, ids known to only
-    one map, resolution targets outside the components."""
-    from fastobo_py_spark.operators.canonicalize import fuse_resolution_components
-
-    d = "D" * 64
-    res_rows = [
-        (d, "A:1", "A:2"),   # alias whose target is in a component
-        (d, "B:1", "B:2"),   # alias whose target is NOT in any component
-        (d, "C:1", "C:0"),   # alias target is a component representative
-    ]
-    comps_rows = [
-        (d, "A:2", "A:0"), (d, "A:0", "A:0"),   # A:2 ~ A:0 (rep A:0)
-        (d, "C:0", "C:0"), (d, "C:9", "C:0"),   # C cluster incl. identity rep
-        (d, "E:5", "E:2"), (d, "E:2", "E:2"),   # component no alias touches
-    ]
-    res = spark.createDataFrame(res_rows, "doc_sha string, old string, new string")
-    comps = spark.createDataFrame(comps_rows, "doc_sha string, id string, component string")
-    fused = {
-        (r["old"]): r["new"]
-        for r in fuse_resolution_components(res, comps).where(F.col("doc_sha") == d).collect()
+def _oracle_map_rows(corpus_rows) -> set:
+    """oracle.build_canonical_maps flattened to (doc_sha, old, new) rows."""
+    return {
+        (sha, old, new)
+        for sha, m in oracle.build_canonical_maps(corpus_rows).items()
+        for old, new in m.items()
     }
 
-    res_d = {o: n for _, o, n in res_rows}
-    comp_d = {i: c for _, i, c in comps_rows}
+
+def _kernel_map_rows(dims, key_col: str = "doc_sha") -> set:
+    from fastobo_py_spark.operators.canonicalize import combined_map_distributed
+
+    return {tuple(r) for r in combined_map_distributed(dims, key_col=key_col).collect()}
+
+
+def test_fused_rewrite_map_equals_sequential(spark):
+    """The fused kernel map must equal resolution-then-components applied
+    sequentially, on the adversarial shapes: alias into an equivalence
+    member, an aliased would-be representative, an alias onto a
+    representative, a redirect into a component, and ids known to only
+    one map (or to neither)."""
+    text = "format-version: 1.2\n" + "".join(
+        f"\n[Term]\nid: {fid}\n" + "".join(f"{tag}: {v}\n" for tag, v in frame)
+        for fid, frame in [
+            ("A:2", [("alt_id", "A:1"), ("equivalent_to", "A:0")]),  # alias into a component
+            ("B:2", [("alt_id", "B:1")]),                            # alias, no component
+            ("C:0", [("alt_id", "C:1"), ("equivalent_to", "C:9")]),  # alias onto the rep
+            ("E:5", [("equivalent_to", "E:2")]),                     # component, no alias
+            ("G:7", [("alt_id", "G:0")]),                            # G:0 would be the rep ...
+            ("G:3", [("equivalent_to", "G:0")]),                     # ... but is aliased away
+            ("D:1", [("is_obsolete", "true"), ("replaced_by", "D:2")]),  # redirect into a component
+            ("D:2", [("equivalent_to", "D:0")]),
+        ]
+    )
+    rows, corpus, shas = _obo_corpus(spark, {"adv.obo": text})
+    clauses, _ = split_parsed(parse_corpus(corpus))
+    fused = {old: new for _, old, new in _kernel_map_rows(clauses)}
+
+    res_d = {"A:1": "A:2", "B:1": "B:2", "C:1": "C:0", "G:0": "G:7", "D:1": "D:2"}
+    comp_d = {  # labels over the res-rewritten pairs, min member wins
+        "A:2": "A:0", "A:0": "A:0", "C:0": "C:0", "C:9": "C:0", "E:5": "E:2",
+        "E:2": "E:2", "G:3": "G:3", "G:7": "G:3", "D:2": "D:0", "D:0": "D:0",
+    }
 
     def sequential(x):
         y = res_d.get(x, x)
@@ -437,21 +449,19 @@ def test_fused_rewrite_map_equals_sequential(spark):
 
     every_id = set(res_d) | set(res_d.values()) | set(comp_d) | {"Z:77"}
     for x in sorted(every_id):
-        want = sequential(x)
-        got = fused.get(x, x)
-        assert got == want, f"{x}: fused={got} sequential={want}"
+        assert fused.get(x, x) == sequential(x), f"{x}: fused={fused.get(x, x)} sequential={sequential(x)}"
     # identity entries must not appear in the map
     assert all(k != v for k, v in fused.items())
+    assert {(shas["adv.obo"], o, n) for o, n in fused.items()} == _oracle_map_rows(rows)
 
 
 def test_per_doc_components_random_graphs_vs_union_find(spark):
-    """Partition-wide distributed CC vs an independent python union-find
-    on 60 random per-document equivalence graphs (seeded): labels must
-    match exactly, including per-document scoping of identical local ids
-    reused across documents."""
+    """The kernel's per-document union-find vs an independent python
+    union-find on 60 random per-document equivalence graphs (seeded),
+    fed as ``equivalent_to`` clause rows: labels must match exactly,
+    including per-document scoping of identical local ids reused across
+    documents."""
     import random
-
-    from fastobo_py_spark.operators.components import per_doc_components
 
     rng = random.Random(1234)
     rows = []
@@ -461,11 +471,12 @@ def test_per_doc_components_random_graphs_vs_union_find(spark):
         ids = [f"X:{i}" for i in range(n_ids)]  # same local ids in every doc
         for _ in range(rng.randint(1, 40)):
             rows.append((sha, rng.choice(ids), rng.choice(ids)))
-    pairs = spark.createDataFrame(rows, "doc_sha string, src string, dst string")
-    got = {
-        (r["doc_sha"], r["id"]): r["component"]
-        for r in per_doc_components(pairs).collect()
-    }
+    dims = spark.createDataFrame(
+        [(sha, "Term", a, "equivalent_to", b, i + 1, 0) for i, (sha, a, b) in enumerate(rows)],
+        "doc_sha string, frame_type string, frame_id string, tag string, v1 string, "
+        "frame_ix int, clause_ix int",
+    )
+    got = {(sha, old): new for sha, old, new in _kernel_map_rows(dims)}
 
     parent: dict = {}
 
@@ -483,34 +494,32 @@ def test_per_doc_components_random_graphs_vs_union_find(spark):
     want = {}
     for sha, a, b in rows:
         for v in (a, b):
-            want[(sha, v)] = find((sha, v))[1]
-    assert got == want
-    # no labels leak across documents: every component shares its doc
-    assert all(k[0] == f"{int(k[0][:64], 16):064x}" for k in got)
+            rep = find((sha, v))[1]
+            if rep != v:  # the map drops identity labels
+                want[(sha, v)] = rep
+    assert got == want and got
+    # no labels leak across documents: every label names a doc-local id
+    ids_by_doc: dict = {}
+    for sha, a, b in rows:
+        ids_by_doc.setdefault(sha, set()).update((a, b))
+    assert all(new in ids_by_doc[sha] for (sha, _), new in got.items())
 
 
-def test_combined_map_kernel_equals_compositional(spark, clauses):
-    """The single-kernel fused map (production path) must emit the exact
-    row set of the compositional pipeline (resolution kernel → CC kernel
-    → fuse) over the full synthetic corpus dims."""
-    from fastobo_py_spark.operators.canonicalize import (
-        combined_map_distributed,
-        fuse_resolution_components,
-        resolution_map_distributed,
-    )
-    from fastobo_py_spark.operators.components import equivalence_components_from_clauses
+def test_combined_map_kernel_equals_oracle_maps(spark, clauses, corpus_rows):
+    """The single-kernel fused map (production path) must emit exactly the
+    rows of the pure-Python ``oracle.build_canonical_maps`` over the full
+    synthetic corpus dims, on both spines."""
+    from fastobo_py_spark.operators.surrogate import with_doc_key
 
     dims = clauses.where(
         (F.col("frame_type") == "Header")
         | F.col("tag").isin("alt_id", "replaced_by", "equivalent_to", "xref")
     )
-    fast = {tuple(r) for r in combined_map_distributed(dims).collect()}
-    res = resolution_map_distributed(dims).persist()
-    comps = equivalence_components_from_clauses(dims, resolution=res, strategy="shuffle_hash").persist()
-    slow = {tuple(r) for r in fuse_resolution_components(res, comps).collect()}
-    res.unpersist()
-    comps.unpersist()
-    assert fast == slow and fast
+    want = _oracle_map_rows(corpus_rows)
+    assert _kernel_map_rows(dims) == want and want
+    keyed = with_doc_key(dims)
+    sha_of = {r["doc_key"]: r["doc_sha"] for r in keyed.select("doc_key", "doc_sha").distinct().collect()}
+    assert {(sha_of[k], o, n) for k, o, n in _kernel_map_rows(keyed, "doc_key")} == want
 
 
 def test_transitive_ancestors_semantics(spark):
@@ -853,34 +862,18 @@ def test_output_compaction_recovery_slash_partition_value(spark):
 
 
 def test_alias_conflict_first_declared_wins(spark):
-    """Two frames claiming the same alt_id: ALL canonicalization paths
-    (alias_map min_by, fused kernel, pure-Python oracle) must keep the
-    FIRST declaration in document order — previously dropDuplicates /
-    setdefault-on-arrival-order kept an arbitrary survivor that could
-    differ per run and per strategy."""
-    import hashlib
-
-    from fastobo_py_spark.operators.canonicalize import alias_map, combined_map_distributed
-    from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-    from fastobo_py_spark.schema import CORPUS_SCHEMA
-
+    """Two frames claiming the same alt_id: the fused kernel and the
+    pure-Python oracle must both keep the FIRST declaration in document
+    order — previously dropDuplicates / setdefault-on-arrival-order kept
+    an arbitrary survivor that could differ per run and per spine."""
     content = (
         "format-version: 1.2\n\n"
         "[Term]\nid: T:1\nalt_id: T:9\n\n"
         "[Term]\nid: T:2\nalt_id: T:9\n\n"
         "[Term]\nid: T:3\nis_a: T:9\n"
     )
-    corpus = spark.createDataFrame(
-        [("r", "a.obo", "c1", "obo", content)], schema=CORPUS_SCHEMA
-    )
+    rows, corpus, shas = _obo_corpus(spark, {"a.obo": content})
     clauses, _ = split_parsed(parse_corpus(corpus))
-    sha = hashlib.sha256(content.encode()).hexdigest()
-
-    am = {(r["alias"]): r["canonical"] for r in alias_map(clauses).collect()}
-    assert am == {"T:9": "T:1"}
-    dims = clauses  # tiny doc: the whole clause set is a valid dims input
-    fused = {
-        (r["old"]): r["new"]
-        for r in combined_map_distributed(dims).where(F.col("doc_sha") == sha).collect()
-    }
-    assert fused.get("T:9") == "T:1"
+    # tiny doc: the whole clause set is a valid dims input
+    assert _kernel_map_rows(clauses) == {(shas["a.obo"], "T:9", "T:1")}
+    assert oracle.build_canonical_maps(rows)[shas["a.obo"]] == {"T:9": "T:1"}

@@ -1,4 +1,4 @@
-"""Physical-plan regression guards for the shuffle_hash canonical chain.
+"""Physical-plan regression guards for the canonical chain.
 
 Round 2's hardest-won property: with the clause cache hash-partitioned on
 the document key (round 5: the BIGINT ``doc_key`` surrogate,
@@ -54,14 +54,14 @@ def chain_plan(spark, clauses):
 
     # The round-5 cache contract: carry the BIGINT doc_key surrogate and
     # hash-partition on it (run_pipeline does the same) — the whole
-    # shuffle_hash chain then joins/aggregates on doc_key, and doc_sha is
+    # canonical chain then joins/aggregates on doc_key, and doc_sha is
     # restored by the decode dictionary join at the end.
     cl = with_doc_key(clauses).repartition(4, "doc_key").persist()
     cl.count()
     old = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        e = canonical_edges(cl, strategy="shuffle_hash")
+        e = canonical_edges(cl)
         plan = e._jdf.queryExecution().executedPlan()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)

@@ -223,6 +223,53 @@ def test_stream_kg_replayed_batch_commits_once(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_stream_kg_collision_fallback_matches_clean_batch(spark, monkeypatch):
+    """A micro-batch whose doc_key audit reports a collision runs on the
+    exact doc_sha spine and writes the same edge rows as a clean batch."""
+    from fastobo_py_spark.operators import surrogate
+    from fastobo_py_spark.schema import CORPUS_SCHEMA
+    from fastobo_py_spark.sources.corpus import generate_corpus
+    from fastobo_py_spark.streaming import kg
+
+    base = tempfile.mkdtemp(prefix="stream_kg_collision_")
+    try:
+        rows = generate_corpus(n_obo=6, n_noise=2, n_broken=0)
+        cols = [c.name for c in CORPUS_SCHEMA if c.name in rows[0]]
+        batch_df = spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in rows],
+            ", ".join(f"{c} string" for c in cols),
+        )
+        edge_cols = ["subj", "pred", "obj", "src_tag", "doc_sha", "idspace"]
+
+        def edges_written(out):
+            os.makedirs(out)
+            kg._process_batch(out, n_salts=4)(batch_df, 0)
+            return {tuple(r) for r in spark.read.parquet(f"{out}/edges").select(*edge_cols).collect()}
+
+        spines = []
+
+        def spy(clauses, persisted_out=None, key_col="doc_key"):
+            spines.append(key_col)
+            return real_chain(clauses, persisted_out=persisted_out, key_col=key_col)
+
+        real_chain = kg.canonical_edges
+        monkeypatch.setattr(kg, "canonical_edges", spy)
+        clean = edges_written(f"{base}/clean")
+
+        def fake_audit(clauses):
+            return clauses.sparkSession.createDataFrame(
+                [(7, 2, ["sha_a", "sha_b"])],
+                "doc_key long, n_docs long, doc_shas array<string>",
+            )
+
+        monkeypatch.setattr(surrogate, "audit_doc_keys", fake_audit)
+        fallback = edges_written(f"{base}/collision")
+        assert spines == ["doc_key", "doc_sha"]
+        assert fallback == clean and clean
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_stream_exact_dedup_cross_batch(spark):
     """Cross-batch streaming dedup: exactly ONE output row per distinct
     content across the whole stream, no matter how the input is

@@ -13,9 +13,8 @@ from pyspark.sql import functions as F
 
 def main() -> None:
     from fastobo_py_spark import get_spark
-    from fastobo_py_spark.operators.canonicalize import apply_xref_macros
+    from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
     from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-    from fastobo_py_spark.operators.triples import extract_edges
     from fastobo_py_spark.queries import q_region_revenue
     from fastobo_py_spark.sources.corpus import corpus_to_parquet
 
@@ -38,8 +37,12 @@ def main() -> None:
         "Corpus scan → OBO filter → Arrow parse (column pruning: only repo/path/content read)",
         clauses.where(F.col("tag") == "is_a").select("doc_sha", "frame_id", "v1"),
     )
-    e = apply_xref_macros(extract_edges(clauses), clauses)
-    show("Edges + macro synthesis (single scan; broadcast macro dim)", e.groupBy("pred").count())
+    e = extract_edges_with_macros(clauses)
+    show(
+        "Edges + macro synthesis (single scan: the macro dim left-joins the xref "
+        "rows as a ShuffledHashJoin, one explode emits base + synthesized edges)",
+        e.groupBy("pred").count(),
+    )
 
     from fastobo_py_spark.plans.pipeline import canonical_edges
 
@@ -48,13 +51,13 @@ def main() -> None:
     cl2 = with_doc_key(clauses).repartition(8, "doc_key").persist()
     cl2.count()
     show(
-        "Full canonical chain, strategy=shuffle_hash — the 10^12-file plan: ONE "
+        "Full canonical chain — the 10^12-file plan: ONE "
         "partition-wide MapInPandas kernel computes the fused canonicalization map "
         "over doc_key-repartitioned dims (BIGINT surrogate spine), every dim a "
         "doc_key-co-partitioned ShuffledHashJoin, ZERO exchanges of the edge table "
         "(only dim sides shuffle), final dedup is a HashAggregate reusing the cache "
         "partitioning, doc_sha restored by one co-partitioned dictionary join",
-        canonical_edges(cl2, strategy="shuffle_hash"),
+        canonical_edges(cl2),
     )
     show("TPC-H Q5 shape (dims broadcast, AQE shuffles)", q_region_revenue(spark, "/root/testdata/sf0.001"))
 
@@ -112,10 +115,9 @@ with `python tools/capture_plans.py`). What to look for, per the
 
 * **PushedFilters / ReadSchema** on parquet scans — predicate pushdown and
   column pruning reach the source (only the consumed columns are read).
-* **BroadcastHashJoin** for every dimension-sized side (header idspace
-  maps, resolution map, CC components, TPC-H dims) — no shuffle of the
-  big side. The production pipeline instead uses strategy=shuffle_hash:
-  **ShuffledHashJoin** with the edge side reusing the clause cache's
+* **BroadcastHashJoin** for every dimension-sized side of the relational
+  queries (TPC-H dims) — no shuffle of the big side. The canonical chain
+  instead uses **ShuffledHashJoin** with the edge side reusing the clause cache's
   hash partitioning on the BIGINT ``doc_key = xxhash64(doc_sha)``
   surrogate (operators/surrogate.py;
   requireAllClusterKeysForCoPartition=false), so ONLY the tiny dim side

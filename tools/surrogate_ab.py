@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """In-session A/B of the canonical-edge spine key: string ``doc_sha`` vs
 the BIGINT ``doc_key`` surrogate (operators/surrogate.py), on the SAME
-shuffle_hash chain, same session, same parsed cache.
+canonical chain, same session, same parsed cache.
 
 Why this tool exists: round-over-round scaling artifacts cannot isolate
 the surrogate's effect — the box's own expressed ceiling moved 0.87→0.79
@@ -48,7 +48,7 @@ def _arm(spark, base, key: str) -> dict:
     cache.count()
     cpu0 = bench._tree_cpu_seconds()
     t0 = time.time()
-    n = canonical_edges(cache, strategy="shuffle_hash", _spine_key=key).count()
+    n = canonical_edges(cache, key_col=key).count()
     dt = time.time() - t0
     dcpu = bench._tree_cpu_seconds() - cpu0
     cache.unpersist()
