@@ -32,6 +32,7 @@ from fastobo_py_spark.obo.parser import (
     _RAW_TEXT,
     _SINGLE_IDENT,
 )
+from fastobo_py_spark.worker import prune_zip_importers
 
 
 def _fmt_xrefs(xrefs) -> str:
@@ -151,6 +152,7 @@ def clause_lines(clauses: DataFrame) -> DataFrame:
     """Format every clause row to its OBO line (Arrow-batched)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             lines = [
                 format_clause(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastobo_py_spark.operators.idents import edge_idspace, ident_prefix
+from fastobo_py_spark.worker import prune_zip_importers
 
 
 def combined_map_distributed(
@@ -77,6 +78,7 @@ def combined_map_distributed(
         return s.split(":", 1)[0]
 
     def kernel(batches):
+        prune_zip_importers()
         docs: dict = {}
         for pdf in batches:
             for sha, ftype, fid, tag, v1, fix, cix in zip(

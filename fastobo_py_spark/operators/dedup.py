@@ -208,6 +208,12 @@ def _memo_signatures(documents: DataFrame) -> DataFrame:
 def minhash_candidate_pairs(documents: DataFrame) -> DataFrame:
     """(doc_a, doc_b, est_jaccard): pairs sharing >=1 LSH band, with the
     signature-agreement estimate. doc_a < doc_b; distinct."""
+    return _candidate_pairs(documents)[0]
+
+
+def _candidate_pairs(documents: DataFrame) -> tuple[DataFrame, int | None]:
+    """:func:`minhash_candidate_pairs` plus the document count its one
+    signature-table build recorded (None when unknown)."""
     from fastobo_py_spark.operators.hints import gated_broadcast
 
     sigs = _memo_signatures(documents)
@@ -242,11 +248,12 @@ def minhash_candidate_pairs(documents: DataFrame) -> DataFrame:
     # bit-identical to the Column-built original (verified on random rows)
     terms = " + ".join(f"CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END" for i in range(N_MINHASH))
     est = F.expr(f"(0 + {terms}) / {float(N_MINHASH)}D")
-    return (
+    out = (
         pairs.join(gated_broadcast(sa), "doc_a")
         .join(gated_broadcast(sb), "doc_b")
         .select("doc_a", "doc_b", F.round(est, 6).alias("est_jaccard"))
     )
+    return out, known
 
 
 def ngram_jaccard_pairs(documents: DataFrame, min_jaccard: float = 0.0) -> DataFrame:
@@ -269,13 +276,19 @@ def ngram_jaccard_pairs(documents: DataFrame, min_jaccard: float = 0.0) -> DataF
     n_int/n_a/n_b feed the same double division and round. Above the
     broadcast gate the joins degrade to shuffles of (pairs x one
     array-payload row) — still never the exploded row blow-up.
+
+    Every LSH candidate pair is emitted, including pairs whose shingle
+    sets do not overlap at all: those carry ``jaccard = 0.0`` (dropped
+    only by a ``min_jaccard`` above 0).
     """
     from fastobo_py_spark.operators.hints import gated_broadcast, known_rows
 
-    cands = minhash_candidate_pairs(documents).select("doc_a", "doc_b")
-    # the memo (filled by the call above) knows the exact doc count ==
-    # the set table's row count, so the broadcast gate costs zero probes
-    known = getattr(_memo_signatures(documents), "_known_rows", None)
+    cands, known = _candidate_pairs(documents)
+    cands = cands.select("doc_a", "doc_b")
+    # the signature build behind the candidates knows the exact doc count
+    # == the set table's row count, so the broadcast gate costs zero
+    # probes (asking the memo again would, on its no-memo path, build and
+    # persist a second signature table that nothing unpersists)
     sets = shingle_rows(documents).groupBy("doc_id").agg(F.collect_set("sh").alias("shs"))
     sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("shs").alias("_sa"))
     sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("shs").alias("_sb"))

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fastobo_py_spark.operators.idents import compact_url, decompact_prefixed
+from fastobo_py_spark.worker import prune_zip_importers
 
 
 _SCOPE_TO_PRED = [
@@ -110,6 +111,7 @@ def _yaml_to_json_batches(batches):
     exactly like this (``src/py/mod.rs:333-365``: format dispatch, one
     deserialize per document).
     """
+    prune_zip_importers()
     import json
 
     import yaml
@@ -124,6 +126,7 @@ def _yaml_to_json_batches(batches):
 
 def _json_to_yaml_batches(batches):
     """Inverse kernel for :func:`dump_graph_yaml`."""
+    prune_zip_importers()
     import json
 
     import yaml

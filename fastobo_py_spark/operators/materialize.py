@@ -15,8 +15,10 @@ exchanges; the writer then adds ONE hash exchange — edges on
 ``(idspace, salt)``, nodes on ``idspace`` — so every output leaf has
 exactly one writer task and a batch adds one parquet file per leaf, not
 one per (task, leaf). File count is a fixed per-batch cost on local
-filesystems: without libhadoop, Hadoop's ``RawLocalFileSystem`` forks a
-``chmod`` process for every file, ``.crc`` file and directory it creates.
+filesystems: every file, ``.crc`` file and directory is created and then
+has its permissions set. ``session.get_spark`` sets them through java.nio
+(``sparkobo.NioLocalFileSystem``); Hadoop's own ``RawLocalFileSystem``
+forks a ``chmod`` process for each when libhadoop is missing.
 """
 
 from __future__ import annotations

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from fastobo_py_spark.worker import prune_zip_importers
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -205,6 +207,7 @@ def extract_features(
     contract that is oracle-checkable in a codec-less environment."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         for pdf in batches:
             out = {
                 "media_id": pdf["media_id"],

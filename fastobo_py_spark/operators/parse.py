@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from fastobo_py_spark.obo.parser import CLAUSE_FIELDS, ParseError, parse_document
 from fastobo_py_spark.schema import PARSE_OUTPUT_SCHEMA
+from fastobo_py_spark.worker import prune_zip_importers
 
 _N_CLAUSE_COLS = len(CLAUSE_FIELDS)
 _EMPTY_CLAUSE = (None,) * _N_CLAUSE_COLS
@@ -72,6 +73,7 @@ def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     compressed corpora never materialize plaintext in the JVM. A row
     whose gzip payload is corrupt quarantines like any parse error.
     """
+    prune_zip_importers()
     import gzip
 
     for pdf in batches:

@@ -25,6 +25,8 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
+from fastobo_py_spark.worker import prune_zip_importers
+
 
 def _norm_hof(v: Column) -> Column:
     """Catalyst higher-order fold ‖v‖ — mirrors the DuckDB oracle SQL
@@ -82,6 +84,7 @@ def norm_udf(v: pd.Series) -> pd.Series:
     numpy's pairwise ``np.sum``/BLAS ``dot`` would round differently and
     are deliberately NOT used. HOF edge parity: null → null, empty →
     0.0, ragged batches fall back to the same fold row-wise."""
+    prune_zip_importers()
     if len(v) == 0:
         return pd.Series([], dtype="float64")
     return _fold_rows([v], lambda a: a * a, np.sqrt)
@@ -90,6 +93,7 @@ def norm_udf(v: pd.Series) -> pd.Series:
 @pandas_udf(DoubleType())
 def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Arrow-batched a·b, sequential-fold parity (see :func:`norm_udf`)."""
+    prune_zip_importers()
     if len(a) == 0:
         return pd.Series([], dtype="float64")
     return _fold_rows([a, b], lambda x, y: x * y, lambda z: z)
@@ -242,6 +246,7 @@ def signature_udf(n_planes: int, seed: int = 7):
 
     @pandas_udf("string")
     def sig(v: pd.Series) -> pd.Series:
+        prune_zip_importers()
         if len(v) == 0:
             return pd.Series([], dtype="object")
         # null/ragged rows get a NULL bucket (they match nothing in the
@@ -398,6 +403,7 @@ def cells_udf(n_cells: int, nprobe: int, seed: int = 11, anchors: "np.ndarray | 
 
     @pandas_udf("array<int>")
     def cells(v: pd.Series) -> pd.Series:
+        prune_zip_importers()
         if len(v) == 0:
             return pd.Series([], dtype="object")
 

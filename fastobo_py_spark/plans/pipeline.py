@@ -40,7 +40,7 @@ from fastobo_py_spark.operators.canonicalize import rewrite_edges
 from fastobo_py_spark.operators.idents import edge_idspace
 from fastobo_py_spark.operators.materialize import build_nodes, graph_writers
 from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-from fastobo_py_spark.session import codegen_compiles
+from fastobo_py_spark.session import codegen_compiles, jvm_times, local_fs_class
 
 MANIFEST_COLS = ("doc_sha", "repo", "path", "commit")
 
@@ -388,6 +388,7 @@ def run_pipeline(
     """
     t0 = time.time()
     compiles0 = codegen_compiles(spark)
+    jit0, gc0 = jvm_times(spark)
     batch_id = uuid.uuid4().hex[:12]
 
     # self-heal interrupted maintenance before anything reads the tables:
@@ -504,6 +505,7 @@ def run_pipeline(
         else {"compacted": False}
     )
 
+    jit1, gc1 = jvm_times(spark)
     metrics = {
         "batch_id": batch_id,
         "docs_in_batch": obs["done"].get["n"],
@@ -519,6 +521,11 @@ def run_pipeline(
         "elapsed_sec": round(time.time() - t0, 3),
         "files_added": {t: len(files) for t, files in added.items()},
         "codegen_compiles": codegen_compiles(spark) - compiles0,
+        # the file:// class in effect: Hadoop's own LocalFileSystem here
+        # means every file, .crc file and directory forked a chmod
+        "local_fs": local_fs_class(spark),
+        "jvm_jit_s": round(jit1 - jit0, 3),
+        "jvm_gc_s": round(gc1 - gc0, 3),
     }
     clauses.unpersist()
     metrics_dir = os.path.join(out_dir, "_metrics")

@@ -4,13 +4,86 @@ Defaults chosen for the local[32] sandbox but written the way a
 1000-executor cluster job would be configured: AQE on (runtime shuffle
 coalescing + skew-join splitting), Arrow enabled for the pandas UDF
 boundary, and shuffle partitions sized explicitly rather than left at 200.
+
+Local ``file://`` writes go through ``sparkobo.NioLocalFileSystem``
+(``jvm/NioLocalFileSystem.java``) when this module launches the JVM:
+without libhadoop, Hadoop's own local filesystem forks a ``chmod`` process
+for every file, ``.crc`` file and directory it creates (~470 per KG batch).
+The class is compiled once per machine with ``javac`` into a per-user
+cache keyed by the source hash; without ``javac`` the session keeps
+Hadoop's default.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+NIO_LOCAL_FS = "sparkobo.NioLocalFileSystem"
+_NIO_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java")
+
+
+def _nio_local_fs_classes() -> str | None:
+    """Class directory of :data:`NIO_LOCAL_FS`, compiled on first use into
+    ``$XDG_CACHE_HOME/fastobo_py_spark/jvm/<hash>`` (hash of the source and
+    of the Hadoop jar it compiles against); None when the source, the jar
+    or ``javac`` is missing or the compile fails."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    jars = sorted(glob.glob(os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")))
+    java_home = os.environ.get("JAVA_HOME")
+    javac = os.path.join(java_home, "bin", "javac") if java_home else shutil.which("javac")
+    if not (jars and javac and os.path.isfile(javac) and os.path.isfile(_NIO_LOCAL_FS_SOURCE)):
+        return None
+    with open(_NIO_LOCAL_FS_SOURCE, "rb") as fh:
+        key = hashlib.sha256(fh.read() + os.path.basename(jars[-1]).encode()).hexdigest()[:16]
+    cache = os.path.join(
+        os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"), "fastobo_py_spark", "jvm"
+    )
+    dest = os.path.join(cache, key)
+    if os.path.isdir(dest):
+        return dest
+    try:
+        os.makedirs(cache, exist_ok=True)
+        tmp = tempfile.mkdtemp(prefix=".build-", dir=cache)
+    except OSError:
+        return None
+    try:
+        cmd = [javac, "--release", "17", "-nowarn", "-cp", jars[-1], "-d", tmp, _NIO_LOCAL_FS_SOURCE]
+        if subprocess.run(cmd, capture_output=True, timeout=300).returncode == 0:
+            os.rename(tmp, dest)  # atomic publish
+    except (OSError, subprocess.SubprocessError):
+        pass  # javac did not run, or a concurrent build published first
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return dest if os.path.isdir(dest) else None
+
+
+def _with_local_fs(conf: dict[str, str]) -> dict[str, str]:
+    """``conf`` plus the settings that route ``file://`` through
+    :data:`NIO_LOCAL_FS` (an explicit ``spark.hadoop.fs.file.impl`` wins).
+
+    Only when this call launches the JVM: the class directory must be on
+    the JVM's classpath from its start. A driver started by
+    ``spark-submit`` (``PYSPARK_GATEWAY_PORT`` set) already runs, and
+    naming the class there fails every write with
+    ``ClassNotFoundException``."""
+    conf = dict(conf)
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return conf
+    classes = _nio_local_fs_classes()
+    if classes is not None:
+        cp = conf.get("spark.driver.extraClassPath")
+        conf["spark.driver.extraClassPath"] = classes if not cp else cp + os.pathsep + classes
+        conf.setdefault("spark.hadoop.fs.file.impl", NIO_LOCAL_FS)
+    return conf
 
 
 def get_spark(
@@ -70,11 +143,29 @@ def get_spark(
     # this is the NVMe-backed local dir configured by the platform.)
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
         builder = builder.config("spark.local.dir", "/dev/shm/spark-local")
-    for k, v in (extra_conf or {}).items():
+    for k, v in _with_local_fs(extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_fs_class(spark: SparkSession) -> str:
+    """Class of the ``file://`` filesystem this session's writes use:
+    :data:`NIO_LOCAL_FS`, or the Hadoop class the session fell back to
+    (which forks a ``chmod`` per created file without libhadoop)."""
+    jvm = spark.sparkContext._jvm
+    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.getClass().getName()
+
+
+def jvm_times(spark: SparkSession) -> tuple[float, float]:
+    """(JIT compile seconds, GC seconds) spent so far by this JVM, from its
+    ``CompilationMXBean`` and ``GarbageCollectorMXBean`` s."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    jit_ms = mf.getCompilationMXBean().getTotalCompilationTime()
+    gc_ms = sum(max(0, b.getCollectionTime()) for b in mf.getGarbageCollectorMXBeans())
+    return jit_ms / 1000.0, gc_ms / 1000.0
 
 
 def codegen_compiles(spark: SparkSession) -> int:

@@ -33,6 +33,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from fastobo_py_spark.operators.text import fingerprint
+from fastobo_py_spark.worker import prune_zip_importers
 
 DEDUP_OUTPUT = T.StructType(
     [
@@ -51,6 +52,7 @@ def _first_seen_fn(
     """Stateful kernel: emit one row for a fingerprint's FIRST appearance
     (keep_id = min doc_id inside that micro-batch — deterministic within
     the batch), drop every later appearance via the persisted flag."""
+    prune_zip_importers()
     if state.exists:
         return  # duplicate content in a later batch: emit nothing
     keep = None
@@ -144,6 +146,7 @@ def _event_ttl_fn(ttl_us: int):
     the scheduler's."""
 
     def fn(key: Tuple[Any, ...], batches: Iterator[pd.DataFrame], state: GroupState):
+        prune_zip_importers()
         if state.hasTimedOut:
             # watermark passed last_ts + TTL: every future event's gap
             # exceeds the TTL and re-emits regardless of this state —
@@ -252,6 +255,7 @@ def _signature_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     text, Carter–Wegman h_i = a + i*b over its 32-bit halves, band hash =
     md5 of the '|'-joined band slice — so stream pairs are comparable
     row-for-row with `minhash_candidate_pairs` output."""
+    prune_zip_importers()
     import hashlib
     import re
 
@@ -295,6 +299,7 @@ def _bucket_pairs_fn(
     (stored signatures), then joins the stored set. State is the bucket's
     member list — the streaming dual of the batch band self-join, sharded
     by bucket key so no bucket ever sees another's members."""
+    prune_zip_importers()
     if state.exists:
         ids, sigs = list(state.get[0]), [list(s) for s in state.get[1]]
     else:
@@ -378,6 +383,7 @@ def _emb_signature_rows(n_tables: int, n_planes: int, seed: int):
     batch path (similarity.hyperplane_weights), rebuilt from the seed."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import numpy as np
 
         from fastobo_py_spark.operators.similarity import hyperplane_weights
@@ -405,6 +411,7 @@ def _emb_bucket_pairs_fn(threshold: float):
         Python loop) to match Spark's F.aggregate and DuckDB's
         list_dot_product bit-for-bit at the threshold boundary — numpy's
         pairwise/BLAS summation rounds differently."""
+        prune_zip_importers()
         if state.exists:
             ids, vecs = list(state.get[0]), [list(v) for v in state.get[1]]
         else:

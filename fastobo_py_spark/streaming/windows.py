@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from fastobo_py_spark.worker import prune_zip_importers
+
 
 def stream_events_hourly(events: DataFrame, watermark: str = "30 days") -> DataFrame:
     """Tumbling 1-hour event-time windows with a late-data watermark.
@@ -71,6 +73,7 @@ def _user_totals_fn(
     """Stateful kernel: accumulate (count, sum, last event time) per user
     across micro-batches. Values carried as e4-fixed-point integers so the
     state is exact (float state would drift across accumulation orders)."""
+    prune_zip_importers()
     n, s, last = state.get if state.exists else (0, 0, 0)
     from decimal import ROUND_HALF_UP, Decimal
 

@@ -892,3 +892,27 @@ def test_ngram_jaccard_shuffle_fallback_identical(spark, monkeypatch):
     monkeypatch.setattr(hints, "BROADCAST_ROW_THRESHOLD", 0)
     fallback = run()
     assert broadcast and broadcast == fallback  # bit-equal doubles, same pairs
+
+
+def test_ngram_jaccard_builds_one_signature_table(spark, monkeypatch):
+    """ngram_jaccard_pairs takes the gate's row count from the signature
+    table behind its candidates; a second memo lookup would, when the
+    memo cannot key the input, build and persist a second table that
+    nothing unpersists."""
+    from fastobo_py_spark.operators import dedup
+
+    built = []
+    real = dedup._memo_signatures
+
+    def counting(documents):
+        built.append(real(documents))
+        return built[-1]
+
+    monkeypatch.setattr(dedup, "_memo_signatures", counting)
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps"), (3, "lorem ipsum dolor sit")],
+        "doc_id long, text string",
+    )
+    pairs = dedup.ngram_jaccard_pairs(docs).collect()
+    assert len(built) == 1
+    assert [(r.doc_a, r.doc_b, r.jaccard) for r in pairs] == [(1, 2, 1.0)]

@@ -12,6 +12,8 @@ import sys
 
 import pyspark
 
+from fastobo_py_spark.session import NIO_LOCAL_FS
+
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -40,3 +42,39 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert (out / "_manifest").is_dir()
     assert (out / "edges").is_dir()
     assert (out / "_metrics").is_dir()
+
+
+_PLAIN_SUBMIT = r"""
+import sys
+from fastobo_py_spark.session import get_spark, local_fs_class
+
+spark = get_spark(app_name="plain-submit", master="local[2]", shuffle_partitions=2)
+spark.range(20).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(sys.argv[1])
+print("LOCAL_FS " + local_fs_class(spark))
+print("ROWS %d" % spark.read.parquet(sys.argv[1]).count())
+spark.stop()
+"""
+
+
+def test_spark_submit_without_pyfiles_writes_parquet(tmp_path):
+    """A driver whose JVM ``spark-submit`` started (no ``--py-files``, so
+    nothing touched ``file://`` before ``get_spark``) can still write:
+    the session must not name a filesystem class that JVM cannot load."""
+    script = tmp_path / "plain_submit.py"
+    script.write_text(_PLAIN_SUBMIT)
+    out = tmp_path / "out"
+    spark_submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
+    env = dict(os.environ, PYTHONPATH=_REPO + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    r = subprocess.run(
+        [spark_submit, "--master", "local[2]", str(script), str(out)],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert r.returncode == 0, f"spark-submit failed:\n{r.stdout[-2000:]}\n{r.stderr[-4000:]}"
+    assert "ROWS 20" in r.stdout
+    # the pre-launched JVM keeps its own file:// filesystem
+    assert "LOCAL_FS " in r.stdout and f"LOCAL_FS {NIO_LOCAL_FS}" not in r.stdout
+    assert (out / "_SUCCESS").is_file()

@@ -39,8 +39,10 @@ def _assert_one_file_per_leaf(out: str) -> dict[str, int]:
 def test_run_pipeline_writes_one_file_per_leaf(spark, corpus):
     """On the 4-partition session, one batch leaves exactly one parquet
     file in every nodes idspace leaf and every edges (idspace, salt) leaf,
-    and the batch metrics count exactly those files."""
+    and the batch metrics count exactly those files. They also name the
+    local filesystem and the batch's JVM compile and GC seconds."""
     from fastobo_py_spark.plans.pipeline import run_pipeline
+    from fastobo_py_spark.session import NIO_LOCAL_FS, _nio_local_fs_classes, local_fs_class
 
     out = tempfile.mkdtemp(prefix="kg_layout_")
     try:
@@ -52,6 +54,12 @@ def test_run_pipeline_writes_one_file_per_leaf(spark, corpus):
             on_disk = json.load(fh)
         assert on_disk["files_added"] == leaves
         assert on_disk["codegen_compiles"] == m["codegen_compiles"] >= 0
+        # the file:// class in effect, and the JVM's JIT and GC time
+        assert on_disk["local_fs"] == m["local_fs"] == local_fs_class(spark)
+        if _nio_local_fs_classes() is not None:  # javac present: the session uses it
+            assert m["local_fs"] == NIO_LOCAL_FS
+        for k in ("jvm_jit_s", "jvm_gc_s"):
+            assert on_disk[k] == m[k] >= 0
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
