@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from fastobo_py_spark.operators.idents import _sql_arg
+
 
 def parse_header_date(col: Column) -> Column:
     """``DD:MM:YYYY HH:MM`` → timestamp (header DateClause).
@@ -33,40 +35,56 @@ def format_header_date(col: Column) -> Column:
     return F.date_format(col, "dd:MM:yyyy HH:mm")
 
 
-def creation_date_kind(col: Column) -> Column:
-    """'date' | 'datetime' | 'datetime_tz' | NULL (unparseable)."""
+# SQL text over a column name or expression ``c`` (the node build embeds
+# it in its one ``spark.sql`` statement; the Column helpers wrap the same
+# text). Brace-free on purpose: the node stage's statement goes through
+# ``str.format`` (``session.sql_over``), so ``\d\d\d\d`` stands for ``\d{4}``.
+_DATE_RE = r"\d\d\d\d-\d\d-\d\d"
+_TIME_RE = r"\d\d:\d\d:\d\d(\.\d+)?"
+_TZ_RE = r"([Zz]|[+-]\d\d:?\d\d)"
+
+
+def creation_date_kind_sql(c: str) -> str:
+    """SQL text of :func:`creation_date_kind`."""
     return (
-        F.when(col.rlike(r"^\d{4}-\d{2}-\d{2}$"), F.lit("date"))
-        .when(col.rlike(r"^\d{4}-\d{2}-\d{2}[Tt ]\d{2}:\d{2}:\d{2}(\.\d+)?$"), F.lit("datetime"))
-        .when(
-            col.rlike(r"^\d{4}-\d{2}-\d{2}[Tt ]\d{2}:\d{2}:\d{2}(\.\d+)?([Zz]|[+-]\d{2}:?\d{2})$"),
-            F.lit("datetime_tz"),
-        )
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN {c} RLIKE r'^{_DATE_RE}$' THEN 'date'"
+        f" WHEN {c} RLIKE r'^{_DATE_RE}[Tt ]{_TIME_RE}$' THEN 'datetime'"
+        f" WHEN {c} RLIKE r'^{_DATE_RE}[Tt ]{_TIME_RE}{_TZ_RE}$' THEN 'datetime_tz'"
+        " ELSE CAST(NULL AS STRING) END"
     )
+
+
+def parse_creation_date_sql(c: str) -> str:
+    """SQL text of :func:`parse_creation_date`."""
+    kind = creation_date_kind_sql(c)
+    # normalize BOTH separators the kind regex accepts: [Tt] → space and a
+    # lowercase z suffix → Z (the cast only understands uppercase); and
+    # try_to_timestamp so calendar-invalid values ('2021-02-30') yield
+    # NULL instead of an ANSI DateTimeException killing the node build
+    norm = f"regexp_replace(regexp_replace({c}, '[Tt]', ' '), 'z$', 'Z')"
+    return (
+        f"CASE WHEN {kind} = 'date' THEN try_to_timestamp({c}, 'yyyy-MM-dd')"
+        f" WHEN {kind} = 'datetime' THEN try_to_timestamp({norm})"
+        f" WHEN {kind} = 'datetime_tz' THEN try_to_timestamp({norm}) END"
+    )
+
+
+def creation_date_kind(col: str | Column) -> Column:
+    """'date' | 'datetime' | 'datetime_tz' | NULL (unparseable)."""
+    return F.expr(creation_date_kind_sql(_sql_arg(col)))
 
 
 def creation_date_tz(col: Column) -> Column:
     """Original timezone suffix ('Z', '+02:00', ...) or NULL for naive."""
-    tz = F.regexp_extract(col, r"([Zz]|[+-]\d{2}:?\d{2})$", 1)
+    tz = F.regexp_extract(col, _TZ_RE + "$", 1)
     return F.when((creation_date_kind(col) == "datetime_tz") & (tz != ""), tz)
 
 
-def parse_creation_date(col: Column) -> Column:
+def parse_creation_date(col: str | Column) -> Column:
     """ISO date/datetime (naive or zoned) → timestamp.
 
     Plain dates become midnight; zoned datetimes are converted to session
     UTC (keep :func:`creation_date_tz` alongside to round-trip the
     original offset).
     """
-    kind = creation_date_kind(col)
-    # normalize BOTH separators the kind regex accepts: [Tt] → space and a
-    # lowercase z suffix → Z (the cast only understands uppercase); and
-    # try_to_timestamp so calendar-invalid values ('2021-02-30') yield
-    # NULL instead of an ANSI DateTimeException killing the node build
-    norm = F.regexp_replace(F.regexp_replace(col, "[Tt]", " "), "z$", "Z")
-    return (
-        F.when(kind == "date", F.try_to_timestamp(col, F.lit("yyyy-MM-dd")))
-        .when(kind == "datetime", F.try_to_timestamp(norm))
-        .when(kind == "datetime_tz", F.try_to_timestamp(norm))
-    )
+    return F.expr(parse_creation_date_sql(_sql_arg(col)))

@@ -28,9 +28,16 @@ exchanges of the edge table and zero driver materialization.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.idents import edge_idspace, ident_prefix
+from fastobo_py_spark.operators.idents import edge_idspace_sql, ident_prefix_sql
+from fastobo_py_spark.operators.triples import (
+    EDGE_OBJ,
+    EDGE_PRED,
+    EDGE_VALID,
+    edge_clause_filter,
+    sql_list,
+)
+from fastobo_py_spark.session import sql_over
 from fastobo_py_spark.worker import prune_zip_importers
 
 
@@ -151,48 +158,48 @@ def combined_map_distributed(
         if out:
             yield pd.DataFrame(out, columns=[key_col, "old", "new"])
 
-    n = int(dims.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cols = [key_col, "frame_type", "frame_id", "tag", "v1", "frame_ix", "clause_ix"]
-    hdr = F.col("frame_type") == "Header"
+    spark = dims.sparkSession
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cols = (key_col, "frame_type", "frame_id", "tag", "v1", "frame_ix", "clause_ix")
+    eq_hdr = "frame_type = 'Header' AND tag = 'treat-xrefs-as-equivalent'"
     # xref rows dominate the dims volume but only those covered by a
     # treat-xrefs-as-equivalent macro ever matter — filter them with a
     # vectorized JVM semi-join BEFORE anything reaches Python (looping
     # every xref row through the kernel cost more than the whole edge job)
-    eq_hdr = dims.where(hdr & (F.col("tag") == "treat-xrefs-as-equivalent"))
-    spaces = eq_hdr.select(F.col(key_col).alias("__d"), F.col("v1").alias("__space")).hint(
-        "shuffle_hash"
+    proj = sql_over(
+        spark,
+        f"SELECT /*+ REPARTITION({n}, {key_col}) */ * FROM ("
+        f" SELECT {', '.join(cols)} FROM {{dims}}"
+        f" WHERE ({eq_hdr}) OR (NOT frame_type = 'Header' AND tag IN ('alt_id', 'replaced_by', 'equivalent_to'))"
+        f" UNION ALL"
+        f" SELECT /*+ SHUFFLE_HASH(s) */ {', '.join('x.' + c for c in cols)}"
+        f" FROM (SELECT * FROM {{dims}} WHERE NOT frame_type = 'Header' AND tag = 'xref') x"
+        f" LEFT SEMI JOIN (SELECT {key_col} AS __d, v1 AS __space FROM {{dims}} WHERE {eq_hdr}) s"
+        f" ON x.{key_col} = s.__d AND {ident_prefix_sql('x.v1')} = s.__space)",
+        dims=dims,
     )
-    xr = dims.where(~hdr & (F.col("tag") == "xref"))
-    xr_kept = xr.join(
-        spaces, (xr[key_col] == F.col("__d")) & (ident_prefix(xr["v1"]) == F.col("__space")), "left_semi"
-    )
-    small = dims.where(~hdr & F.col("tag").isin("alt_id", "replaced_by", "equivalent_to"))
-    proj = eq_hdr.select(*cols).unionByName(small.select(*cols)).unionByName(xr_kept.select(*cols))
     key_type = "bigint" if key_col == "doc_key" else "string"
-    return proj.repartition(n, key_col).mapInPandas(
-        kernel, f"{key_col} {key_type}, old string, new string"
-    )
+    return proj.mapInPandas(kernel, f"{key_col} {key_type}, old string, new string")
 
 
-def rewrite_edges(edges: DataFrame, resolution: DataFrame, key_col: str) -> DataFrame:
-    """Canonicalize edge endpoints via the pre-composed ``(key_col, old,
-    new)`` map — one equi-join per endpoint.
+def rewrite_edges_sql(key_col: str, edges: str, resolution: str) -> str:
+    """SQL text that canonicalizes the endpoints of the relation ``edges``
+    via the pre-composed ``(key_col, old, new)`` relation ``resolution`` —
+    one equi-join per endpoint; yields ``subj, pred, obj, src_tag,
+    key_col``. The dedup stage (``plans.pipeline._dedup_edges``) reads it
+    as a subquery, so rewrite and dedup are analysed as one statement.
 
     Zero probe jobs, zero broadcasts: both join keys lead with the
     document key, and the edge side is already hash-partitioned on it (the
     clause cache contract), so each shuffle-hash join co-locates without
     exchanging the edge table — only the map side shuffles.
     """
-    m = resolution.hint("shuffle_hash")
-    ms = m.withColumnRenamed("old", "__ks").withColumnRenamed("new", "__vs").withColumnRenamed(key_col, "__ds")
-    mo = m.withColumnRenamed("old", "__ko").withColumnRenamed("new", "__vo").withColumnRenamed(key_col, "__do")
     return (
-        edges.join(ms, (F.col(key_col) == F.col("__ds")) & (F.col("subj") == F.col("__ks")), "left")
-        .withColumn("subj", F.coalesce(F.col("__vs"), F.col("subj")))
-        .drop("__ks", "__vs", "__ds")
-        .join(mo, (F.col(key_col) == F.col("__do")) & (F.col("obj") == F.col("__ko")), "left")
-        .withColumn("obj", F.coalesce(F.col("__vo"), F.col("obj")))
-        .drop("__ko", "__vo", "__do")
+        "SELECT /*+ SHUFFLE_HASH(ms), SHUFFLE_HASH(mo) */"
+        f" coalesce(ms.new, e.subj) AS subj, e.pred, coalesce(mo.new, e.obj) AS obj, e.src_tag, e.{key_col}"
+        f" FROM {edges} e"
+        f" LEFT JOIN {resolution} ms ON e.{key_col} = ms.{key_col} AND e.subj = ms.old"
+        f" LEFT JOIN {resolution} mo ON e.{key_col} = mo.{key_col} AND e.obj = mo.old"
     )
 
 
@@ -200,79 +207,67 @@ def rewrite_edges(edges: DataFrame, resolution: DataFrame, key_col: str) -> Data
 # O11: treat-xrefs header macros
 # ---------------------------------------------------------------------------
 
-def macro_table(clauses: DataFrame, doc_col: str = "doc_sha") -> DataFrame:
-    """Normalize all treat-xrefs-* header clauses into one macro dim:
-    (doc_col, kind, macro_idspace, rel, filler). ``doc_col`` is the
-    document key the dim joins on — ``doc_sha`` (string spine) or
-    ``doc_key`` (the BIGINT surrogate spine, operators/surrogate.py)."""
-    hdr = clauses.where(F.col("frame_type") == "Header")
-    simple = hdr.where(
-        F.col("tag").isin("treat-xrefs-as-equivalent", "treat-xrefs-as-is_a", "treat-xrefs-as-has-subclass")
-    ).select(
-        doc_col,
-        F.col("tag").alias("kind"),
-        F.col("v1").alias("macro_idspace"),
-        F.lit(None).cast("string").alias("rel"),
-        F.lit(None).cast("string").alias("filler"),
-    )
-    rel = hdr.where(F.col("tag") == "treat-xrefs-as-relationship").select(
-        doc_col,
-        F.col("tag").alias("kind"),
-        F.col("v1").alias("macro_idspace"),
-        F.col("v2").alias("rel"),
-        F.lit(None).cast("string").alias("filler"),
-    )
-    gd = hdr.where(
-        F.col("tag").isin("treat-xrefs-as-genus-differentia", "treat-xrefs-as-reverse-genus-differentia")
-    ).select(
-        doc_col,
-        F.col("tag").alias("kind"),
-        F.col("v1").alias("macro_idspace"),
-        F.col("v2").alias("rel"),
-        F.col("value_text").alias("filler"),
-    )
-    return simple.unionByName(rel).unionByName(gd)
+_MACRO_SIMPLE = ("treat-xrefs-as-equivalent", "treat-xrefs-as-is_a", "treat-xrefs-as-has-subclass")
+_MACRO_GD = ("treat-xrefs-as-genus-differentia", "treat-xrefs-as-reverse-genus-differentia")
+_MACRO_REL = ("treat-xrefs-as-relationship",) + _MACRO_GD
 
 
-def _macro_emit(kind, rel, filler, s, x):
-    """Edges a (kind, rel, filler) macro synthesizes from an xref (s → x),
-    per macro kind (O11):
-
-      equivalent        → (s, 'equivalent_to', x)
-      is_a              → (s, 'is_a', x)
-      has-subclass      → (x, 'is_a', s)          [reversed]
-      relationship(rel) → (s, rel, x)
-      genus-differentia(rel, filler)
-                        → (s, 'intersection_of:genus', x)
-                          + (s, 'intersection_of:<rel>', filler)
-      reverse-genus-differentia
-                        → (x, 'intersection_of:genus', s)
-                          + (x, 'intersection_of:<rel>', filler)
-    """
-    pair = lambda subj, pred, obj: F.struct(
-        subj.alias("s"), pred.alias("p"), obj.alias("o"), F.lit("xref-macro").alias("st")
-    )
+def macro_table_sql(doc_col: str, src: str) -> str:
+    """SQL text of the macro dim: every treat-xrefs-* header clause of the
+    relation ``src`` as (doc_col, kind, macro_idspace, rel, filler), in one
+    filter over the header rows; ``rel`` and ``filler`` are NULL for the
+    kinds that take none. ``doc_col`` is the document key the dim joins on
+    — ``doc_sha`` (string spine) or ``doc_key`` (the BIGINT surrogate
+    spine, operators/surrogate.py)."""
     return (
-        F.when(kind == "treat-xrefs-as-equivalent", F.array(pair(s, F.lit("equivalent_to"), x)))
-        .when(kind == "treat-xrefs-as-is_a", F.array(pair(s, F.lit("is_a"), x)))
-        .when(kind == "treat-xrefs-as-has-subclass", F.array(pair(x, F.lit("is_a"), s)))
-        .when(kind == "treat-xrefs-as-relationship", F.array(pair(s, rel, x)))
-        .when(
-            kind == "treat-xrefs-as-genus-differentia",
-            F.array(
-                pair(s, F.lit("intersection_of:genus"), x),
-                pair(s, F.concat(F.lit("intersection_of:"), rel), filler),
-            ),
-        )
-        .when(
-            kind == "treat-xrefs-as-reverse-genus-differentia",
-            F.array(
-                pair(x, F.lit("intersection_of:genus"), s),
-                pair(x, F.concat(F.lit("intersection_of:"), rel), filler),
-            ),
-        )
-        .otherwise(F.array())
+        f"SELECT {doc_col}, tag AS kind, v1 AS macro_idspace,"
+        f" CASE WHEN tag IN ({sql_list(_MACRO_REL)}) THEN v2 END AS rel,"
+        f" CASE WHEN tag IN ({sql_list(_MACRO_GD)}) THEN value_text END AS filler"
+        f" FROM {src} WHERE frame_type = 'Header'"
+        f" AND tag IN ({sql_list(_MACRO_SIMPLE + _MACRO_REL)})"
     )
+
+
+def _edge(s: str, p: str, o: str, st: str) -> str:
+    return f"named_struct('s', {s}, 'p', {p}, 'o', {o}, 'st', {st})"
+
+
+# Edges a (kind, rel, filler) macro synthesizes from an xref (s → x), per
+# macro kind (O11), as SQL text over the joined row (frame_id = s, v1 = x):
+#
+#   equivalent        → (s, 'equivalent_to', x)
+#   is_a              → (s, 'is_a', x)
+#   has-subclass      → (x, 'is_a', s)          [reversed]
+#   relationship(rel) → (s, rel, x)
+#   genus-differentia(rel, filler)
+#                     → (s, 'intersection_of:genus', x)
+#                       + (s, 'intersection_of:<rel>', filler)
+#   reverse-genus-differentia
+#                     → (x, 'intersection_of:genus', s)
+#                       + (x, 'intersection_of:<rel>', filler)
+_MACRO_TAG = "'xref-macro'"
+_MACRO_EDGES = (
+    ("treat-xrefs-as-equivalent", [("frame_id", "'equivalent_to'", "v1")]),
+    ("treat-xrefs-as-is_a", [("frame_id", "'is_a'", "v1")]),
+    ("treat-xrefs-as-has-subclass", [("v1", "'is_a'", "frame_id")]),
+    ("treat-xrefs-as-relationship", [("frame_id", "rel", "v1")]),
+    ("treat-xrefs-as-genus-differentia", [
+        ("frame_id", "'intersection_of:genus'", "v1"),
+        ("frame_id", "concat('intersection_of:', rel)", "filler"),
+    ]),
+    ("treat-xrefs-as-reverse-genus-differentia", [
+        ("v1", "'intersection_of:genus'", "frame_id"),
+        ("v1", "concat('intersection_of:', rel)", "filler"),
+    ]),
+)
+_MACRO_EMIT = (
+    "CASE"
+    + "".join(
+        f" WHEN kind = '{kind}' THEN array({', '.join(_edge(*e, _MACRO_TAG) for e in edges)})"
+        for kind, edges in _MACRO_EDGES
+    )
+    + " ELSE array() END"
+)
 
 
 def extract_edges_with_macros(
@@ -280,7 +275,8 @@ def extract_edges_with_macros(
     macro_source: DataFrame | None = None,
     key_col: str = "doc_sha",
 ) -> DataFrame:
-    """Single-pass triple extraction WITH treat-xrefs macro synthesis.
+    """Single-pass triple extraction WITH treat-xrefs macro synthesis, as
+    one ``spark.sql`` stage.
 
     ``extract_edges(...).unionByName(synthesized)`` loses the clause
     cache's document-key hash partitioning (UnionExec concatenates partitions),
@@ -289,46 +285,25 @@ def extract_edges_with_macros(
     row against the per-(doc, idspace) macro dim, then ONE explode emits
     the base edge plus any synthesized ones — keeps the whole chain on
     the cache's partitioning: zero edge-table exchanges end to end.
+
+    Direct left join to the macro dim (NOT aggregated into per-idspace
+    arrays): transform/flatten higher-order functions fall out of
+    whole-stage codegen and cost ~10x per row on the 14M-row hot path.
+    Several macros on one idspace duplicate the matched xref row — each
+    duplicate re-emits the base edge, which the end-of-chain dedup
+    removes; pure CaseWhen/CreateArray keeps the whole emission inside
+    codegen.
     """
-    from fastobo_py_spark.operators.triples import _SIMPLE_EDGE_TAGS, edge_case_exprs
-
-    t, v1 = F.col("tag"), F.col("v1")
-    fid = F.col("frame_id")
-    ent = clauses.where(
-        (F.col("frame_type") != "Header")
-        & (fid != "")
-        & t.isin(list(_SIMPLE_EDGE_TAGS) + ["relationship", "intersection_of"])
+    base = f"CASE WHEN {EDGE_VALID} THEN array({_edge('frame_id', EDGE_PRED, EDGE_OBJ, 'tag')}) ELSE array() END"
+    macros = macro_table_sql(key_col, "{macros}")
+    return sql_over(
+        clauses.sparkSession,
+        f"SELECT e.s AS subj, e.p AS pred, e.o AS obj, e.st AS src_tag, {key_col},"
+        f" {edge_idspace_sql('e.s')} AS idspace"
+        f" FROM (SELECT /*+ SHUFFLE_HASH(m) */ c.{key_col}, explode(concat({base}, {_MACRO_EMIT})) AS e"
+        f" FROM (SELECT * FROM {{clauses}} WHERE {edge_clause_filter()}) c"
+        f" LEFT JOIN (SELECT {key_col} AS __d, kind, macro_idspace, rel, filler FROM ({macros}) t) m"
+        f" ON c.{key_col} = m.__d AND c.tag = 'xref' AND {ident_prefix_sql('c.v1')} = m.macro_idspace)",
+        clauses=clauses,
+        macros=clauses if macro_source is None else macro_source,
     )
-    pred, obj, valid = edge_case_exprs()
-    base = F.when(
-        valid,
-        F.array(F.struct(fid.alias("s"), pred.alias("p"), obj.alias("o"), t.alias("st"))),
-    ).otherwise(F.array())
-
-    # Direct left join to the macro dim (NOT aggregated into per-idspace
-    # arrays): transform/flatten higher-order functions fall out of
-    # whole-stage codegen and cost ~10x per row on the 14M-row hot path.
-    # Several macros on one idspace duplicate the matched xref row — each
-    # duplicate re-emits the base edge, which the end-of-chain dedup
-    # removes; pure CaseWhen/CreateArray keeps
-    # the whole emission inside codegen.
-    mspace = (
-        macro_table(clauses if macro_source is None else macro_source, doc_col=key_col)
-        .withColumnRenamed(key_col, "__d")
-        .hint("shuffle_hash")
-    )
-
-    joined = ent.join(
-        mspace,
-        (ent[key_col] == mspace["__d"]) & (t == "xref") & (ident_prefix(v1) == mspace["macro_idspace"]),
-        "left",
-    )
-    synth = _macro_emit(F.col("kind"), F.col("rel"), F.col("filler"), fid, v1)
-    edges = joined.select(key_col, F.explode(F.concat(base, synth)).alias("e")).select(
-        F.col("e.s").alias("subj"),
-        F.col("e.p").alias("pred"),
-        F.col("e.o").alias("obj"),
-        F.col("e.st").alias("src_tag"),
-        key_col,
-    )
-    return edges.withColumn("idspace", edge_idspace(F.col("subj")))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastobo_py_spark.operators.hints import known_rows
+from fastobo_py_spark.session import release
 
 
 class MinUnionFind:
@@ -88,6 +89,7 @@ def connected_components(
     # ONE driver job: fetch up to threshold+1 pairs; overflow → distributed
     rows = e_raw.limit(driver_threshold + 1).collect()
     if len(rows) <= driver_threshold:
+        release([e_raw])
         uf = MinUnionFind()
         for row in rows:
             uf.union(row[0], row[1])
@@ -109,6 +111,7 @@ def _distributed_cc(e: DataFrame, max_iter: int) -> DataFrame:
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
+    release([e])
 
     # labels: every vertex starts as its own component
     labels = (
@@ -128,12 +131,13 @@ def _distributed_cc(e: DataFrame, max_iter: int) -> DataFrame:
             sym.join(labels.withColumnRenamed("id", "b_id"), F.col("b") == F.col("b_id"))
             .select(F.col("a").alias("id"), F.col("component"))
         )
-        labels = (
+        prev, labels = labels, (
             labels.unionByName(neighbor_labels)
             .groupBy("id")
             .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=True)
         )
+        release([prev])
         fp = labels.agg(F.expr("bit_xor(xxhash64(id, component))")).collect()[0][0]
         if fp == prev_fp:
             break
@@ -151,4 +155,5 @@ def _distributed_cc(e: DataFrame, max_iter: int) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
+    release([sym])
     return labels

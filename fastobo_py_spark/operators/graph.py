@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fastobo_py_spark.session import release
+
 # compact the BFS seen-set union into one checkpointed frame once this
 # many per-depth frames accumulate (see ancestors_of): bounds anti-join
 # plan width on deep graphs, amortizes the re-copy to depth/K collapses
@@ -27,7 +29,7 @@ _SEEN_COMPACT_EVERY = 8
 
 
 def transitive_ancestors(
-    edges: DataFrame, pred: str = "is_a", max_iter: int = 25
+    edges: DataFrame, pred: str = "is_a", max_iter: int = 25, persisted_out: list | None = None
 ) -> DataFrame:
     """(doc_sha, id, ancestor): transitive closure of ``pred`` edges,
     per document (ancestors never cross documents).
@@ -35,6 +37,9 @@ def transitive_ancestors(
     Path-doubling fixpoint with ``localCheckpoint`` per round (lineage
     otherwise doubles every iteration) and a one-scalar xor fingerprint
     as the convergence probe (bit_xor cannot overflow under ANSI mode).
+    Each round releases the checkpoint it supersedes. The result is a
+    checkpoint too: it goes to ``persisted_out`` for the caller to
+    :func:`session.release` once it has read the closure.
     """
     base = (
         edges.where(F.col("pred") == pred)
@@ -55,16 +60,19 @@ def transitive_ancestors(
             )
             .select("doc_sha", "id", F.col("__anc").alias("ancestor"))
         )
-        closure = (
+        prev, closure = closure, (
             closure.unionByName(longer)
             .where(F.col("id") != F.col("ancestor"))  # cycles collapse to self-pairs; drop
             .dropDuplicates()
             .localCheckpoint(eager=True)
         )
+        release([prev])
         fp = closure.agg(F.expr("bit_xor(xxhash64(doc_sha, id, ancestor))")).collect()[0][0]
         if fp == prev_fp:
             break
         prev_fp = fp
+    if persisted_out is not None:
+        persisted_out.append(closure)
     return closure
 
 
@@ -73,6 +81,7 @@ def ancestors_of(
     seeds: DataFrame,
     pred: str = "is_a",
     max_depth: int = 25,
+    persisted_out: list | None = None,
 ) -> DataFrame:
     """(doc_sha, id, ancestor, min_depth) for the SEED ids only — the
     interactive "ancestors of THESE terms" query (reference users walk the
@@ -86,6 +95,10 @@ def ancestors_of(
     ``min_depth`` is the shortest is_a path length (BFS discovery order +
     seen-set anti-join make first discovery minimal). Cycle-safe: the
     anti-join stops re-expansion; self-pairs are dropped.
+
+    The result is a union of per-depth checkpoints; they go to
+    ``persisted_out`` for the caller to :func:`session.release` once it
+    has read the result, and every other checkpoint is released here.
     """
     base = (
         edges.where(F.col("pred") == pred)
@@ -125,6 +138,7 @@ def ancestors_of(
             out = out.unionByName(f.select("doc_sha", "id", "ancestor"))
         return out
 
+    retired: list[DataFrame] = []  # compacted away, still read as the frontier
     for depth in range(2, max_depth + 1):
         hop = (
             frontier.select(
@@ -140,15 +154,21 @@ def ancestors_of(
             .withColumn("min_depth", F.lit(depth).cast("long"))
             .localCheckpoint(eager=True)
         )
+        release(retired)
+        retired = []
         if new.limit(1).count() == 0:
+            release([new])
             break
         frames.append(new)
         if len(frames) >= _SEEN_COMPACT_EVERY:
             merged = frames[0]
             for f in frames[1:]:
                 merged = merged.unionByName(f)
-            frames = [merged.localCheckpoint(eager=True)]
+            retired, frames = frames, [merged.localCheckpoint(eager=True)]
         frontier = new
+    release(retired + [base])
+    if persisted_out is not None:
+        persisted_out.extend(frames)
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
@@ -160,6 +180,7 @@ def descendants_of(
     seeds: DataFrame,
     pred: str = "is_a",
     max_depth: int = 25,
+    persisted_out: list | None = None,
 ) -> DataFrame:
     """(doc_sha, id, descendant, min_depth) for the SEED ids — subtree
     extraction ("everything under GO:0008150"), the downward twin of
@@ -170,6 +191,6 @@ def descendants_of(
     rev = edges.select(
         "doc_sha", F.col("pred"), F.col("obj").alias("subj"), F.col("subj").alias("obj")
     )
-    return ancestors_of(rev, seeds, pred=pred, max_depth=max_depth).withColumnRenamed(
+    return ancestors_of(rev, seeds, pred, max_depth, persisted_out).withColumnRenamed(
         "ancestor", "descendant"
     )

@@ -20,13 +20,44 @@ from pyspark.sql import functions as F
 OBO_PURL = "http://purl.obolibrary.org/obo/"
 
 
-def ident_kind(col: Column) -> Column:
+# Every identifier expression below is SQL text over a column name or
+# expression ``c``: the KG chain embeds it in its per-stage ``spark.sql``
+# statements, and the Column helpers wrap the same text in ``F.expr``, so
+# each rule has one definition. The text holds no braces: the stages'
+# statements go through ``str.format`` (``session.sql_over``).
+_URL_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://"
+
+
+def _sql_arg(col: str | Column) -> str:
+    """SQL text of a helper argument: a column name or SQL expression as
+    given, or a plain column reference (the rule ``spark.sql`` applies to a
+    ``{df.col}`` argument)."""
+    if isinstance(col, str):
+        return col
+    from pyspark.sql import SparkSession
+
+    return SparkSession.active()._jsparkSession.expression(col._jc).sql()
+
+
+def ident_kind_sql(c: str) -> str:
+    """SQL text of :func:`ident_kind`."""
+    return f"CASE WHEN {c} RLIKE r'{_URL_RE}' THEN 'url' WHEN contains({c}, ':') THEN 'prefixed' ELSE 'unprefixed' END"
+
+
+def ident_prefix_sql(c: str) -> str:
+    """SQL text of :func:`ident_prefix`."""
+    return f"CASE WHEN {ident_kind_sql(c)} = 'prefixed' THEN substring_index({c}, ':', 1) END"
+
+
+def edge_idspace_sql(c: str) -> str:
+    """SQL text of :func:`edge_idspace`."""
+    k = ident_kind_sql(c)
+    return f"CASE WHEN {k} = 'prefixed' THEN substring_index({c}, ':', 1) WHEN {k} = 'url' THEN 'URL' ELSE 'UNPREFIXED' END"
+
+
+def ident_kind(col: str | Column) -> Column:
     """'url' | 'prefixed' | 'unprefixed' (dispatch per id.rs:53-63)."""
-    return (
-        F.when(col.rlike(r"^[A-Za-z][A-Za-z0-9+.-]*://"), F.lit("url"))
-        .when(col.contains(":"), F.lit("prefixed"))
-        .otherwise(F.lit("unprefixed"))
-    )
+    return F.expr(ident_kind_sql(_sql_arg(col)))
 
 
 def ident_is_valid(col: Column) -> Column:
@@ -50,10 +81,10 @@ def ident_is_valid(col: Column) -> Column:
     )
 
 
-def ident_prefix(col: Column) -> Column:
+def ident_prefix(col: str | Column) -> Column:
     """Idspace prefix of a prefixed ident, else NULL (PrefixedIdent.prefix,
     id.rs:226-228)."""
-    return F.when(ident_kind(col) == "prefixed", F.substring_index(col, ":", 1))
+    return F.expr(ident_prefix_sql(_sql_arg(col)))
 
 
 def compact_url(col: Column) -> Column:
@@ -145,13 +176,8 @@ def compact_with_idspaces(df: DataFrame, ident_col: str, clauses: DataFrame) -> 
     )
 
 
-def edge_idspace(col: Column) -> Column:
+def edge_idspace(col: str | Column) -> Column:
     """Partitioning idspace of an ident: prefix for prefixed ids, 'URL'
     bucket for urls, 'UNPREFIXED' otherwise. Drives partitionBy + salting
     (O18)."""
-    k = ident_kind(col)
-    return (
-        F.when(k == "prefixed", F.substring_index(col, ":", 1))
-        .when(k == "url", F.lit("URL"))
-        .otherwise(F.lit("UNPREFIXED"))
-    )
+    return F.expr(edge_idspace_sql(_sql_arg(col)))

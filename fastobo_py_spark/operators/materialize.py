@@ -29,11 +29,39 @@ from pyspark.sql import DataFrame, DataFrameWriter, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from fastobo_py_spark.operators.idents import edge_idspace
+from fastobo_py_spark.functions.dates import parse_creation_date_sql
+from fastobo_py_spark.operators.idents import edge_idspace_sql
+from fastobo_py_spark.session import sql_over
+
+
+_NODE_AGGS = ", ".join(
+    f"{agg} AS {name}"
+    for name, agg in (
+        ("name", "max(CASE WHEN tag = 'name' THEN value_text END)"),
+        ("namespace", "max(CASE WHEN tag = 'namespace' THEN v1 END)"),
+        ("definition", "max(CASE WHEN tag = 'def' THEN value_text END)"),
+        ("obsolete", "coalesce(max(CASE WHEN tag = 'is_obsolete' THEN v1 = 'true' END), false)"),
+        ("replaced_by", "sort_array(collect_set(CASE WHEN tag = 'replaced_by' THEN v1 END))"),
+        ("consider", "sort_array(collect_set(CASE WHEN tag = 'consider' THEN v1 END))"),
+        ("alt_ids", "sort_array(collect_set(CASE WHEN tag = 'alt_id' THEN v1 END))"),
+        ("synonyms", "sort_array(collect_list("
+                     "CASE WHEN tag = 'synonym' THEN named_struct('text', value_text, 'scope', scope) END))"),
+        ("xrefs", "sort_array(collect_set(CASE WHEN tag = 'xref' THEN v1 END))"),
+        ("creation_date", "max(CASE WHEN tag = 'creation_date' THEN value_text END)"),
+        ("created_by", "max(CASE WHEN tag = 'created_by' THEN v1 END)"),
+        ("frame_type", "max(frame_type)"),
+    )
+)
+_NODE_COLS = (
+    "doc_sha, id, name, namespace, definition, obsolete, replaced_by, consider, alt_ids, synonyms,"
+    f" xrefs, creation_date, created_by, frame_type, {edge_idspace_sql('id')} AS idspace,"
+    f" unix_micros({parse_creation_date_sql('creation_date')}) AS creation_date_us"
+)
 
 
 def build_nodes(clauses: DataFrame) -> DataFrame:
-    """Entity clause rows → NODE_SCHEMA (one row per frame).
+    """Entity clause rows → NODE_SCHEMA (one row per frame), as one
+    ``spark.sql`` statement.
 
     Single hash agg keyed by (doc_sha, frame_id); every attribute is a
     conditional partial aggregate, so the whole thing is one shuffle.
@@ -41,37 +69,16 @@ def build_nodes(clauses: DataFrame) -> DataFrame:
     ``creation_date_us`` is the parsed epoch-microsecond column
     (reference shapes at ``src/date.rs:14-123``).
     """
-    from fastobo_py_spark.functions.dates import parse_creation_date
-
-    ent = clauses.where((F.col("frame_type") != "Header") & (F.col("frame_id") != ""))
-    t = F.col("tag")
     # When the cache carries the doc_key surrogate (and is hash-partitioned
     # on it), grouping by it too keeps this aggregate exchange-free.
     # Exact: doc_key is a function of doc_sha, so the extra key can never
     # split a (doc_sha, frame_id) group.
-    extra_keys = ["doc_key"] if "doc_key" in clauses.columns else []
-    nodes = ent.groupBy(*extra_keys, "doc_sha", F.col("frame_id").alias("id")).agg(
-        F.max(F.when(t == "name", F.col("value_text"))).alias("name"),
-        F.max(F.when(t == "namespace", F.col("v1"))).alias("namespace"),
-        F.max(F.when(t == "def", F.col("value_text"))).alias("definition"),
-        F.coalesce(F.max(F.when(t == "is_obsolete", F.col("v1") == "true")), F.lit(False)).alias("obsolete"),
-        F.sort_array(F.collect_set(F.when(t == "replaced_by", F.col("v1")))).alias("replaced_by"),
-        F.sort_array(F.collect_set(F.when(t == "consider", F.col("v1")))).alias("consider"),
-        F.sort_array(F.collect_set(F.when(t == "alt_id", F.col("v1")))).alias("alt_ids"),
-        F.sort_array(
-            F.collect_list(
-                F.when(t == "synonym", F.struct(F.col("value_text").alias("text"), F.col("scope").alias("scope")))
-            )
-        ).alias("synonyms"),
-        F.sort_array(F.collect_set(F.when(t == "xref", F.col("v1")))).alias("xrefs"),
-        F.max(F.when(t == "creation_date", F.col("value_text"))).alias("creation_date"),
-        F.max(F.when(t == "created_by", F.col("v1"))).alias("created_by"),
-        F.max(F.col("frame_type")).alias("frame_type"),
-    )
-    if extra_keys:
-        nodes = nodes.drop(*extra_keys)
-    return nodes.withColumn("idspace", edge_idspace(F.col("id"))).withColumn(
-        "creation_date_us", F.unix_micros(parse_creation_date(F.col("creation_date")))
+    key = "doc_key, " if "doc_key" in clauses.columns else ""
+    return sql_over(
+        clauses.sparkSession,
+        f"SELECT {_NODE_COLS} FROM (SELECT {key}doc_sha, frame_id AS id, {_NODE_AGGS} FROM {{clauses}}"
+        f" WHERE NOT frame_type = 'Header' AND NOT frame_id = '' GROUP BY {key}doc_sha, frame_id)",
+        clauses=clauses,
     )
 
 

@@ -255,12 +255,14 @@ def chunk(
     ``i`` covers characters ``[i*stride, i*stride + size)``;
     ``n_chunks = 1 + ceil(max(len - size, 0) / stride)``, so every
     character is covered, consecutive chunks overlap by ``size - stride``
-    and an empty/short document still yields exactly one chunk. Explode
-    of a ``sequence`` keeps this a narrow map over the scan — one output
-    row per chunk, no shuffle, no UDF."""
+    and an empty/short document still yields exactly one chunk. A NULL
+    text is chunked as the empty string (one chunk, ``chunk_len`` 0).
+    Explode of a ``sequence`` keeps this a narrow map over the scan — one
+    output row per chunk, no shuffle, no UDF."""
     if stride <= 0 or size < stride:
         raise ValueError(f"need size >= stride > 0, got size={size} stride={stride}")
-    t = F.col(text_col)
+    # length(NULL) would make sequence(0, NULL), which explodes to no rows
+    t = F.coalesce(F.col(text_col), F.lit(""))
     n = (
         F.lit(1)
         + F.ceil(F.greatest(F.length(t) - F.lit(size), F.lit(0)) / F.lit(float(stride)))
@@ -270,7 +272,7 @@ def chunk(
     )
     return (
         documents.select(
-            id_col, text_col, F.explode(F.sequence(F.lit(0).cast("long"), n - 1)).alias("chunk_id")
+            id_col, t.alias(text_col), F.explode(F.sequence(F.lit(0).cast("long"), n - 1)).alias("chunk_id")
         )
         .select(
             id_col,

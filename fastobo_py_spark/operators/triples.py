@@ -20,39 +20,40 @@ filter+project plan — whole-stage codegen end to end, no UDFs:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.idents import edge_idspace
+from fastobo_py_spark.operators.idents import edge_idspace_sql
+from fastobo_py_spark.session import sql_over
 
 # tags whose object is v1 and whose predicate is the tag itself
 _SIMPLE_EDGE_TAGS = ("is_a", "union_of", "equivalent_to", "disjoint_from", "xref")
 
 
-def edge_case_exprs():
-    """(pred, obj, valid) case expressions over a clause row — shared by
-    :func:`extract_edges` and the macro-fused single-pass variant
-    (canonicalize.extract_edges_with_macros)."""
-    t, v1, v2 = F.col("tag"), F.col("v1"), F.col("v2")
-    pred = (
-        F.when(t == "relationship", v1)
-        .when(
-            t == "intersection_of",
-            F.when(v1.isNull(), F.lit("intersection_of:genus")).otherwise(F.concat(F.lit("intersection_of:"), v1)),
-        )
-        .otherwise(t)
-    )
-    obj = F.when(t.isin("relationship", "intersection_of"), v2).otherwise(v1)
-    # empty-string values are NOT edges: an empty ident is not a vertex
-    # (the lenient parser emits v1='' for `is_a: ` lines; the pure-Python
-    # oracle's truthiness check has always dropped them — isNotNull alone
-    # diverged on exactly those rows)
-    nonempty = lambda c: c.isNotNull() & (c != "")
-    valid = (
-        F.when(t == "relationship", nonempty(v1) & nonempty(v2))
-        .when(t == "intersection_of", nonempty(v2))
-        .otherwise(nonempty(v1))
-    )
-    return pred, obj, valid
+def sql_list(values) -> str:
+    """SQL ``IN`` list of string literals."""
+    return ", ".join(f"'{v}'" for v in values)
+
+
+def edge_clause_filter(tags=_SIMPLE_EDGE_TAGS) -> str:
+    """SQL predicate selecting the entity clause rows that can bear an edge."""
+    tags = sql_list(list(tags) + ["relationship", "intersection_of"])
+    return f"NOT frame_type = 'Header' AND NOT frame_id = '' AND tag IN ({tags})"
+
+
+# (pred, obj, valid) of a clause row as SQL text — shared by
+# :func:`extract_edges` and the macro-fused single-pass variant
+# (canonicalize.extract_edges_with_macros). Empty-string values are NOT
+# edges: an empty ident is not a vertex (the lenient parser emits v1='' for
+# `is_a: ` lines; the pure-Python oracle's truthiness check has always
+# dropped them — IS NOT NULL alone diverged on exactly those rows).
+EDGE_PRED = (
+    "CASE WHEN tag = 'relationship' THEN v1"
+    " WHEN tag = 'intersection_of' THEN"
+    " CASE WHEN v1 IS NULL THEN 'intersection_of:genus' ELSE concat('intersection_of:', v1) END"
+    " ELSE tag END"
+)
+EDGE_OBJ = "CASE WHEN tag IN ('relationship', 'intersection_of') THEN v2 ELSE v1 END"
+_V1, _V2 = "(v1 IS NOT NULL AND NOT v1 = '')", "(v2 IS NOT NULL AND NOT v2 = '')"
+EDGE_VALID = f"CASE WHEN tag = 'relationship' THEN {_V1} AND {_V2} WHEN tag = 'intersection_of' THEN {_V2} ELSE {_V1} END"
 
 
 def extract_edges(clauses: DataFrame, include_xrefs: bool = True) -> DataFrame:
@@ -62,19 +63,11 @@ def extract_edges(clauses: DataFrame, include_xrefs: bool = True) -> DataFrame:
     through one case expression (a union-of-projections formulation costs
     one cache scan per branch — measured on a 37M-row cached table).
     """
-    simple_tags = [t for t in _SIMPLE_EDGE_TAGS if include_xrefs or t != "xref"]
-    t = F.col("tag")
-    ent = clauses.where(
-        (F.col("frame_type") != "Header")
-        & (F.col("frame_id") != "")
-        & t.isin(simple_tags + ["relationship", "intersection_of"])
+    tags = [t for t in _SIMPLE_EDGE_TAGS if include_xrefs or t != "xref"]
+    return sql_over(
+        clauses.sparkSession,
+        f"SELECT frame_id AS subj, {EDGE_PRED} AS pred, {EDGE_OBJ} AS obj, tag AS src_tag, doc_sha,"
+        f" {edge_idspace_sql('frame_id')} AS idspace"
+        f" FROM {{clauses}} WHERE {edge_clause_filter(tags)} AND {EDGE_VALID}",
+        clauses=clauses,
     )
-    pred, obj, valid = edge_case_exprs()
-    edges = ent.where(valid).select(
-        F.col("frame_id").alias("subj"),
-        pred.alias("pred"),
-        obj.alias("obj"),
-        t.alias("src_tag"),
-        "doc_sha",
-    )
-    return edges.withColumn("idspace", edge_idspace(F.col("subj")))

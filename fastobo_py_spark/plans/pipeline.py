@@ -36,11 +36,11 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.canonicalize import rewrite_edges
-from fastobo_py_spark.operators.idents import edge_idspace
+from fastobo_py_spark.operators.canonicalize import rewrite_edges_sql
+from fastobo_py_spark.operators.idents import edge_idspace_sql
 from fastobo_py_spark.operators.materialize import build_nodes, graph_writers
 from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-from fastobo_py_spark.session import codegen_compiles, jvm_times, local_fs_class
+from fastobo_py_spark.session import codegen_compiles, jvm_times, local_fs_class, sql_over
 
 MANIFEST_COLS = ("doc_sha", "repo", "path", "commit")
 
@@ -101,10 +101,7 @@ def canonical_edges(
     # stage. One narrow projection holds every dim-bearing row (headers +
     # alias/redirect/equivalence/xref tags, a small fraction of the edge
     # rows), so dim building rescans only it.
-    dims = clauses.where(
-        (F.col("frame_type") == "Header")
-        | F.col("tag").isin("alt_id", "replaced_by", "equivalent_to", "xref")
-    ).persist()
+    dims = clauses.where(_DIMS_FILTER).persist()
     if persisted_out is not None:
         persisted_out.append(dims)
     # eager fill: the map/macro branches otherwise race to compute the
@@ -123,9 +120,11 @@ def canonical_edges(
     # macro synthesis is FUSED into the extraction pass (no union) so the
     # clause cache's doc-key partitioning survives to the final dedup
     e = extract_edges_with_macros(clauses, macro_source=dims, key_col=key_col)
-    e = rewrite_edges(e, combined, key_col)
-    return _dedup_edges(e, clauses, key_col)
+    return _dedup_edges(e, clauses, key_col, resolution=combined)
 
+
+# every dim-bearing clause row: headers + alias/redirect/equivalence/xref tags
+_DIMS_FILTER = "frame_type = 'Header' OR tag IN ('alt_id', 'replaced_by', 'equivalent_to', 'xref')"
 
 # src_tag is a CLOSED 8-value set (triples._SIMPLE_EDGE_TAGS +
 # relationship/intersection_of + the macro marker); the order below is the
@@ -135,10 +134,19 @@ _SRC_TAG_ORDER = (
     "is_a", "relationship", "intersection_of", "union_of",
     "equivalent_to", "disjoint_from", "xref", "xref-macro",
 )
+_SRC_TAG_ENCODE = (
+    "CASE" + "".join(f" WHEN src_tag = '{t}' THEN CAST({i} AS TINYINT)" for i, t in enumerate(_SRC_TAG_ORDER)) + " END"
+)
+_SRC_TAG_DECODE = "CASE d.__tc" + "".join(f" WHEN {i} THEN '{t}'" for i, t in enumerate(_SRC_TAG_ORDER)) + " END"
+_IDSPACE_OF_SUBJ = edge_idspace_sql("d.subj")
 
 
-def _dedup_edges(e: DataFrame, clauses: DataFrame, key_col: str) -> DataFrame:
-    """Per-doc edge dedup as a HashAggregate.
+def _dedup_edges(
+    e: DataFrame, clauses: DataFrame, key_col: str, resolution: DataFrame | None = None
+) -> DataFrame:
+    """Per-doc edge dedup as a HashAggregate, in one ``spark.sql``
+    statement; with a ``resolution`` map the endpoint rewrite joins
+    (``canonicalize.rewrite_edges_sql``) are part of the same statement.
 
     ``dropDuplicates(EDGE_KEY)`` carries the src_tag/idspace STRINGS in
     ``first()`` buffers, which HashAggregateExec cannot hold (aggregation
@@ -157,23 +165,23 @@ def _dedup_edges(e: DataFrame, clauses: DataFrame, key_col: str) -> DataFrame:
     shuffle-hash join that exchanges only the dict — the edge side still
     carries the aggregate's doc_key partitioning.
     """
-    enc = F.lit(None).cast("tinyint")
-    for i, tag in reversed(list(enumerate(_SRC_TAG_ORDER))):
-        enc = F.when(F.col("src_tag") == tag, F.lit(i).cast("tinyint")).otherwise(enc)
-    dec = F.lit(None).cast("string")
-    for i, tag in enumerate(_SRC_TAG_ORDER):
-        dec = F.when(F.col("__tc") == i, F.lit(tag)).otherwise(dec)
+    src = "{e}" if resolution is None else f"({rewrite_edges_sql(key_col, '{e}', '{resolution}')}) r"
     deduped = (
-        e.withColumn("__tc", enc)
-        .groupBy("subj", "pred", "obj", key_col)
-        .agg(F.min("__tc").alias("__tc"))
+        f"(SELECT subj, pred, obj, {key_col}, min({_SRC_TAG_ENCODE}) AS __tc FROM {src}"
+        f" GROUP BY subj, pred, obj, {key_col}) d"
     )
     if key_col == "doc_key":
-        doc_dict = clauses.select("doc_key", "doc_sha").distinct()
-        deduped = deduped.join(doc_dict.hint("shuffle_hash"), key_col, "inner")
-    return deduped.select(
-        "subj", "pred", "obj", dec.alias("src_tag"), "doc_sha",
-        edge_idspace(F.col("subj")).alias("idspace"),
+        head, doc_sha = "SELECT /*+ SHUFFLE_HASH(dd) */", "dd.doc_sha"
+        deduped += " JOIN (SELECT DISTINCT doc_key, doc_sha FROM {clauses}) dd ON d.doc_key = dd.doc_key"
+    else:
+        head, doc_sha = "SELECT", "d.doc_sha"
+    return sql_over(
+        e.sparkSession,
+        f"{head} d.subj, d.pred, d.obj, {_SRC_TAG_DECODE} AS src_tag, {doc_sha}, {_IDSPACE_OF_SUBJ} AS idspace"
+        f" FROM {deduped}",
+        e=e,
+        clauses=clauses,
+        resolution=resolution,
     )
 
 
@@ -460,9 +468,7 @@ def run_pipeline(
     else:
         from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
 
-        macro_dims = clauses.where(
-            (F.col("frame_type") == "Header") | (F.col("tag") == "xref")
-        )
+        macro_dims = clauses.where("frame_type = 'Header' OR tag = 'xref'")
         e = extract_edges_with_macros(clauses, macro_source=macro_dims, key_col=spine)
         edges = _dedup_edges(e, clauses, spine)
     # the write_graph layout; its writes are issued from this function so

@@ -12,6 +12,7 @@ from fastobo_py_spark.queries._registry import (
     QUERIES,
 )
 from fastobo_py_spark.queries._shared import _CORPUS_KW, _clauses, _values_sql
+from fastobo_py_spark.session import release
 
 
 def q_obo_edges_by_pred(spark: SparkSession, sf: str) -> DataFrame:
@@ -48,12 +49,13 @@ def q_obo_canonical_edges_pato(spark: SparkSession, sf: str) -> DataFrame:
 
     cl = _clauses(spark).where(F.col("path").startswith("ontologies/pato"))
     caches: list = []
-    e = canonical_edges(cl, persisted_out=caches)
-    out = e.select("subj", "pred", "obj").dropDuplicates().orderBy("subj", "pred", "obj")
-    # the chain persists its dims; materialize, then release them
-    rows = out.collect()
-    for c in caches:
-        c.unpersist()
+    try:
+        e = canonical_edges(cl, persisted_out=caches)
+        out = e.select("subj", "pred", "obj").dropDuplicates().orderBy("subj", "pred", "obj")
+        # the chain persists its dims; materialize, then release them
+        rows = out.collect()
+    finally:
+        release(caches)
     return spark.createDataFrame(rows, out.schema)
 
 

@@ -17,6 +17,7 @@ from fastobo_py_spark.queries._shared import (
     _sql_quote,
     _values_sql,
 )
+from fastobo_py_spark.session import release
 
 
 def q_obo_graph_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
@@ -593,19 +594,18 @@ def q_obo_ancestors(spark: SparkSession, sf: str) -> DataFrame:
     cl = _clauses(spark)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     caches: list = []
-    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
-    anc = transitive_ancestors(e)
-    out = (
-        anc.select(edge_idspace(F.col("id")).alias("idspace"), "id")
-        .groupBy("idspace")
-        .agg(F.count("*").alias("n_pairs"), F.countDistinct("id").alias("n_ids"))
-        .orderBy("idspace")
-    )
-    # the closure is checkpointed (materialized) inside transitive_ancestors,
-    # so the chain caches can release now
-    rows = out.collect()
-    for c in caches:
-        c.unpersist()
+    try:
+        e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
+        anc = transitive_ancestors(e, persisted_out=caches)
+        out = (
+            anc.select(edge_idspace("id").alias("idspace"), "id")
+            .groupBy("idspace")
+            .agg(F.count("*").alias("n_pairs"), F.countDistinct("id").alias("n_ids"))
+            .orderBy("idspace")
+        )
+        rows = out.collect()
+    finally:
+        release(caches)
     return spark.createDataFrame(rows, out.schema)
 
 
@@ -659,17 +659,18 @@ def q_obo_ancestors_seeded(spark: SparkSession, sf: str) -> DataFrame:
     cl = _clauses(spark)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     caches: list = []
-    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
-    seeds = (
-        e.where(F.col("pred") == "is_a")
-        .select(F.col("subj").alias("id"))
-        .where(F.col("id").endswith("0"))
-        .dropDuplicates()
-    )
-    anc = ancestors_of(e, seeds).orderBy("doc_sha", "id", "ancestor")
-    rows = anc.collect()
-    for c in caches:
-        c.unpersist()
+    try:
+        e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
+        seeds = (
+            e.where(F.col("pred") == "is_a")
+            .select(F.col("subj").alias("id"))
+            .where(F.col("id").endswith("0"))
+            .dropDuplicates()
+        )
+        anc = ancestors_of(e, seeds, persisted_out=caches).orderBy("doc_sha", "id", "ancestor")
+        rows = anc.collect()
+    finally:
+        release(caches)
     return spark.createDataFrame(rows, anc.schema)
 
 
@@ -743,17 +744,18 @@ def q_obo_descendants_seeded(spark: SparkSession, sf: str) -> DataFrame:
     cl = _clauses(spark)
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     caches: list = []
-    e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
-    seeds = (
-        e.where(F.col("pred") == "is_a")
-        .select(F.col("obj").alias("id"))
-        .where(F.col("id").endswith("0"))
-        .dropDuplicates()
-    )
-    desc = descendants_of(e, seeds).orderBy("doc_sha", "id", "descendant")
-    rows = desc.collect()
-    for c in caches:
-        c.unpersist()
+    try:
+        e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
+        seeds = (
+            e.where(F.col("pred") == "is_a")
+            .select(F.col("obj").alias("id"))
+            .where(F.col("id").endswith("0"))
+            .dropDuplicates()
+        )
+        desc = descendants_of(e, seeds, persisted_out=caches).orderBy("doc_sha", "id", "descendant")
+        rows = desc.collect()
+    finally:
+        release(caches)
     return spark.createDataFrame(rows, desc.schema)
 
 

@@ -209,17 +209,19 @@ ORDER BY doc_id
 def q_text_chunks(spark: SparkSession, sf: str) -> DataFrame:
     """Overlapping fixed-window chunking (operators/text.py::chunk) —
     context-window prep: chunk i covers chars [i*160, i*160+200), every
-    char covered, 40-char overlap, short docs yield exactly one chunk.
-    Pure sequence/explode/substring — a narrow map over the scan."""
+    char covered, 40-char overlap, short and NULL-text docs yield exactly
+    one chunk. Pure sequence/explode/substring — a narrow map over the scan."""
     docs = load_table(spark, sf, "documents")
     return X.chunk(docs, size=200, stride=160).orderBy("doc_id", "chunk_id")
 
 
 SQL_TEXT_CHUNKS = """
-WITH n AS (
+WITH t AS (
+  SELECT doc_id, coalesce(text, '') AS text FROM documents
+), n AS (
   SELECT doc_id, text,
          CAST(1 + ceil(greatest(length(text) - 200, 0) / 160.0) AS BIGINT) AS n_chunks
-  FROM documents
+  FROM t
 ), c AS (
   SELECT doc_id, text, unnest(range(0, n_chunks)) AS chunk_id FROM n
 )

@@ -20,11 +20,14 @@ import glob
 import hashlib
 import os
 import shutil
+import string
 import subprocess
 import tempfile
+import uuid
+import weakref
 
 from pyspark import SparkContext
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 NIO_LOCAL_FS = "sparkobo.NioLocalFileSystem"
 _NIO_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "NioLocalFileSystem.java")
@@ -150,21 +153,48 @@ def get_spark(
     return spark
 
 
+class _JvmProbes:
+    """The JVM objects the batch counters read, resolved once per
+    SparkContext: every py4j package walk, static lookup and proxy
+    creation is one round trip, and a batch reads the counters twice."""
+
+    def __init__(self, sc: SparkContext):
+        jvm = sc._jvm
+        mf = jvm.java.lang.management.ManagementFactory
+        self.jit = mf.getCompilationMXBean()
+        self.gcs = list(mf.getGarbageCollectorMXBeans())
+        self.codegen = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+        # Hadoop caches the local FileSystem per JVM, so its class is fixed
+        # once the first file:// path is touched
+        fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(sc._jsc.hadoopConfiguration())
+        self.local_fs = fs.getClass().getName()
+
+
+_PROBES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _probes(spark: SparkSession) -> _JvmProbes:
+    sc = spark.sparkContext
+    probes = _PROBES.get(sc)
+    if probes is None:
+        probes = _PROBES[sc] = _JvmProbes(sc)
+    return probes
+
+
 def local_fs_class(spark: SparkSession) -> str:
     """Class of the ``file://`` filesystem this session's writes use:
     :data:`NIO_LOCAL_FS`, or the Hadoop class the session fell back to
     (which forks a ``chmod`` per created file without libhadoop)."""
-    jvm = spark.sparkContext._jvm
-    fs = jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.getClass().getName()
+    return _probes(spark).local_fs
 
 
 def jvm_times(spark: SparkSession) -> tuple[float, float]:
     """(JIT compile seconds, GC seconds) spent so far by this JVM, from its
-    ``CompilationMXBean`` and ``GarbageCollectorMXBean`` s."""
-    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    jit_ms = mf.getCompilationMXBean().getTotalCompilationTime()
-    gc_ms = sum(max(0, b.getCollectionTime()) for b in mf.getGarbageCollectorMXBeans())
+    ``CompilationMXBean`` and ``GarbageCollectorMXBean`` s: one py4j call
+    per bean."""
+    p = _probes(spark)
+    jit_ms = p.jit.getTotalCompilationTime()
+    gc_ms = sum(max(0, b.getCollectionTime()) for b in p.gcs)
     return jit_ms / 1000.0, gc_ms / 1000.0
 
 
@@ -172,5 +202,47 @@ def codegen_compiles(spark: SparkSession) -> int:
     """Janino compiles so far in this JVM (``CodegenMetrics``, a
     process-wide counter); the delta over an op is its codegen cache
     misses."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+    return int(_probes(spark).codegen.getCount())
+
+
+def sql_over(spark: SparkSession, text: str, **frames: DataFrame) -> DataFrame:
+    """``spark.sql(text)`` with each ``{name}`` in ``text`` bound to the
+    DataFrame ``frames[name]``: one parse and one analysis for the whole
+    statement.
+
+    Each frame is bound through a temp view that lives only for the
+    analysis. PySpark's own ``spark.sql(text, name=df)`` does the same but
+    drops its views through ``Catalog.dropTempView``, which also uncaches a
+    persisted DataFrame argument (Spark 4.1: the KG chain silently lost
+    its clause cache and re-ran the parse kernel). This drops them from
+    the session catalog directly, leaving every cache in place. The text
+    must hold no other braces."""
+    used = {field for _, field, _, _ in string.Formatter().parse(text) if field}
+    names = {k: f"_sparkobo_{k}_{uuid.uuid4().hex}" for k in used}
+    for k, name in names.items():
+        frames[k].createOrReplaceTempView(name)
+    try:
+        return spark.sql(text.format(**names))
+    finally:
+        if names:
+            catalog = spark._jsparkSession.sessionState().catalog()
+            for name in names.values():
+                catalog.dropTempView(name)
+
+
+def release(frames) -> None:
+    """Free what each DataFrame in ``frames`` holds: the cache of a
+    persisted one, and the blocks of a ``localCheckpoint`` ed one. The
+    CacheManager does not know local checkpoints, so ``unpersist()``
+    leaves their blocks until the JVM happens to garbage-collect the RDD.
+    Release only frames nothing will read again: a released checkpoint
+    has no lineage to recompute from. Safe on a stopped session."""
+    for df in frames:
+        try:
+            plan = df._jdf.logicalPlan()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+            else:
+                df.unpersist()
+        except Exception:
+            pass  # owning session already torn down

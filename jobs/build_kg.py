@@ -3,9 +3,18 @@
 
 Cluster deployment (north rule: ``spark-submit --py-files``)::
 
-    zip -r fastobo_py_spark.zip fastobo_py_spark
-    spark-submit --py-files fastobo_py_spark.zip jobs/build_kg.py \
+    python tools/package_pyfiles.py dist/fastobo_py_spark.zip
+    spark-submit --py-files dist/fastobo_py_spark.zip \
+        --driver-class-path dist/sparkobo-localfs.jar \
+        --conf spark.hadoop.fs.file.impl=sparkobo.NioLocalFileSystem \
+        jobs/build_kg.py \
         --corpus <parquet-or-iceberg-path> --out <output-dir> [--no-resume]
+
+The two file-system flags route local ``file://`` writes through
+``sparkobo.NioLocalFileSystem`` (the jar the packaging tool builds): the
+JVM ``spark-submit`` starts otherwise keeps Hadoop's own class, which
+forks a ``chmod`` per created file, ``.crc`` file and directory (~470 per
+batch). The batch metrics' ``local_fs`` names the class in effect.
 
 Sandbox smoke::
 

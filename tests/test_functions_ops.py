@@ -836,17 +836,29 @@ def test_corpus_shaping_semantics(spark):
 
     from fastobo_py_spark.operators.text import chunk, sample_threshold, stratified_sample
 
-    # chunk: exactly-one chunk for short/empty docs; full coverage with
-    # the stated overlap for a long one (len 500, size 200, stride 160
-    # → n = 1+ceil(300/160) = 3; last chunk holds 500-320=180 chars)
+    # chunk: exactly-one chunk for short/empty/NULL docs (a NULL text is
+    # the empty string); full coverage with the stated overlap for a long
+    # one (len 500, size 200, stride 160 → n = 1+ceil(300/160) = 3; last
+    # chunk holds 500-320=180 chars)
     docs = spark.createDataFrame(
-        [(1, "x" * 500), (2, "hi"), (3, "")], "doc_id long, text string"
+        [(1, "x" * 500), (2, "hi"), (3, ""), (4, None)], "doc_id long, text string"
     )
-    got = {
-        (r["doc_id"], r["chunk_id"]): r["chunk_len"]
-        for r in chunk(docs, size=200, stride=160).collect()
-    }
-    assert got == {(1, 0): 200, (1, 1): 200, (1, 2): 180, (2, 0): 2, (3, 0): 0}
+    rows = chunk(docs, size=200, stride=160).collect()
+    got = {(r["doc_id"], r["chunk_id"]): r["chunk_len"] for r in rows}
+    assert got == {(1, 0): 200, (1, 1): 200, (1, 2): 180, (2, 0): 2, (3, 0): 0, (4, 0): 0}
+    md5 = {r["doc_id"]: r["chunk_md5"] for r in rows if r["doc_id"] in (3, 4)}
+    assert md5[3] == md5[4] == "d41d8cd98f00b204e9800998ecf8427e"
+    # the text_chunks DuckDB oracle chunks the same fixture the same way
+    import duckdb
+
+    from fastobo_py_spark.contract import compare
+    from fastobo_py_spark.queries.text import SQL_TEXT_CHUNKS
+
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    ok, msg = compare(chunk(docs, size=200, stride=160), con, SQL_TEXT_CHUNKS)
+    con.close()
+    assert ok, msg
 
     # threshold clamping at both ends; interior value is 2-hex
     rates = spark.createDataFrame(

@@ -5,12 +5,14 @@ resolves from the repo checkout)."""
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import subprocess
 import sys
 
 import pyspark
+import pytest
 
 from fastobo_py_spark.session import NIO_LOCAL_FS
 
@@ -18,10 +20,17 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_spark_submit_pyfiles_end_to_end(tmp_path):
+    """The documented submit command: package zip via ``--py-files`` plus
+    the packaged ``sparkobo-localfs.jar`` on the driver class path and
+    ``fs.file.impl`` naming it, so the batch writes through the fork-free
+    filesystem (its metrics' ``local_fs``)."""
     sys.path.insert(0, _REPO)
-    from tools.package_pyfiles import build_zip
+    from tools.package_pyfiles import LOCAL_FS_JAR, build_local_fs_jar, build_zip
 
     zip_path = build_zip(str(tmp_path / "fastobo_py_spark.zip"))
+    jar = build_local_fs_jar(str(tmp_path / LOCAL_FS_JAR))
+    if jar is None:
+        pytest.skip("no javac: the local filesystem jar cannot be built")
     script = tmp_path / "build_kg.py"
     shutil.copy(os.path.join(_REPO, "jobs", "build_kg.py"), script)
     out = tmp_path / "kg_out"
@@ -30,6 +39,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     r = subprocess.run(
         [
             spark_submit, "--master", "local[4]", "--py-files", zip_path,
+            "--driver-class-path", jar, "--conf", f"spark.hadoop.fs.file.impl={NIO_LOCAL_FS}",
             str(script), "--synthetic", "30", "--out", str(out), "--salts", "2",
         ],
         cwd=str(tmp_path),  # bare dir: package must come from the zip
@@ -41,7 +51,8 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert r.returncode == 0, f"spark-submit failed:\n{r.stdout[-2000:]}\n{r.stderr[-4000:]}"
     assert (out / "_manifest").is_dir()
     assert (out / "edges").is_dir()
-    assert (out / "_metrics").is_dir()
+    metrics = [json.loads(p.read_text()) for p in (out / "_metrics").glob("*.json")]
+    assert metrics and all(m["local_fs"] == NIO_LOCAL_FS for m in metrics), metrics
 
 
 _PLAIN_SUBMIT = r"""

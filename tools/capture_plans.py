@@ -60,7 +60,7 @@ def main() -> None:
         "(only dim sides shuffle), final dedup is a HashAggregate reusing the cache "
         "partitioning, doc_sha restored by one co-partitioned dictionary join",
         canonical_edges(cl2),
-        note=WRITE_EXCHANGE_NOTE,
+        note=SQL_STAGES_NOTE + WRITE_EXCHANGE_NOTE,
     )
     show("TPC-H Q5 shape (dims broadcast, AQE shuffles)", q_region_revenue(spark, "/root/testdata/sf0.001"))
 
@@ -136,6 +136,20 @@ with `python tools/capture_plans.py`). What to look for, per the
   fraction of the corpus (tests/test_plan_regression.py enforces both).
 * **AQE** (AdaptiveSparkPlan) wrapping every shuffle so skewed ontology
   hubs re-plan at runtime.
+"""
+
+SQL_STAGES_NOTE = """
+Each stage of the chain is one `spark.sql` statement over SQL text held
+at module level (`session.sql_over`): the combined-kernel input, the
+macro-fused extraction, and the rewrite joins with the dedup
+encode/decode. The JVM analyses each statement once, where Column-API
+construction re-analysed the growing plan after every `join`, `select`
+and `withColumn` (a warm batch made 7,250–7,530 py4j round trips; now
+~1,100). The macro dim (`canonicalize.macro_table_sql`) is one filter over
+the header rows with `rel`/`filler` as `CASE` columns, where it was a
+3-branch `Union` of three scans of the dims cache; the combined-kernel
+input reads the dims cache twice (headers + alias/redirect/equivalence
+rows in one filter, and the macro-covered xrefs), not three times.
 """
 
 WRITE_EXCHANGE_NOTE = """
