@@ -18,8 +18,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.idents import _sql_arg
-
 
 def parse_header_date(col: Column) -> Column:
     """``DD:MM:YYYY HH:MM`` → timestamp (header DateClause).
@@ -37,8 +35,9 @@ def format_header_date(col: Column) -> Column:
 
 # SQL text over a column name or expression ``c`` (the node build embeds
 # it in its one ``spark.sql`` statement; the Column helpers wrap the same
-# text). Brace-free on purpose: the node stage's statement goes through
-# ``str.format`` (``session.sql_over``), so ``\d\d\d\d`` stands for ``\d{4}``.
+# text and take a column name). Brace-free on purpose: the node stage's
+# statement goes through ``str.format`` (``session.sql_over``), so
+# ``\d\d\d\d`` stands for ``\d{4}``.
 _DATE_RE = r"\d\d\d\d-\d\d-\d\d"
 _TIME_RE = r"\d\d:\d\d:\d\d(\.\d+)?"
 _TZ_RE = r"([Zz]|[+-]\d\d:?\d\d)"
@@ -69,22 +68,22 @@ def parse_creation_date_sql(c: str) -> str:
     )
 
 
-def creation_date_kind(col: str | Column) -> Column:
+def creation_date_kind(name: str) -> Column:
     """'date' | 'datetime' | 'datetime_tz' | NULL (unparseable)."""
-    return F.expr(creation_date_kind_sql(_sql_arg(col)))
+    return F.expr(creation_date_kind_sql(name))
 
 
-def creation_date_tz(col: Column) -> Column:
+def creation_date_tz(name: str) -> Column:
     """Original timezone suffix ('Z', '+02:00', ...) or NULL for naive."""
-    tz = F.regexp_extract(col, _TZ_RE + "$", 1)
-    return F.when((creation_date_kind(col) == "datetime_tz") & (tz != ""), tz)
+    tz = F.regexp_extract(F.col(name), _TZ_RE + "$", 1)
+    return F.when((creation_date_kind(name) == "datetime_tz") & (tz != ""), tz)
 
 
-def parse_creation_date(col: str | Column) -> Column:
+def parse_creation_date(name: str) -> Column:
     """ISO date/datetime (naive or zoned) → timestamp.
 
     Plain dates become midnight; zoned datetimes are converted to session
     UTC (keep :func:`creation_date_tz` alongside to round-trip the
     original offset).
     """
-    return F.expr(parse_creation_date_sql(_sql_arg(col)))
+    return F.expr(parse_creation_date_sql(name))

@@ -28,17 +28,15 @@ from fastobo_py_spark.session import release
 _SEEN_COMPACT_EVERY = 8
 
 
-def transitive_ancestors(
-    edges: DataFrame, pred: str = "is_a", max_iter: int = 25, persisted_out: list | None = None
-) -> DataFrame:
+def transitive_ancestors(edges: DataFrame, pred: str = "is_a", max_iter: int = 25) -> DataFrame:
     """(doc_sha, id, ancestor): transitive closure of ``pred`` edges,
     per document (ancestors never cross documents).
 
     Path-doubling fixpoint with ``localCheckpoint`` per round (lineage
     otherwise doubles every iteration) and a one-scalar xor fingerprint
     as the convergence probe (bit_xor cannot overflow under ANSI mode).
-    Each round releases the checkpoint it supersedes. The result is a
-    checkpoint too: it goes to ``persisted_out`` for the caller to
+    Each round releases the checkpoint it supersedes. The returned
+    closure is a checkpoint too: the caller releases it with
     :func:`session.release` once it has read the closure.
     """
     base = (
@@ -71,8 +69,6 @@ def transitive_ancestors(
         if fp == prev_fp:
             break
         prev_fp = fp
-    if persisted_out is not None:
-        persisted_out.append(closure)
     return closure
 
 

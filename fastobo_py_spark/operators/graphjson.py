@@ -61,7 +61,7 @@ def dump_graph(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     n = nodes.select(
         "doc_sha",
         F.struct(
-            decompact_prefixed(F.col("id")).alias("id"),
+            decompact_prefixed("id").alias("id"),
             F.col("name").alias("lbl"),
             # obographs node types: CLASS | PROPERTY | INDIVIDUAL —
             # Instance frames must not collapse to CLASS or a dump/load
@@ -77,11 +77,11 @@ def dump_graph(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     e = edges.select(
         "doc_sha",
         F.struct(
-            decompact_prefixed(F.col("subj")).alias("sub"),
-            F.when(F.col("pred") == "is_a", F.lit("is_a")).otherwise(decompact_prefixed(F.col("pred"))).alias(
+            decompact_prefixed("subj").alias("sub"),
+            F.when(F.col("pred") == "is_a", F.lit("is_a")).otherwise(decompact_prefixed("pred")).alias(
                 "pred"
             ),
-            decompact_prefixed(F.col("obj")).alias("obj"),
+            decompact_prefixed("obj").alias("obj"),
         ).alias("edge"),
     ).groupBy("doc_sha").agg(F.sort_array(F.collect_list("edge")).alias("edges"))
 

@@ -23,20 +23,10 @@ OBO_PURL = "http://purl.obolibrary.org/obo/"
 # Every identifier expression below is SQL text over a column name or
 # expression ``c``: the KG chain embeds it in its per-stage ``spark.sql``
 # statements, and the Column helpers wrap the same text in ``F.expr``, so
-# each rule has one definition. The text holds no braces: the stages'
-# statements go through ``str.format`` (``session.sql_over``).
+# each rule has one definition. The helpers take a column NAME. The text
+# holds no braces: the stages' statements go through ``str.format``
+# (``session.sql_over``).
 _URL_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://"
-
-
-def _sql_arg(col: str | Column) -> str:
-    """SQL text of a helper argument: a column name or SQL expression as
-    given, or a plain column reference (the rule ``spark.sql`` applies to a
-    ``{df.col}`` argument)."""
-    if isinstance(col, str):
-        return col
-    from pyspark.sql import SparkSession
-
-    return SparkSession.active()._jsparkSession.expression(col._jc).sql()
 
 
 def ident_kind_sql(c: str) -> str:
@@ -55,12 +45,12 @@ def edge_idspace_sql(c: str) -> str:
     return f"CASE WHEN {k} = 'prefixed' THEN substring_index({c}, ':', 1) WHEN {k} = 'url' THEN 'URL' ELSE 'UNPREFIXED' END"
 
 
-def ident_kind(col: str | Column) -> Column:
+def ident_kind(name: str) -> Column:
     """'url' | 'prefixed' | 'unprefixed' (dispatch per id.rs:53-63)."""
-    return F.expr(ident_kind_sql(_sql_arg(col)))
+    return F.expr(ident_kind_sql(name))
 
 
-def ident_is_valid(col: Column) -> Column:
+def ident_is_valid(name: str) -> Column:
     """Validity predicate mirroring ``fastobo.id.is_valid``
     (``/root/reference/src/py/id.rs:65-93``: the pest ``Rule::Id`` must
     consume the WHOLE string). Doctest contract: ``MS:1000031`` and
@@ -72,7 +62,7 @@ def ident_is_valid(col: Column) -> Column:
     prefix and a non-empty space-free local part; an unprefixed id is any
     non-empty run without whitespace (colons would make it prefixed).
     """
-    k = ident_kind(col)
+    col, k = F.col(name), ident_kind(name)
     return (
         F.when(col.isNull() | (col == ""), F.lit(False))
         .when(k == "url", col.rlike(r"^[A-Za-z][A-Za-z0-9+.\-]*://\S+$"))
@@ -81,10 +71,10 @@ def ident_is_valid(col: Column) -> Column:
     )
 
 
-def ident_prefix(col: str | Column) -> Column:
+def ident_prefix(name: str) -> Column:
     """Idspace prefix of a prefixed ident, else NULL (PrefixedIdent.prefix,
     id.rs:226-228)."""
-    return F.expr(ident_prefix_sql(_sql_arg(col)))
+    return F.expr(ident_prefix_sql(name))
 
 
 def compact_url(col: Column) -> Column:
@@ -98,15 +88,16 @@ def compact_url(col: Column) -> Column:
     return F.when(m != "", F.concat(pfx, F.lit(":"), loc)).otherwise(col)
 
 
-def decompact_prefixed(col: Column) -> Column:
+def decompact_prefixed(name: str) -> Column:
     """Prefixed → URL via the default OBO PURL rule (doc.rs:250-285).
 
     Only the FIRST colon is the prefix separator — locals may themselves
     contain colons (ms.obo's escaped ``value-type:xsd\\:string``), and a
     replace-all would conflate prefix and local into an unrecoverable
     IRI."""
+    col = F.col(name)
     return F.when(
-        ident_kind(col) == "prefixed",
+        ident_kind(name) == "prefixed",
         F.concat(F.lit(OBO_PURL), F.regexp_replace(col, "^([^:]*):", "$1_")),
     ).otherwise(col)
 
@@ -176,8 +167,8 @@ def compact_with_idspaces(df: DataFrame, ident_col: str, clauses: DataFrame) -> 
     )
 
 
-def edge_idspace(col: str | Column) -> Column:
+def edge_idspace(name: str) -> Column:
     """Partitioning idspace of an ident: prefix for prefixed ids, 'URL'
     bucket for urls, 'UNPREFIXED' otherwise. Drives partitionBy + salting
     (O18)."""
-    return F.expr(edge_idspace_sql(_sql_arg(col)))
+    return F.expr(edge_idspace_sql(name))

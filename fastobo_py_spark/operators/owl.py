@@ -29,12 +29,13 @@ _RDFS_LABEL = "rdfs:label"
 _IAO_DEF = "<http://purl.obolibrary.org/obo/IAO_0000115>"
 
 
-def _iri(col):
-    """Ident → OWL IRI reference (decompact via the OBO PURL rule,
-    wrap URLs in <>; unprefixed idents stay as local abbreviations)."""
-    url = decompact_prefixed(col)
+def _iri(name):
+    """Ident column ``name`` → OWL IRI reference (decompact via the OBO
+    PURL rule, wrap URLs in <>; unprefixed idents stay as local
+    abbreviations)."""
+    url = decompact_prefixed(name)
     return F.when(url.rlike("^[A-Za-z][A-Za-z0-9+.-]*://"), F.concat(F.lit("<"), url, F.lit(">"))).otherwise(
-        col
+        F.col(name)
     )
 
 
@@ -47,7 +48,7 @@ def owl_axioms(clauses: DataFrame) -> DataFrame:
     per row, from one single-scan case projection."""
     ent = clauses.where((F.col("frame_type") != "Header") & (F.col("frame_id") != ""))
     t, v1, v2, vt = F.col("tag"), F.col("v1"), F.col("v2"), F.col("value_text")
-    me = _iri(F.col("frame_id"))
+    me = _iri("frame_id")
     is_typedef = F.col("frame_type") == "Typedef"
     is_instance = F.col("frame_type") == "Instance"
     axiom = (
@@ -59,7 +60,7 @@ def owl_axioms(clauses: DataFrame) -> DataFrame:
         )
         .when(
             (t == "instance_of") & v1.isNotNull(),
-            F.concat(F.lit("ClassAssertion("), _iri(v1), F.lit(" "), me, F.lit(")")),
+            F.concat(F.lit("ClassAssertion("), _iri("v1"), F.lit(" "), me, F.lit(")")),
         )
         .when(
             (t == "name") & vt.isNotNull(),
@@ -75,11 +76,11 @@ def owl_axioms(clauses: DataFrame) -> DataFrame:
         )
         .when(
             (t == "is_a") & v1.isNotNull() & ~is_typedef,
-            F.concat(F.lit("SubClassOf("), me, F.lit(" "), _iri(v1), F.lit(")")),
+            F.concat(F.lit("SubClassOf("), me, F.lit(" "), _iri("v1"), F.lit(")")),
         )
         .when(
             (t == "is_a") & v1.isNotNull() & is_typedef,
-            F.concat(F.lit("SubObjectPropertyOf("), me, F.lit(" "), _iri(v1), F.lit(")")),
+            F.concat(F.lit("SubObjectPropertyOf("), me, F.lit(" "), _iri("v1"), F.lit(")")),
         )
         .when(
             (t == "relationship") & v1.isNotNull() & v2.isNotNull(),
@@ -87,9 +88,9 @@ def owl_axioms(clauses: DataFrame) -> DataFrame:
                 F.lit("SubClassOf("),
                 me,
                 F.lit(" ObjectSomeValuesFrom("),
-                _iri(v1),
+                _iri("v1"),
                 F.lit(" "),
-                _iri(v2),
+                _iri("v2"),
                 F.lit("))"),
             ),
         )
@@ -105,14 +106,15 @@ def _xesc(col):
     return F.regexp_replace(c, '"', "&quot;")
 
 
-def _xiri(col):
-    """Ident → escaped IRI string for an owx IRI= attribute (decompacted
-    via the OBO PURL rule; unprefixed idents stay as-is)."""
-    return _xesc(decompact_prefixed(col))
+def _xiri(name):
+    """Ident column ``name`` → escaped IRI string for an owx IRI=
+    attribute (decompacted via the OBO PURL rule; unprefixed idents stay
+    as-is)."""
+    return _xesc(decompact_prefixed(name))
 
 
-def _xel(name, iri_col):
-    return F.concat(F.lit(f'<{name} IRI="'), _xiri(iri_col), F.lit('"/>'))
+def _xel(name, iri_name):
+    return F.concat(F.lit(f'<{name} IRI="'), _xiri(iri_name), F.lit('"/>'))
 
 
 def owl_axioms_owx(clauses: DataFrame) -> DataFrame:
@@ -125,7 +127,7 @@ def owl_axioms_owx(clauses: DataFrame) -> DataFrame:
     count-comparable axiom for axiom."""
     ent = clauses.where((F.col("frame_type") != "Header") & (F.col("frame_id") != ""))
     t, v1, v2, vt = F.col("tag"), F.col("v1"), F.col("v2"), F.col("value_text")
-    me = F.col("frame_id")
+    me = "frame_id"
     is_typedef = F.col("frame_type") == "Typedef"
     is_instance = F.col("frame_type") == "Instance"
     lit = lambda c: F.concat(F.lit("<Literal>"), _xesc(c), F.lit("</Literal>"))
@@ -151,7 +153,7 @@ def owl_axioms_owx(clauses: DataFrame) -> DataFrame:
             F.struct(
                 F.lit("ClassAssertion").alias("kind"),
                 F.concat(
-                    F.lit("<ClassAssertion>"), _xel("Class", v1), _xel("NamedIndividual", me), F.lit("</ClassAssertion>")
+                    F.lit("<ClassAssertion>"), _xel("Class", "v1"), _xel("NamedIndividual", me), F.lit("</ClassAssertion>")
                 ).alias("xml"),
             ),
         )
@@ -187,7 +189,7 @@ def owl_axioms_owx(clauses: DataFrame) -> DataFrame:
             (t == "is_a") & v1.isNotNull() & ~is_typedef,
             F.struct(
                 F.lit("SubClassOf").alias("kind"),
-                F.concat(F.lit("<SubClassOf>"), _xel("Class", me), _xel("Class", v1), F.lit("</SubClassOf>")).alias(
+                F.concat(F.lit("<SubClassOf>"), _xel("Class", me), _xel("Class", "v1"), F.lit("</SubClassOf>")).alias(
                     "xml"
                 ),
             ),
@@ -199,7 +201,7 @@ def owl_axioms_owx(clauses: DataFrame) -> DataFrame:
                 F.concat(
                     F.lit("<SubObjectPropertyOf>"),
                     _xel("ObjectProperty", me),
-                    _xel("ObjectProperty", v1),
+                    _xel("ObjectProperty", "v1"),
                     F.lit("</SubObjectPropertyOf>"),
                 ).alias("xml"),
             ),
@@ -212,8 +214,8 @@ def owl_axioms_owx(clauses: DataFrame) -> DataFrame:
                     F.lit("<SubClassOf>"),
                     _xel("Class", me),
                     F.lit("<ObjectSomeValuesFrom>"),
-                    _xel("ObjectProperty", v1),
-                    _xel("Class", v2),
+                    _xel("ObjectProperty", "v1"),
+                    _xel("Class", "v2"),
                     F.lit("</ObjectSomeValuesFrom>"),
                     F.lit("</SubClassOf>"),
                 ).alias("xml"),
@@ -307,7 +309,7 @@ def owl_axioms_rdf(clauses: DataFrame) -> DataFrame:
     ``kind`` matches the functional constructor for census parity."""
     ent = clauses.where((F.col("frame_type") != "Header") & (F.col("frame_id") != ""))
     t, v1, v2, vt = F.col("tag"), F.col("v1"), F.col("v2"), F.col("value_text")
-    me = F.col("frame_id")
+    me = "frame_id"
     is_typedef = F.col("frame_type") == "Typedef"
     is_instance = F.col("frame_type") == "Instance"
     about = lambda c: F.concat(F.lit('rdf:about="'), _xiri(c), F.lit('"'))
@@ -327,7 +329,7 @@ def owl_axioms_rdf(clauses: DataFrame) -> DataFrame:
             (t == "instance_of") & v1.isNotNull(),
             F.struct(
                 F.lit("ClassAssertion").alias("kind"),
-                desc(F.concat(F.lit("<rdf:type "), res(v1), F.lit("/>"))).alias("xml"),
+                desc(F.concat(F.lit("<rdf:type "), res("v1"), F.lit("/>"))).alias("xml"),
             ),
         )
         .when(
@@ -361,14 +363,14 @@ def owl_axioms_rdf(clauses: DataFrame) -> DataFrame:
             (t == "is_a") & v1.isNotNull() & ~is_typedef,
             F.struct(
                 F.lit("SubClassOf").alias("kind"),
-                desc(F.concat(F.lit("<rdfs:subClassOf "), res(v1), F.lit("/>"))).alias("xml"),
+                desc(F.concat(F.lit("<rdfs:subClassOf "), res("v1"), F.lit("/>"))).alias("xml"),
             ),
         )
         .when(
             (t == "is_a") & v1.isNotNull() & is_typedef,
             F.struct(
                 F.lit("SubObjectPropertyOf").alias("kind"),
-                desc(F.concat(F.lit("<rdfs:subPropertyOf "), res(v1), F.lit("/>"))).alias("xml"),
+                desc(F.concat(F.lit("<rdfs:subPropertyOf "), res("v1"), F.lit("/>"))).alias("xml"),
             ),
         )
         .when(
@@ -378,9 +380,9 @@ def owl_axioms_rdf(clauses: DataFrame) -> DataFrame:
                 desc(
                     F.concat(
                         F.lit("<rdfs:subClassOf><owl:Restriction><owl:onProperty "),
-                        res(v1),
+                        res("v1"),
                         F.lit("/><owl:someValuesFrom "),
-                        res(v2),
+                        res("v2"),
                         F.lit("/></owl:Restriction></rdfs:subClassOf>"),
                     )
                 ).alias("xml"),

@@ -596,7 +596,8 @@ def q_obo_ancestors(spark: SparkSession, sf: str) -> DataFrame:
     caches: list = []
     try:
         e = canonical_edges(with_doc_key(cl).repartition(n, "doc_key"), persisted_out=caches)
-        anc = transitive_ancestors(e, persisted_out=caches)
+        anc = transitive_ancestors(e)
+        caches.append(anc)
         out = (
             anc.select(edge_idspace("id").alias("idspace"), "id")
             .groupBy("idspace")

@@ -21,7 +21,7 @@ def q_obo_creation_dates(spark: SparkSession, sf: str) -> DataFrame:
 
     nodes = build_nodes(_clauses(spark)).where(F.col("creation_date").isNotNull())
     return (
-        nodes.groupBy(creation_date_kind(F.col("creation_date")).alias("kind"))
+        nodes.groupBy(creation_date_kind("creation_date").alias("kind"))
         .agg(
             F.count("*").alias("n"),
             F.min("creation_date_us").alias("min_us"),
@@ -70,7 +70,7 @@ def q_obo_frame_dicts(spark: SparkSession, sf: str) -> DataFrame:
     fd = frame_dicts(_clauses(spark).where(F.col("frame_id") != ""))
     n_vals = F.aggregate(F.map_values("clauses"), F.lit(0), lambda acc, v: acc + F.size(v))
     return (
-        fd.select(edge_idspace(F.col("frame_id")).alias("idspace"), F.size("clauses").alias("n_tags"), n_vals.alias("n_vals"))
+        fd.select(edge_idspace("frame_id").alias("idspace"), F.size("clauses").alias("n_tags"), n_vals.alias("n_vals"))
         .groupBy("idspace")
         .agg(F.count("*").alias("n_frames"), F.sum("n_tags").alias("sum_tags"), F.sum("n_vals").alias("sum_vals"))
         .orderBy("idspace")
@@ -162,7 +162,7 @@ def q_obo_ident_validity(spark: SparkSession, sf: str) -> DataFrame:
     golden = spark.createDataFrame([(s,) for s in _GOLDEN_IDENTS], "ident string")
     idents = objs.unionByName(golden)
     return (
-        idents.groupBy(ident_kind(F.col("ident")).alias("kind"), ident_is_valid(F.col("ident")).alias("valid"))
+        idents.groupBy(ident_kind("ident").alias("kind"), ident_is_valid("ident").alias("valid"))
         .agg(F.count("*").alias("n"))
         .orderBy("kind", "valid")
     )

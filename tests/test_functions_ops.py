@@ -20,9 +20,9 @@ def test_parse_creation_date(spark):
         "raw string",
     ).select(
         "raw",
-        creation_date_kind(F.col("raw")).alias("kind"),
-        creation_date_tz(F.col("raw")).alias("tz"),
-        parse_creation_date(F.col("raw")).cast("string").alias("ts"),
+        creation_date_kind("raw").alias("kind"),
+        creation_date_tz("raw").alias("tz"),
+        parse_creation_date("raw").cast("string").alias("ts"),
     )
     rows = {r["raw"]: r for r in df.collect()}
     assert rows["2021-01-23"]["kind"] == "date"
@@ -55,7 +55,7 @@ def test_compaction_roundtrip(spark):
     ).select(
         "ident",
         compact_url(F.col("ident")).alias("compacted"),
-        decompact_prefixed(F.col("ident")).alias("decompacted"),
+        decompact_prefixed("ident").alias("decompacted"),
     )
     rows = {r["ident"]: r for r in df.collect()}
     # the doc.rs:219-234 round-trip example
@@ -250,7 +250,7 @@ def test_ident_is_valid(spark):
         ("a b:c", False),
     ]
     df = spark.createDataFrame([(s,) for s, _ in cases], "ident string")
-    got = {r["ident"]: r["ok"] for r in df.select("ident", ident_is_valid(F.col("ident")).alias("ok")).collect()}
+    got = {r["ident"]: r["ok"] for r in df.select("ident", ident_is_valid("ident").alias("ok")).collect()}
     for s, want in cases:
         assert got[s] is want, s
 
