@@ -29,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from fastobo_py_spark.operators.similarity import _dot as _seq_dot
-from fastobo_py_spark.operators.similarity import _norm as _seq_norm
+from fastobo_py_spark.operators.similarity import _dot_hof, _norm_hof
 from fastobo_py_spark.operators.text import fingerprint, normalize_text, word_kgrams
 
 N_MINHASH = 16
@@ -439,9 +438,8 @@ def embedding_near_dup_lsh(
         .where(F.col("vec_a") < F.col("vec_b"))
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    # sequential-fold cosine (similarity._dot/_norm: JVM fold at this
-    # dim; the bit-equal Arrow kernels take over for fat embeddings)
-    cos = _seq_dot(F.col("va"), F.col("vb")) / (_seq_norm(F.col("va")) * _seq_norm(F.col("vb")))
+    # sequential-fold cosine, the same JVM fold the DuckDB oracle mirrors
+    cos = _dot_hof(F.col("va"), F.col("vb")) / (_norm_hof(F.col("va")) * _norm_hof(F.col("vb")))
     return cand.where(cos >= threshold).select("vec_a", "vec_b")
 
 
@@ -455,10 +453,10 @@ def embedding_near_dup_pairs(embeddings: DataFrame, threshold: float = 0.9) -> D
     e = embeddings.select(
         F.col("vec_id"),
         F.col("embedding").cast("array<double>").alias("v"),
-        _seq_norm(F.col("embedding").cast("array<double>")).alias("nrm"),
+        _norm_hof(F.col("embedding").cast("array<double>")).alias("nrm"),
     )
     a = e.select(F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
     b = e.select(F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = _seq_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = _dot_hof(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return pairs.select("vec_a", "vec_b").where(cos >= threshold)

@@ -22,138 +22,27 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from fastobo_py_spark.worker import prune_zip_importers
 
 
+# The cosine terms are Catalyst higher-order folds, the one cosine
+# implementation. They mirror the DuckDB oracle SQL term for term, and
+# below about dim 1024 they beat an Arrow kernel: the fold runs JVM-side
+# with no serialization, while the kernel must ship the whole array
+# column to Python. Measured on local[8], 200k pairs: dim 16 HOF 0.30 s
+# vs Arrow 1.71 s, dim 256 1.33 vs 2.33 s; at dim 1024 the kernel wins
+# (50k pairs: 1.41 vs 0.94 s).
 def _norm_hof(v: Column) -> Column:
-    """Catalyst higher-order fold ‖v‖ — mirrors the DuckDB oracle SQL
-    term-for-term AND is the measured winner at this table's dim=16:
-    the fold runs JVM-side with no serialization, while the Arrow kernel
-    must ship the full array column across the JVM→Python boundary.
-    Measured on local[8], 200k pairs: dim=16 HOF 0.30s vs Arrow 1.71s;
-    dim=256 1.33 vs 2.33; crossover ≈ dim 1024 (50k pairs: 1.41 vs
-    0.94) — swap call sites to norm_udf/dot_udf past that."""
+    """‖v‖ as a left-to-right fold (null → null, empty → 0.0)."""
     return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
 def _dot_hof(a: Column, b: Column) -> Column:
-    """Higher-order-fold dot product (cost model: see :func:`_norm_hof`)."""
+    """a·b as a left-to-right fold; ``zip_with`` pads a shorter array with
+    null, so a length mismatch yields null."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _fold_rows(cols: list, combine, finish) -> pd.Series:
-    """Batch driver for the sequential-fold kernels with exact HOF edge
-    semantics: any null operand → null, empty arrays → fold of nothing
-    (0.0 before ``finish``), equal-length non-empty batch → one
-    vectorized ``np.add.accumulate`` pass (a strict left-to-right fold),
-    ragged batch → per-row accumulate (same fold, row at a time)."""
-    lens = {len(x) for col in cols for x in col if x is not None}
-    uniform = len(lens) == 1 and 0 not in lens and not any(
-        x is None for col in cols for x in col
-    )
-    if uniform:
-        mats = [np.stack([np.asarray(x, dtype="float64") for x in col]) for col in cols]
-        return pd.Series(finish(np.add.accumulate(combine(*mats), axis=1)[:, -1]))
-    out = []
-    for row in zip(*cols):
-        if any(x is None for x in row) or len({len(x) for x in row}) > 1:
-            # null operand, or zip_with length mismatch (null padding
-            # poisons the HOF fold to null) → null, matching the spec
-            out.append(None)
-            continue
-        arrs = [np.asarray(x, dtype="float64") for x in row]
-        prod = combine(*arrs)
-        acc = np.add.accumulate(prod)[-1] if len(prod) else 0.0
-        out.append(float(finish(np.asarray([acc]))[0]))
-    return pd.Series(out, dtype="float64")
-
-
-@pandas_udf(DoubleType())
-def norm_udf(v: pd.Series) -> pd.Series:
-    """Arrow-batched ‖v‖ with SEQUENTIAL summation semantics:
-    ``np.add.accumulate`` is a strict left-to-right fold, so the result is
-    bit-identical to the interpreted ``F.aggregate`` spec and to DuckDB's
-    sequential list fold — float parity at thresholds survives, while the
-    arithmetic runs vectorized in C. This is the HIGH-DIM variant: it
-    pays one Arrow transfer of the array column per call, which loses to
-    the JVM-side fold until ≈dim 1024 (measurements on :func:`_norm_hof`)
-    — call sites default to the HOF and switch here for fat embeddings.
-    numpy's pairwise ``np.sum``/BLAS ``dot`` would round differently and
-    are deliberately NOT used. HOF edge parity: null → null, empty →
-    0.0, ragged batches fall back to the same fold row-wise."""
-    prune_zip_importers()
-    if len(v) == 0:
-        return pd.Series([], dtype="float64")
-    return _fold_rows([v], lambda a: a * a, np.sqrt)
-
-
-@pandas_udf(DoubleType())
-def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Arrow-batched a·b, sequential-fold parity (see :func:`norm_udf`)."""
-    prune_zip_importers()
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    return _fold_rows([a, b], lambda x, y: x * y, lambda z: z)
-
-
-# Codegen fast path (optimization r6, guide §4.1 "prefer built-ins"):
-# F.aggregate/zip_with are CodegenFallback — every element costs an
-# interpreted lambda dispatch. For a statically known dim the SAME
-# left-to-right fold unrolls into a flat arithmetic expression
-# ((0.0 + a1*b1) + a2*b2) + ... that whole-stage codegen compiles.
-# IEEE float addition is evaluated in the identical order, so results
-# are BIT-EQUAL to the HOF fold (pinned by test_cosine_fast_matches_hof);
-# null arrays and null elements poison to null in both (F.get returns
-# null out of range, null * x = null, null + x = null). Rows whose size
-# differs from the unrolled dim fall back to the interpreted HOF, so
-# semantics are unchanged for any input shape.
-FAST_DIMS = (64,)  # the embeddings tables' dim; extend when new corpora land
-
-
-def _chain_dot(a: Column, b: Column, dim: int) -> Column:
-    acc = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + (F.get(a, i) * F.get(b, i))
-    return acc
-
-
-def _chain_sqnorm(v: Column, dim: int) -> Column:
-    acc = F.lit(0.0)
-    for i in range(dim):
-        x = F.get(v, i)
-        acc = acc + (x * x)
-    return acc
-
-
-def _norm_fast(v: Column) -> Column:
-    expr = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    for d in FAST_DIMS:
-        expr = F.when(F.size(v) == d, F.sqrt(_chain_sqnorm(v, d))).otherwise(expr)
-    return expr
-
-
-def _dot_fast(a: Column, b: Column) -> Column:
-    expr = _dot_hof(a, b)
-    for d in FAST_DIMS:
-        expr = F.when((F.size(a) == d) & (F.size(b) == d), _chain_dot(a, b, d)).otherwise(expr)
-    return expr
-
-
-# default cosine impl: the interpreted HOF fold. The codegen-unrolled
-# chain above is bit-equal (pinned by test_cosine_chain_matches_hof) and
-# its generated loop body runs at the same speed at dim 64 (measured
-# 0.389s noop both over 400k pairs at sf1), but CONSTRUCTING it costs
-# ~0.5s of py4j round trips per invocation (~800 Column calls) plus a
-# first-run janino compile of the giant method — full ann_bruteforce
-# cold 2.5s (chain) vs 1.75s (HOF), warm 1.3s vs 0.8s (optimization r6
-# re-measurement, fresh session each). The chain stays available for
-# call sites that build the expression once and reuse it; the Arrow
-# kernels (norm_udf/dot_udf, bit-equal) take over past ≈dim 1024.
-_norm = _norm_hof
-_dot = _dot_hof
 
 
 def brute_force_topk(
@@ -178,10 +67,10 @@ def brute_force_topk(
             F.col("embedding").cast("array<double>").alias("v"),
         ),
         "neighbor_id",
-    ).withColumn("nrm", _norm(F.col("v")))
-    q = queries.withColumn("qnrm", _norm(F.col("q")))
+    ).withColumn("nrm", _norm_hof(F.col("v")))
+    q = queries.withColumn("qnrm", _norm_hof(F.col("q")))
     joined = corp.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    cos = _dot(F.col("v"), F.col("q")) / (F.col("nrm") * F.col("qnrm"))
+    cos = _dot_hof(F.col("v"), F.col("q")) / (F.col("nrm") * F.col("qnrm"))
     scored = joined.select("query_id", "neighbor_id", cos.alias("cos"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
@@ -285,14 +174,14 @@ def lsh_bucketed_topk(embeddings: DataFrame, n_queries: int = 20, k: int = 5, n_
             "vec_id",
         )
         .withColumn("bucket", signature_udf(n_planes, seed)(F.col("v")))
-        .withColumn("nrm", _norm(F.col("v")))
+        .withColumn("nrm", _norm_hof(F.col("v")))
     )
     q = e.where(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("q"), F.col("bucket"),
         F.col("nrm").alias("qnrm"),
     )
     cand = e.join(q, "bucket").where(F.col("vec_id") != F.col("query_id"))
-    cos = _dot(F.col("v"), F.col("q")) / (F.col("nrm") * F.col("qnrm"))
+    cos = _dot_hof(F.col("v"), F.col("q")) / (F.col("nrm") * F.col("qnrm"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))
@@ -470,7 +359,7 @@ def ivf_topk(
             "vec_id",
         )
         .withColumn("cell", F.element_at(cells_udf(n_cells, 1, seed, anchors)(F.col("v")), 1))
-        .withColumn("nrm", _norm(F.col("v")))
+        .withColumn("nrm", _norm_hof(F.col("v")))
     )
     q = (
         e.where(F.col("vec_id") < n_queries)
@@ -482,7 +371,7 @@ def ivf_topk(
         )
     )
     cand = e.join(q, "cell").where(F.col("vec_id") != F.col("query_id"))
-    cos = _dot(F.col("v"), F.col("q")) / (F.col("nrm") * F.col("qnrm"))
+    cos = _dot_hof(F.col("v"), F.col("q")) / (F.col("nrm") * F.col("qnrm"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (
         cand.select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos"))

@@ -40,7 +40,7 @@ from fastobo_py_spark.operators.canonicalize import rewrite_edges_sql
 from fastobo_py_spark.operators.idents import edge_idspace_sql
 from fastobo_py_spark.operators.materialize import build_nodes, graph_writers
 from fastobo_py_spark.operators.parse import parse_corpus, split_parsed
-from fastobo_py_spark.session import codegen_compiles, jvm_times, local_fs_class, sql_over
+from fastobo_py_spark.session import codegen_compiles, jvm_times, local_fs_class, release, sql_over
 
 MANIFEST_COLS = ("doc_sha", "repo", "path", "commit")
 
@@ -249,7 +249,7 @@ def _manifest_part_count(out_dir: str) -> int:
 
 
 # rewrite once fragmentation passes this; target ~128 MB compacted parts
-# (matches the scan split size, like compact_outputs)
+# (matches the scan split size, like snapshots.rewrite_data_files)
 MANIFEST_COMPACT_MAX_PARTS = 128
 _MANIFEST_TARGET_BYTES = 128 << 20
 
@@ -399,16 +399,8 @@ def run_pipeline(
     jit0, gc0 = jvm_times(spark)
     batch_id = uuid.uuid4().hex[:12]
 
-    # self-heal interrupted maintenance before anything reads the tables:
-    # an output-compaction swap killed between its two renames would
-    # otherwise leave a partition leaf invisible to this batch's readers
-    # (the manifest path self-heals inside read_manifest already)
-    recover_output_compactions(out_dir)
-    # ... and re-point the snapshot HEAD at the physical state if a crash
-    # mid-destructive-maintenance left it referencing renamed-away files.
-    # Leaf-scoped heal: intact leaves are untouched, so rolled-back or
-    # orphaned files are NOT resurrected (no-op without a snapshot log);
-    # the heal's listing doubles as this batch's pre-write baseline
+    # a directory that predates the snapshot log gets its baseline import
+    # commit; the listing doubles as this batch's pre-write baseline
     from fastobo_py_spark.plans import snapshots as _snap
 
     pre_files = _snap.ensure_baseline(out_dir)
@@ -424,61 +416,67 @@ def run_pipeline(
     # ~2x the work to report on itself).
     obs = {k: Observation(k) for k in ("parse", "edges", "nodes", "done")}
 
-    # parse ONCE: both the clause and quarantine paths read this cache
-    # (without it the quarantine write re-ran the mapInPandas parse)
-    parsed = parse_corpus(src).persist()
-    clauses, _ = split_parsed(parsed)
-    # clause and quarantine counts ride the quarantine write, the first
-    # and a FULL scan of the parse cache (a limit-style first action would
-    # record a partial count); observed below the split's error filter,
-    # the observation sees every parsed row
-    err = F.col("is_error")
-    _, quarantine = split_parsed(
-        parsed.observe(
-            obs["parse"],
-            F.count(F.when(~err, 1)).alias("clauses"),
-            F.count(F.when(err, 1)).alias("quarantine"),
-        )
-    )
-    quarantine.write.mode("append").parquet(os.path.join(out_dir, "quarantine"))
-
-    # one pass over the corpus feeds every downstream stage; hash-partition
-    # by the BIGINT doc_key surrogate so every doc-keyed operation
-    # downstream (the canonical chain's joins and final dedup, the node
-    # build, the decode dictionary) is satisfied without re-shuffling —
-    # and the partitioner hashes 8 bytes instead of the 64-hex doc_sha
-    from fastobo_py_spark.operators import surrogate as _surrogate
-
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    clauses = _surrogate.with_doc_key(clauses).repartition(n_shuffle, "doc_key").persist()
-
-    # surrogate-key audit (ADVICE r5): a 64-bit doc_key collision would
-    # silently merge two documents' edge scopes. The audit is one
-    # exchange-free aggregate over the just-persisted cache; when it
-    # fires, this batch runs on the exact doc_sha spine instead (its
-    # joins then re-exchange — the documented cost of a corpus where the
-    # surrogate is not injective), and the count is surfaced in the
-    # metrics dict either way.
-    n_key_collisions = _surrogate.audit_doc_keys(clauses).count()
-    spine = "doc_key" if n_key_collisions == 0 else "doc_sha"
-
+    # every persist is released in the finally: a failed write must not
+    # strand the parse, clause and canonical-chain caches in a long-lived
+    # session (the stream's _process_batch does the same per micro-batch)
     caches: list[DataFrame] = []
-    if canonicalize:
-        edges = canonical_edges(clauses, persisted_out=caches, key_col=spine)
-    else:
-        from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
+    try:
+        # parse ONCE: both the clause and quarantine paths read this cache
+        # (without it the quarantine write re-ran the mapInPandas parse)
+        parsed = parse_corpus(src).persist()
+        caches.append(parsed)
+        clauses, _ = split_parsed(parsed)
+        # clause and quarantine counts ride the quarantine write, the first
+        # and a FULL scan of the parse cache (a limit-style first action would
+        # record a partial count); observed below the split's error filter,
+        # the observation sees every parsed row
+        err = F.col("is_error")
+        _, quarantine = split_parsed(
+            parsed.observe(
+                obs["parse"],
+                F.count(F.when(~err, 1)).alias("clauses"),
+                F.count(F.when(err, 1)).alias("quarantine"),
+            )
+        )
+        quarantine.write.mode("append").parquet(os.path.join(out_dir, "quarantine"))
 
-        macro_dims = clauses.where("frame_type = 'Header' OR tag = 'xref'")
-        e = extract_edges_with_macros(clauses, macro_source=macro_dims, key_col=spine)
-        edges = _dedup_edges(e, clauses, spine)
-    # the write_graph layout; its writes are issued from this function so
-    # a tracer that attributes Spark actions to their calling function
-    # (perfbench/trace.py) keeps charging them to this batch's layers
-    for table, writer in graph_writers(build_nodes(clauses), edges, n_salts, row_counts=obs).items():
-        writer.parquet(os.path.join(out_dir, table))
-    parsed.unpersist()
-    for c in caches:
-        c.unpersist()
+        # one pass over the corpus feeds every downstream stage; hash-partition
+        # by the BIGINT doc_key surrogate so every doc-keyed operation
+        # downstream (the canonical chain's joins and final dedup, the node
+        # build, the decode dictionary) is satisfied without re-shuffling —
+        # and the partitioner hashes 8 bytes instead of the 64-hex doc_sha
+        from fastobo_py_spark.operators import surrogate as _surrogate
+
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        clauses = _surrogate.with_doc_key(clauses).repartition(n_shuffle, "doc_key").persist()
+        caches.append(clauses)
+
+        # surrogate-key audit (ADVICE r5): a 64-bit doc_key collision would
+        # silently merge two documents' edge scopes. The audit is one
+        # exchange-free aggregate over the just-persisted cache; when it
+        # fires, this batch runs on the exact doc_sha spine instead (its
+        # joins then re-exchange — the documented cost of a corpus where the
+        # surrogate is not injective), and the count is surfaced in the
+        # metrics dict either way.
+        n_key_collisions = _surrogate.audit_doc_keys(clauses).count()
+        spine = "doc_key" if n_key_collisions == 0 else "doc_sha"
+
+        if canonicalize:
+            edges = canonical_edges(clauses, persisted_out=caches, key_col=spine)
+        else:
+            from fastobo_py_spark.operators.canonicalize import extract_edges_with_macros
+
+            macro_dims = clauses.where("frame_type = 'Header' OR tag = 'xref'")
+            e = extract_edges_with_macros(clauses, macro_source=macro_dims, key_col=spine)
+            edges = _dedup_edges(e, clauses, spine)
+        # the write_graph layout; its writes are issued from this function so
+        # a tracer that attributes Spark actions to their calling function
+        # (perfbench/trace.py) keeps charging them to this batch's layers
+        writers = graph_writers(build_nodes(clauses), edges, n_salts, row_counts=obs)
+        for table, writer in writers.items():
+            writer.parquet(os.path.join(out_dir, table))
+    finally:
+        release(caches)
 
     # snapshot commit: the batch's part files become visible to
     # read_table_at readers HERE, in one atomic rename — before the
@@ -533,190 +531,9 @@ def run_pipeline(
         "jvm_jit_s": round(jit1 - jit0, 3),
         "jvm_gc_s": round(gc1 - gc0, 3),
     }
-    clauses.unpersist()
     metrics_dir = os.path.join(out_dir, "_metrics")
     os.makedirs(metrics_dir, exist_ok=True)
     with open(os.path.join(metrics_dir, f"{batch_id}.json"), "w") as fh:
         json.dump(metrics, fh)
     return metrics
 
-
-# ---------------------------------------------------------------------------
-# Output-table small-file compaction (the DATA-file analogue of
-# compact_manifest; Iceberg's rewrite_data_files on plain parquet)
-# ---------------------------------------------------------------------------
-
-def _leaf_part_dirs(root: str) -> list[str]:
-    """Partition leaf dirs (contain parquet parts directly) under a
-    partitioned table root."""
-    out = []
-    for dirpath, dirnames, filenames in os.walk(root):
-        if any(f.endswith(".parquet") for f in filenames):
-            out.append(dirpath)
-    return sorted(out)
-
-
-def _compact_tmp_root(out_dir: str) -> str:
-    return os.path.join(out_dir, "_compact_tmp")
-
-
-# Leaf-path encoding for _compact_tmp entries. quote(rel, safe="") is
-# injective: '%' itself is encoded, so a partition VALUE containing
-# Spark's own %2F escape (idspace 'a/b' writes the leaf dir idspace=a%2Fb)
-# round-trips exactly instead of being restored as nested a/b dirs.
-_OLD_SUFFIX = "%old"  # impossible in quote() output: '%' is always + 2 hex
-
-
-def _enc_leaf(rel: str) -> str:
-    from urllib.parse import quote
-
-    return quote(rel, safe="")
-
-
-def _dec_leaf(name: str) -> str:
-    from urllib.parse import unquote
-
-    return unquote(name)
-
-
-def recover_output_compactions(out_dir: str) -> int:
-    """Crash recovery for :func:`compact_outputs`: restore any leaf whose
-    swap was interrupted. Preference order — a fully-committed compacted
-    copy (has ``_SUCCESS``), else the displaced original (``*.old``).
-    Returns the number of leaves restored."""
-    tmp_root = _compact_tmp_root(out_dir)
-    if not os.path.isdir(tmp_root):
-        return 0
-    restored = 0
-    entries = sorted(os.listdir(tmp_root))
-    entry_set = set(entries)
-    for name in entries:
-        if name.endswith(_OLD_SUFFIX):
-            continue  # displaced-original marker; consumed via its base entry
-        if name.endswith(".old"):
-            # pre-r5 releases suffixed displaced originals with '.old'
-            # (not the injective '%old'), so an entry ending '.old' is
-            # ambiguous with a real leaf whose partition VALUE ends in
-            # '.old'. Precise discriminator (code-review r5 ×3): a
-            # CURRENT-format in-flight swap of a genuine '*.old' leaf
-            # always carries either a committed compacted copy
-            # (_SUCCESS inside the tmp entry — Spark writes it at the
-            # write root) or a '%old' displaced-original sibling; a
-            # legacy '.old' displaced-original dir is a partition leaf
-            # and has NEITHER (leaves hold only parquet parts). Skip
-            # exactly the latter — it is consumed as its base entry's
-            # restore fallback below, or is completed-swap debris.
-            if not (
-                os.path.exists(os.path.join(tmp_root, name, "_SUCCESS"))
-                or name + _OLD_SUFFIX in entry_set
-            ):
-                continue
-        tmp = os.path.join(tmp_root, name)
-        leaf = os.path.join(out_dir, _dec_leaf(name))
-        if os.path.isdir(leaf):
-            continue  # swap completed; leftover tmp is cleaned below
-        src = tmp if os.path.exists(os.path.join(tmp, "_SUCCESS")) else tmp + _OLD_SUFFIX
-        if not os.path.isdir(src):
-            src = tmp + ".old"  # pre-r5 displaced-original suffix
-        if os.path.isdir(src):
-            os.makedirs(os.path.dirname(leaf), exist_ok=True)
-            os.rename(src, leaf)
-            restored += 1
-    return restored
-
-
-def compact_outputs(
-    spark: SparkSession,
-    out_dir: str,
-    tables: tuple = ("nodes", "edges"),
-    max_parts: int = 32,
-    target_bytes: int = 128 << 20,
-) -> dict:
-    """Collapse fragmented partition leaves of the output tables.
-
-    Every ``run_pipeline`` batch appends part files into each (idspace)
-    / (idspace, salt) leaf it touches; after thousands of batches a hot
-    partition holds thousands of tiny files and every reader pays the
-    open-cost tax. This rewrites any leaf with more than ``max_parts``
-    parquet parts down to ceil(bytes / target_bytes) files (the 128 MB
-    default matches the scan split size, so compacted files map 1:1 to
-    read partitions).
-
-    Same crash-safety contract as :func:`compact_manifest`, adapted to a
-    partitioned tree: the rewrite commits (``_SUCCESS``) OUTSIDE the
-    table root (``_compact_tmp`` — partition discovery never sees
-    half-written data), then two renames swap it in; an interrupted swap
-    is healed by :func:`recover_output_compactions`, which this function
-    runs first. Maintenance op by design — run it out-of-band like
-    Iceberg's rewrite_data_files, not inside the ingest commit path.
-
-    Snapshot interaction: this compactor is DESTRUCTIVE — it deletes the
-    fragmented originals, so when a snapshot log exists it finishes by
-    committing a replace snapshot from the physical state and EXPIRING
-    all history (older snapshots referenced the deleted files). It
-    REFUSES to run while tags exist: a tag is a retention pin, and the
-    destructive swap would strand it pointing at deleted files
-    (code-review r5). Use
-    :func:`fastobo_py_spark.plans.snapshots.rewrite_data_files` to
-    compact while retaining time travel and tags.
-    """
-    import shutil
-
-    from fastobo_py_spark.plans import snapshots as _snap
-
-    _snap._refuse_pending_deletes(out_dir, tables, "compact_outputs")
-    branches = _snap.list_branches(out_dir)
-    if branches:
-        # a staged branch's part files sit physically inside the table
-        # leaves: the destructive rewrite would merge the UNAUDITED batch
-        # into main and strand the branch ref on deleted files
-        raise ValueError(
-            f"compact_outputs is destructive and would absorb/strand staged "
-            f"branches {sorted(branches)}; publish or delete them first, or use "
-            f"snapshots.rewrite_data_files"
-        )
-    tags = _snap.list_tags(out_dir)
-    if tags:
-        raise ValueError(
-            f"compact_outputs is destructive and would strand tagged snapshots "
-            f"{sorted(tags)}; use snapshots.rewrite_data_files (non-destructive) "
-            f"or delete the tags first"
-        )
-    recover_output_compactions(out_dir)
-    tmp_root = _compact_tmp_root(out_dir)
-    stats = {"leaves_seen": 0, "leaves_compacted": 0, "parts_before": 0, "parts_after": 0}
-    for t in tables:
-        root = os.path.join(out_dir, t)
-        if not os.path.isdir(root):
-            continue
-        for leaf in _leaf_part_dirs(root):
-            parts = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
-            stats["leaves_seen"] += 1
-            if len(parts) <= max_parts:
-                continue
-            n_bytes = sum(os.path.getsize(os.path.join(leaf, f)) for f in parts)
-            n_out = max(1, (n_bytes + target_bytes - 1) // target_bytes)
-            rel = os.path.relpath(leaf, out_dir)
-            enc = _enc_leaf(rel)
-            tmp = os.path.join(tmp_root, enc)
-            shutil.rmtree(tmp, ignore_errors=True)
-            # mergeSchema: a leaf mixing pre-/post-evolution files must not
-            # be compacted down to one file's schema (columns silently lost)
-            spark.read.option("mergeSchema", "true").parquet(leaf).repartition(n_out).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            old = tmp + _OLD_SUFFIX
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(leaf, old)
-            os.rename(tmp, leaf)
-            shutil.rmtree(old, ignore_errors=True)
-            stats["leaves_compacted"] += 1
-            stats["parts_before"] += len(parts)
-            stats["parts_after"] += int(n_out)
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    if stats["leaves_compacted"]:
-        from fastobo_py_spark.plans import snapshots as _snap
-
-        if _snap.sync_snapshot_to_disk(out_dir, op="replace", tables=tables) is not None:
-            stats["snapshots_expired"] = _snap.expire_snapshots(out_dir, keep_last=1, tables=tables)
-    return stats

@@ -24,17 +24,16 @@ multi-writer): one pipeline commits at a time per output dir. Crash
 windows are all safe-by-construction:
 
   * data files written, snapshot not committed → orphan files, invisible
-    to snapshot readers. The entry heal does NOT adopt them (that would
-    resurrect rolled-back batches — :func:`heal_snapshot` and
-    ``test_heal_does_not_resurrect_rolled_back_data`` pin this); the
-    batch's idempotent rerun re-ingests the same docs (its manifest
-    append happens AFTER the snapshot commit, so the crashed batch was
-    never recorded) and :func:`remove_orphan_files` reaps the debris
-    out-of-band. A crash mid-DESTRUCTIVE-compaction is the one state the
-    heal must repair, and it is distinguishable PER LEAF: there — and
-    only there — HEAD references files that no longer exist, so
-    :func:`heal_snapshot` re-points exactly those broken leaves at the
-    leaf's on-disk files (the only surviving copy of that data).
+    to snapshot readers. No writer adopts them (that would resurrect
+    rolled-back batches — ``test_heal_does_not_resurrect_rolled_back_data``
+    pins this); the batch's idempotent rerun re-ingests the same docs
+    (its manifest append happens AFTER the snapshot commit, so the
+    crashed batch was never recorded) and :func:`remove_orphan_files`
+    reaps the debris out-of-band. No op here removes a file HEAD still
+    references — compaction is :func:`rewrite_data_files` behind a
+    replace snapshot, and only :func:`expire_snapshots` deletes the
+    files that history alone references — so HEAD never points at a
+    missing file and writers need no entry repair.
   * snapshot committed, HEAD not advanced → an unreferenced snapshot;
     the next commit parents from HEAD so the orphan snapshot is simply
     unreachable, and :func:`expire_snapshots` removes it.
@@ -417,8 +416,9 @@ def _apply_eq_deletes(
 
 
 # ops whose added files carry NEW rows (an incremental scan reads them) vs
-# ops that only re-arrange existing rows (compaction/heal — skipped, exactly
-# like Iceberg's incremental append scan skips REPLACE snapshots). Anything
+# ops that only re-arrange existing rows (compaction — skipped, exactly
+# like Iceberg's incremental append scan skips REPLACE snapshots; "heal"
+# is the same kind of commit in logs that older builds wrote). Anything
 # else (op="delete" removes rows) makes the append scan undefined → raise.
 _APPEND_OPS = frozenset({"append", "stream-append", "import"})
 _ROW_PRESERVING_OPS = frozenset({"replace", "heal"})
@@ -432,8 +432,8 @@ def incremental_files(
     Iceberg's incremental append scan over the parent chain, EXCLUSIVE of
     ``from`` and inclusive of ``to``.
 
-    Walks to→from collecting ``added`` of append-op snapshots; replace/
-    heal snapshots contribute nothing (their files re-arrange rows that
+    Walks to→from collecting ``added`` of append-op snapshots; replace
+    snapshots contribute nothing (their files re-arrange rows that
     either predate the range or were already collected from the append
     that produced them — old files stay on disk until
     :func:`expire_snapshots`, so reading the ORIGINAL append files is
@@ -732,67 +732,6 @@ def remove_orphan_files(out_dir: str, tables: tuple = TABLES) -> int:
     return deleted
 
 
-def sync_snapshot_to_disk(out_dir: str, op: str = "replace", tables: tuple = TABLES) -> dict | None:
-    """Commit a snapshot whose file sets equal the CURRENT physical
-    listing. For DESTRUCTIVE maintenance (compact_outputs) that changed
-    files outside the snapshot protocol — adopts everything on disk, so
-    never use it as a routine heal (it would resurrect rolled-back data
-    and crashed-rewrite leftovers; that is :func:`heal_snapshot`'s job).
-    No-op (returns None) when no snapshot log exists or disk already
-    matches HEAD."""
-    if not os.path.isdir(_snap_root(out_dir)):
-        return None
-    on_disk = list_data_files(out_dir, tables)
-    try:
-        prev = {t: set(resolve_files(out_dir, t)) for t in tables}
-    except ValueError:
-        prev = {t: set() for t in tables}
-    added = {t: sorted(on_disk[t] - prev[t]) for t in tables}
-    removed = {t: sorted(prev[t] - on_disk[t]) for t in tables}
-    if not any(added.values()) and not any(removed.values()):
-        return None
-    return commit_snapshot(out_dir, added=added, removed=removed, op=op)
-
-
-def heal_snapshot(out_dir: str, tables: tuple = TABLES) -> tuple[dict | None, dict[str, set]]:
-    """Entry heal for a crash mid-DESTRUCTIVE-maintenance, per partition
-    LEAF: where HEAD references files that no longer exist (the leaf was
-    swapped to compacted names before the maintenance op could commit its
-    snapshot), replace that leaf's references with the leaf's on-disk
-    files. Leaves whose references are intact are left alone — so
-    rolled-back batches, crashed non-destructive rewrites, and plain
-    ingest orphans stay INVISIBLE (remove_orphan_files reaps them) rather
-    than being resurrected into HEAD. Leaf granularity is sound because
-    compact_outputs swaps whole leaf dirs atomically.
-
-    Returns (heal snapshot or None, current physical listing) so callers
-    can reuse the walk."""
-    if not os.path.isdir(_snap_root(out_dir)):
-        return None, list_data_files(out_dir, tables)
-    on_disk = list_data_files(out_dir, tables)
-    try:
-        prev = {t: set(resolve_files(out_dir, t)) for t in tables}
-    except ValueError:
-        prev = {t: set() for t in tables}
-    added: dict[str, list] = {}
-    removed: dict[str, list] = {}
-    for t in tables:
-        broken_leaves = {
-            os.path.dirname(rel)
-            for rel in prev[t]
-            if not os.path.exists(os.path.join(out_dir, rel))
-        }
-        if not broken_leaves:
-            continue
-        removed[t] = sorted(r for r in prev[t] if os.path.dirname(r) in broken_leaves)
-        added[t] = sorted(
-            r for r in on_disk[t] if os.path.dirname(r) in broken_leaves and r not in prev[t]
-        )
-    if not any(added.values()) and not any(removed.values()):
-        return None, on_disk
-    return commit_snapshot(out_dir, added=added, removed=removed, op="heal"), on_disk
-
-
 # ---------------------------------------------------------------------------
 # Named refs (Iceberg tags) — durable names for snapshots
 # ---------------------------------------------------------------------------
@@ -921,14 +860,13 @@ def fast_forward(out_dir: str, branch: str) -> str:
 
 def ensure_baseline(out_dir: str) -> dict[str, set]:
     """Entry-time snapshot hygiene shared by every writer (batch
-    ``run_pipeline``, streaming ``stream_build_kg``): leaf-scoped heal of
-    a crashed destructive maintenance (:func:`heal_snapshot`), then — if
-    the directory predates the snapshot log — a baseline ``op='import'``
-    commit covering the existing files (Iceberg's migrate-table
-    analogue), so the first real snapshot's delta doesn't strand them
-    outside every chain. Returns the current physical listing (reusable
-    as the caller's pre-write baseline)."""
-    _heal, on_disk = heal_snapshot(out_dir)
+    ``run_pipeline``, streaming ``stream_build_kg``): if the directory
+    predates the snapshot log, a baseline ``op='import'`` commit covers
+    the existing files (Iceberg's migrate-table analogue), so the first
+    real snapshot's delta doesn't strand them outside every chain.
+    Returns the current physical listing (reusable as the caller's
+    pre-write baseline)."""
+    on_disk = list_data_files(out_dir)
     # "predates the snapshot log" means NO snapshots exist at all — not
     # merely "main has no commit yet": a branch-only dir (first batch
     # staged via WAP) has HEAD unset but a live log, and importing its
@@ -956,12 +894,13 @@ def rewrite_data_files(
     correctly throughout; a crash at ANY point leaves either invisible
     orphan files (cleaned by :func:`remove_orphan_files`) or nothing.
 
-    This is the snapshot-native alternative to the destructive
-    ``pipeline.compact_outputs`` (which serves plain-path readers and
-    forfeits history). Only :func:`read_table_at` readers see a
-    consistent table during/after this op — a plain
-    ``spark.read.parquet(root)`` would double-count until expiration,
-    exactly as listing an Iceberg data dir would.
+    This is the package's one output compactor. Only
+    :func:`read_table_at` readers see a consistent table during/after
+    this op — a plain ``spark.read.parquet(root)`` would double-count
+    until expiration, exactly as listing an Iceberg data dir would.
+    Follow it with ``expire_snapshots(keep_last=1)`` to drop the
+    replaced files: the leaves are then compacted, one snapshot remains,
+    and a plain-path read sees each row once.
 
     ``sort_by`` switches from Iceberg's binpack strategy to its SORT
     strategy: every leaf is rewritten (not just fragmented ones) with
@@ -975,7 +914,10 @@ def rewrite_data_files(
     import shutil
 
     if current_snapshot_id(out_dir) is None:
-        raise ValueError("rewrite_data_files needs a snapshot log; use compact_outputs instead")
+        raise ValueError(
+            "rewrite_data_files needs a snapshot on main; run_pipeline commits one "
+            "(a pre-snapshot directory gets an import baseline on its next batch)"
+        )
     _refuse_pending_deletes(out_dir, tables, "rewrite_data_files")
     cid = uuid.uuid4().hex[:8]
     tmp_root = os.path.join(out_dir, f"_rewrite_tmp-{cid}")

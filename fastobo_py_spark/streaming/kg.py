@@ -105,14 +105,12 @@ def stream_build_kg(
     ``availableNow`` drains the backlog then stops (test/batch-catchup
     mode); production drops it for continuous micro-batches.
     """
-    # same entry hygiene as the batch pipeline (code-review r5: the
-    # stream path skipped it, stranding legacy files outside every
-    # snapshot and never healing a crashed destructive compaction)
+    # same entry hygiene as the batch pipeline: without it a directory
+    # that predates the snapshot log strands its files outside every
+    # snapshot
     from fastobo_py_spark.plans import snapshots as _snap
-    from fastobo_py_spark.plans.pipeline import recover_output_compactions
 
     os.makedirs(out_dir, exist_ok=True)
-    recover_output_compactions(out_dir)
     _snap.ensure_baseline(out_dir)
 
     reader = spark.readStream.schema(CORPUS_SCHEMA)

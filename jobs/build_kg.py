@@ -25,10 +25,12 @@ recorded in ``<out>/_manifest``; a rerun anti-joins the corpus against it
 and only processes the remainder (plans/pipeline.py O19).
 
 Maintenance flags run in a FIXED order after the batch — publish-branch
-(so later ops apply to the published main), compact-outputs OR
-rewrite-data-files, delete-where, merge-into, eq-delete-where,
-materialize-deletes, expire-snapshots, remove-orphans, tag (last, so
-the pinned snapshot reflects every maintenance op of this run).
+(so later ops apply to the published main), rewrite-data-files,
+delete-where, merge-into, eq-delete-where, materialize-deletes,
+expire-snapshots, remove-orphans, tag (last, so the pinned snapshot
+reflects every maintenance op of this run). Output compaction is
+``--rewrite-data-files --expire-snapshots 1``: compacted leaves, one
+snapshot, and a plain-path read that sees each row once.
 Statically-fatal combinations are rejected before Spark starts.
 """
 
@@ -56,20 +58,15 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--no-resume", action="store_true", help="ignore the manifest and reprocess everything")
     ap.add_argument("--no-canonicalize", action="store_true")
     ap.add_argument("--salts", type=int, default=16, help="hub-salt fanout for edge writes")
-    ap.add_argument(
-        "--compact-outputs",
-        action="store_true",
-        help="after the batch, rewrite fragmented (idspace, salt) output "
-        "leaves (crash-safe; Iceberg rewrite_data_files analogue)",
-    )
     ap.add_argument("--compact-max-parts", type=int, default=32,
-                    help="rewrite a leaf once it holds more parquet parts than this")
+                    help="with --rewrite-data-files: rewrite a leaf once it holds "
+                    "more parquet parts than this")
     ap.add_argument(
         "--rewrite-data-files",
         action="store_true",
         help="after the batch, compact fragmented leaves NON-destructively "
         "behind one replace snapshot (time travel preserved until "
-        "--expire-snapshots); mutually exclusive with --compact-outputs",
+        "--expire-snapshots)",
     )
     ap.add_argument(
         "--rewrite-sort-by",
@@ -156,9 +153,6 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
     if args.synthetic is not None and args.synthetic <= 0:
         ap.error("--synthetic must be a positive document count")
-    if args.compact_outputs and args.rewrite_data_files:
-        ap.error("--compact-outputs (destructive) and --rewrite-data-files "
-                 "(snapshot-preserving) are mutually exclusive")
     rewrite_sort_cols = [c for c in (args.rewrite_sort_by or "").split(",") if c]
     if rewrite_sort_cols and not args.rewrite_data_files:
         ap.error("--rewrite-sort-by requires --rewrite-data-files")
@@ -195,7 +189,7 @@ def main(argv: list[str] | None = None) -> int:
         if not merge_on_cols:
             ap.error("--merge-on needs at least one key column")
 
-    from fastobo_py_spark.plans.pipeline import compact_outputs, run_pipeline
+    from fastobo_py_spark.plans.pipeline import run_pipeline
     from fastobo_py_spark.session import get_spark
 
     spark = get_spark(app_name="fastobo-build-kg", master=args.master)
@@ -223,10 +217,6 @@ def main(argv: list[str] | None = None) -> int:
             from fastobo_py_spark.plans import snapshots as snap
 
             metrics["published_snapshot"] = snap.fast_forward(args.out, args.publish_branch)
-        if args.compact_outputs:
-            metrics["output_compaction"] = compact_outputs(
-                spark, args.out, max_parts=args.compact_max_parts
-            )
         if args.rewrite_data_files:
             from fastobo_py_spark.plans import snapshots as snap
 

@@ -435,105 +435,6 @@ def test_real_decode_strict_without_pillow(spark):
     assert extract_features(media, dim=8).count() == 6
 
 
-def test_cosine_udf_matches_hof(spark):
-    """The Arrow sequential-fold kernels must equal the interpreted
-    Catalyst HOF spec BIT-FOR-BIT on real embeddings — this is the
-    float-parity contract the DuckDB threshold comparisons rest on."""
-    from fastobo_py_spark.operators.similarity import _dot_hof, _norm_hof, dot_udf, norm_udf
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .limit(200)
-    )
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).limit(2000)
-    diff = pairs.select(
-        (norm_udf("va") == _norm_hof(F.col("va"))).alias("n_eq"),
-        (dot_udf("va", "vb") == _dot_hof(F.col("va"), F.col("vb"))).alias("d_eq"),
-    )
-    bad = diff.where(~F.col("n_eq") | ~F.col("d_eq")).count()
-    assert bad == 0
-
-
-def test_cosine_udf_edge_semantics(spark):
-    """The Arrow kernels keep the HOF's edge semantics instead of
-    crashing: empty array → 0.0 norm / 0.0 dot, null → null, mismatched
-    zip lengths → null (null padding poisons the fold)."""
-    from fastobo_py_spark.operators.similarity import _norm_hof, dot_udf, norm_udf
-
-    rows = [
-        (1, [1.0, 2.0], [3.0, 4.0]),
-        (2, [], []),
-        (3, None, [1.0]),
-        (4, [1.0, 2.0, 3.0], [1.0]),  # ragged batch + zip mismatch
-    ]
-    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
-    got = {
-        r["id"]: (r["n"], r["d"])
-        for r in df.select(
-            "id", norm_udf("a").alias("n"), dot_udf("a", "b").alias("d")
-        ).collect()
-    }
-    assert got[1] == (pytest.approx(5.0**0.5), 11.0)
-    assert got[2] == (0.0, 0.0)
-    assert got[3] == (None, None)
-    assert got[4][1] is None  # dot over mismatched lengths -> null like zip_with
-    # HOF agreement on the same frame (norm side; dot nulls already pinned)
-    hof = {r["id"]: r["nh"] for r in df.select("id", _norm_hof(F.col("a")).alias("nh")).collect()}
-    assert {k: v[0] for k, v in got.items()} == hof
-
-
-def test_cosine_chain_matches_hof(spark):
-    """The codegen-unrolled chain fold (FAST_DIMS fast path) must equal
-    the interpreted HOF fold BIT-FOR-BIT — it evaluates IEEE additions in
-    the identical left-to-right order — including the fallback for rows
-    whose size is not an unrolled dim."""
-    from fastobo_py_spark.operators.similarity import (
-        FAST_DIMS,
-        _dot_fast,
-        _dot_hof,
-        _norm_fast,
-        _norm_hof,
-    )
-
-    d = FAST_DIMS[0]
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-        .limit(64)
-    )
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))
-    b = emb.select(F.col("vec_id").alias("ib"), F.col("v").alias("vb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).limit(500)
-    bad = (
-        pairs.select(
-            (_norm_fast(F.col("va")) == _norm_hof(F.col("va"))).alias("n_eq"),
-            (_dot_fast(F.col("va"), F.col("vb")) == _dot_hof(F.col("va"), F.col("vb"))).alias("d_eq"),
-        )
-        .where(~F.col("n_eq") | ~F.col("d_eq"))
-        .count()
-    )
-    assert bad == 0
-    # non-unrolled dim falls back to the HOF branch: still equal
-    short = spark.createDataFrame(
-        [(1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]), (2, None, [1.0]), (3, [], [])],
-        "id long, a array<double>, b array<double>",
-    )
-    assert d not in (3, 0)
-    rows = short.select(
-        "id",
-        (_norm_fast(F.col("a"))).alias("nf"),
-        (_norm_hof(F.col("a"))).alias("nh"),
-        (_dot_fast(F.col("a"), F.col("b"))).alias("df_"),
-        (_dot_hof(F.col("a"), F.col("b"))).alias("dh"),
-    ).collect()
-    for r in rows:
-        assert r["nf"] == r["nh"]
-        assert r["df_"] == r["dh"]
-
-
 def test_ragged_batch_malformed_row_is_isolated(spark):
     """One over-length malformed vector in a batch must NOT null-bucket
     the normal-dim vectors sharing its Arrow batch (ADVICE r4): the

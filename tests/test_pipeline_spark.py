@@ -696,10 +696,16 @@ def test_descendants_of_is_reverse_bfs(spark):
 
 
 def test_output_compaction_preserves_table(spark, corpus):
-    """compact_outputs: fragment the partitioned outputs via two batch
-    appends, force a full compaction, and assert identical row content,
-    intact partition discovery, and fewer files."""
-    from fastobo_py_spark.plans.pipeline import _leaf_part_dirs, compact_outputs, run_pipeline
+    """Output compaction is ``snapshots.rewrite_data_files`` then
+    ``expire_snapshots(keep_last=1)``: fragment the partitioned outputs
+    via two batch appends, compact every leaf, and assert the same rows
+    through the plain path and the snapshot reader, intact partition
+    discovery, fewer files, one snapshot, and an idempotent second pass."""
+    import os
+    from collections import Counter
+
+    from fastobo_py_spark.plans import snapshots as S
+    from fastobo_py_spark.plans.pipeline import run_pipeline
 
     out = tempfile.mkdtemp(prefix="kg_outcompact_")
     try:
@@ -707,156 +713,60 @@ def test_output_compaction_preserves_table(spark, corpus):
         run_pipeline(spark, half, out, canonicalize=False)
         run_pipeline(spark, corpus, out, canonicalize=False)
 
-        def census(tbl):
-            df = spark.read.parquet(f"{out}/{tbl}")
-            return df.count(), set(df.columns)
+        def census(df):
+            cols = sorted(df.columns)
+            rows = Counter(r[0] for r in df.select(F.to_json(F.struct(*cols))).collect())
+            return rows, set(cols)
 
-        def n_parts(tbl):
-            import os as _os
+        def reads(t):
+            return census(spark.read.parquet(f"{out}/{t}")), census(S.read_table_at(spark, out, t))
+
+        def n_parts(t):
             return sum(
-                sum(1 for f in _os.listdir(d) if f.endswith(".parquet"))
-                for d in _leaf_part_dirs(f"{out}/{tbl}")
+                sum(1 for f in files if f.endswith(".parquet"))
+                for _d, _s, files in os.walk(f"{out}/{t}")
             )
 
-        before = {t: census(t) for t in ("nodes", "edges")}
-        parts_before = {t: n_parts(t) for t in ("nodes", "edges")}
-        st = compact_outputs(spark, out, max_parts=0, target_bytes=1 << 30)
-        assert st["leaves_compacted"] > 0
-        for t in ("nodes", "edges"):
-            assert census(t) == before[t]
+        before = {t: reads(t) for t in S.TABLES}
+        parts_before = {t: n_parts(t) for t in S.TABLES}
+        assert all(plain == snap for plain, snap in before.values())
+        st = S.rewrite_data_files(spark, out, max_parts=0)
+        assert st["leaves_rewritten"] > 0
+        S.expire_snapshots(out, keep_last=1)
+        assert len(S.list_snapshots(out)) == 1
+        for t in S.TABLES:
+            assert reads(t) == before[t]
             assert n_parts(t) < parts_before[t]
-        # edges keep the (idspace, salt) partition layout after the swap
-        assert {"idspace", "salt"} <= census("edges")[1]
+        # edges keep the (idspace, salt) partition layout after the rewrite
+        assert {"idspace", "salt"} <= before["edges"][0][1]
+        assert {"idspace", "salt"} <= reads("edges")[0][1]
         # idempotent: a second pass finds nothing above threshold
-        st2 = compact_outputs(spark, out, max_parts=1, target_bytes=1 << 30)
-        assert st2["leaves_compacted"] == 0
+        assert S.rewrite_data_files(spark, out, max_parts=1)["leaves_rewritten"] == 0
+        assert S.expire_snapshots(out, keep_last=1)["expired"] == 0
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_output_compaction_crash_recovery(spark, corpus):
-    """An interrupted swap (leaf renamed away, committed compact copy in
-    _compact_tmp) is healed by recover_output_compactions with no row
-    loss — both from the committed copy and from the displaced original."""
+def test_run_pipeline_releases_caches_when_a_write_fails(spark, corpus):
+    """A failed edges write (a plain file squats on ``<out>/edges``) must
+    not strand the parse, clause and canonical-chain caches in the
+    session: every persist is released on the exception path too."""
     import os
 
-    from fastobo_py_spark.plans.pipeline import (
-        _OLD_SUFFIX,
-        _compact_tmp_root,
-        _enc_leaf,
-        _leaf_part_dirs,
-        compact_outputs,
-        recover_output_compactions,
-    )
+    from py4j.protocol import Py4JJavaError
+
     from fastobo_py_spark.plans.pipeline import run_pipeline
 
-    out = tempfile.mkdtemp(prefix="kg_outcrash_")
+    jsc = spark.sparkContext._jsc
+    out = tempfile.mkdtemp(prefix="kg_failwrite_")
     try:
-        run_pipeline(spark, corpus, out, canonicalize=False)
-        n0 = spark.read.parquet(f"{out}/nodes").count()
-        leaf = _leaf_part_dirs(f"{out}/nodes")[0]
-        rel = _enc_leaf(os.path.relpath(leaf, out))
-        tmp_root = _compact_tmp_root(out)
-        os.makedirs(tmp_root, exist_ok=True)
-
-        # case 1: committed compacted copy exists, leaf missing → adopt copy
-        spark.read.parquet(leaf).repartition(1).write.parquet(os.path.join(tmp_root, rel))
-        import shutil as _sh
-        _sh.rmtree(leaf)
-        assert recover_output_compactions(out) == 1
-        assert spark.read.parquet(f"{out}/nodes").count() == n0
-
-        # case 2: copy NOT committed (no _SUCCESS), original displaced → restore original
-        os.rename(leaf, os.path.join(tmp_root, rel + _OLD_SUFFIX))
-        os.makedirs(os.path.join(tmp_root, rel), exist_ok=True)  # uncommitted stub
-        assert recover_output_compactions(out) == 1
-        assert spark.read.parquet(f"{out}/nodes").count() == n0
-        # a full compact_outputs pass runs recovery first and stays green
-        compact_outputs(spark, out, max_parts=10_000)
-        assert spark.read.parquet(f"{out}/nodes").count() == n0
-
-        # case 3 (code-review r5): legacy completed-swap debris — a PRE-r5
-        # '.old' displaced-original entry whose real leaf is alive must be
-        # skipped, not decoded into a bogus '...old' partition dir
-        legacy = os.path.join(tmp_root, rel + ".old")
-        os.makedirs(tmp_root, exist_ok=True)
-        spark.read.parquet(leaf).limit(1).write.mode("overwrite").parquet(legacy)
-        # a real legacy displaced-original is a renamed partition LEAF:
-        # parquet parts only, never a _SUCCESS marker
-        os.remove(os.path.join(legacy, "_SUCCESS"))
-        assert recover_output_compactions(out) == 0
-        assert os.path.isdir(legacy)  # left for manual cleanup, not adopted
-        assert spark.read.parquet(f"{out}/nodes").count() == n0
-        _sh.rmtree(legacy)
-
-        # case 4 (code-review r5 second pass): legacy mid-swap crash AFTER
-        # an upgrade — leaf missing, uncommitted stub + '.old' displaced
-        # original → restore from the legacy '.old' copy, no data loss
-        os.rename(leaf, legacy)
-        os.makedirs(os.path.join(tmp_root, rel), exist_ok=True)  # no _SUCCESS
-        assert recover_output_compactions(out) == 1
-        assert spark.read.parquet(f"{out}/nodes").count() == n0
-
-        # case 5 (code-review r5 third pass): a GENUINE leaf whose
-        # partition VALUE ends in '.old', crashed mid-swap with a
-        # committed copy — must be restored, not misread as legacy debris
-        fake = os.path.join(out, "nodes", "idspace=FAKE.old")
-        enc2 = _enc_leaf(os.path.relpath(fake, out))
-        assert enc2.endswith(".old")
-        spark.read.parquet(leaf).limit(1).write.parquet(os.path.join(tmp_root, enc2))
-        # leaf itself was renamed away by the crash → missing on disk
-        assert recover_output_compactions(out) == 1
-        assert os.path.isdir(fake)
-        assert spark.read.parquet(fake).count() == 1
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_output_compaction_recovery_slash_partition_value(spark):
-    """A partition VALUE containing '/' is written by Spark as %2F in the
-    leaf dir name (idspace=a%2Fb). The tmp-leaf encoding must not collide
-    with that escape: after a crash mid-swap the leaf must be restored to
-    the ORIGINAL %2F dir, not exploded into nested idspace=a/b dirs
-    (ADVICE r4)."""
-    import os
-
-    from fastobo_py_spark.plans.pipeline import (
-        _compact_tmp_root,
-        _enc_leaf,
-        _leaf_part_dirs,
-        recover_output_compactions,
-    )
-
-    out = tempfile.mkdtemp(prefix="kg_slashpart_")
-    try:
-        df = spark.createDataFrame(
-            [("a/b", 1), ("a/b", 2), ("plain", 3)], "idspace string, x int"
-        )
-        df.write.partitionBy("idspace").parquet(f"{out}/nodes")
-        leaves = _leaf_part_dirs(f"{out}/nodes")
-        slash_leaf = [l for l in leaves if "%2F" in os.path.basename(l)]
-        assert slash_leaf, f"expected a %2F-escaped leaf, got {leaves}"
-        leaf = slash_leaf[0]
-        rel = _enc_leaf(os.path.relpath(leaf, out))
-        assert rel != os.path.relpath(leaf, out).replace(os.sep, "%2F"), (
-            "encoding must distinguish a path separator from a literal %2F"
-        )
-        tmp_root = _compact_tmp_root(out)
-        os.makedirs(tmp_root, exist_ok=True)
-        n0 = spark.read.parquet(f"{out}/nodes").count()
-        # simulate crash: committed compacted copy in tmp, leaf renamed away
-        spark.read.parquet(leaf).repartition(1).write.parquet(os.path.join(tmp_root, rel))
-        import shutil as _sh
-
-        _sh.rmtree(leaf)
-        assert recover_output_compactions(out) == 1
-        assert os.path.isdir(leaf), "leaf must be restored at its escaped path"
-        assert not os.path.isdir(os.path.join(out, "nodes", "idspace=a")), (
-            "must not create nested idspace=a/b dirs"
-        )
-        assert spark.read.parquet(f"{out}/nodes").count() == n0
-        got = {r["idspace"] for r in spark.read.parquet(f"{out}/nodes").select("idspace").distinct().collect()}
-        assert got == {"a/b", "plain"}
+        open(os.path.join(out, "edges"), "w").close()
+        n0 = jsc.getPersistentRDDs().size()
+        with pytest.raises(Py4JJavaError, match="ParentNotDirectoryException"):
+            run_pipeline(spark, corpus, out, resume=False)
+        assert os.path.isdir(os.path.join(out, "nodes"))  # failed AFTER the chain ran
+        # at most n0: the JVM may collect earlier tests' checkpoints meanwhile
+        assert jsc.getPersistentRDDs().size() <= n0
     finally:
         shutil.rmtree(out, ignore_errors=True)
 

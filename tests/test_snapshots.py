@@ -1,6 +1,6 @@
 """Snapshot layer (plans/snapshots.py): isolation, time travel, schema
 evolution, rollback, expiration, orphan cleanup, non-destructive rewrite,
-and the run_pipeline / compact_outputs integration."""
+and the run_pipeline integration."""
 
 from __future__ import annotations
 
@@ -216,28 +216,6 @@ def test_pipeline_commits_snapshots(spark, corpus):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_compact_outputs_syncs_snapshot_log(spark, corpus):
-    """Destructive compaction on a snapshotted dir: finishes with HEAD
-    matching the physical state and history expired — snapshot readers
-    never see missing files."""
-    from fastobo_py_spark.plans.pipeline import compact_outputs, run_pipeline
-
-    out = tempfile.mkdtemp(prefix="snap_comp_")
-    try:
-        run_pipeline(spark, corpus, out, canonicalize=False)
-        n0 = S.read_table_at(spark, out, "nodes").count()
-        st = compact_outputs(spark, out, max_parts=0, target_bytes=1 << 30)
-        assert st["leaves_compacted"] > 0
-        assert "snapshots_expired" in st
-        assert S.read_table_at(spark, out, "nodes").count() == n0
-        # every referenced file physically exists
-        for t in S.TABLES:
-            for rel in S.resolve_files(out, t):
-                assert os.path.exists(os.path.join(out, rel)), rel
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
 def test_build_kg_cli_delete_and_tag(spark):
     """CLI integration for the round-5 maintenance flags: --delete-where
     commits an op=delete snapshot and --tag pins the result; the pinned
@@ -365,8 +343,8 @@ def test_build_kg_cli_wap_publish(spark):
 
 
 def test_build_kg_cli_flag_validation():
-    """CLI guard rails: --synthetic 0 and the destructive/non-destructive
-    compaction pair are usage errors (exit 2), before any Spark startup."""
+    """CLI guard rails: --synthetic 0 and the statically-fatal flag
+    combinations are usage errors (exit 2), before any Spark startup."""
     import importlib.util
     import os as _os
 
@@ -377,9 +355,6 @@ def test_build_kg_cli_flag_validation():
     spec.loader.exec_module(mod)
     with pytest.raises(SystemExit) as e:
         mod.main(["--synthetic", "0", "--out", "/tmp/x"])
-    assert e.value.code == 2
-    with pytest.raises(SystemExit) as e:
-        mod.main(["--synthetic", "5", "--out", "/tmp/x", "--compact-outputs", "--rewrite-data-files"])
     assert e.value.code == 2
     # a typo'd merge table or empty key list must die BEFORE the batch
     # runs (otherwise the whole run's metrics JSON is lost on exit)
@@ -430,44 +405,6 @@ def test_heal_does_not_resurrect_rolled_back_data(spark, corpus):
         b1 = S.read_table_at(spark, out, "nodes", snapshot_id=m1["snapshot_id"]).count()
         b3 = n_head - b1
         assert b3 == m3["nodes"]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_heal_adopts_destructive_compaction_crash(spark):
-    """The one crash shape the heal MUST adopt: a leaf whose referenced
-    files were renamed away by a destructive compaction swap. Intact
-    leaves with extra (orphan) files are left alone in the same pass."""
-    from fastobo_py_spark.plans.snapshots import heal_snapshot
-
-    out = tempfile.mkdtemp(prefix="snap_healleaf_")
-    try:
-        pre = S.list_data_files(out)
-        _write_batch(spark, out, [("A", 1), ("B", 2)])
-        s1, post1 = _commit_delta(out, pre)
-        n0 = S.read_table_at(spark, out, "nodes").count()
-
-        # simulate compact_outputs crash on leaf A: rewrite its parts
-        # under new names, delete the originals, NO snapshot commit
-        leaf = os.path.join(out, "nodes", "idspace=A")
-        olds = [f for f in os.listdir(leaf) if f.endswith(".parquet")]
-        spark.read.parquet(leaf).coalesce(1).write.mode("overwrite").parquet(f"{out}/_tmpleaf")
-        import shutil as _sh
-
-        for f in olds:
-            os.remove(os.path.join(leaf, f))
-        for f in os.listdir(f"{out}/_tmpleaf"):
-            if f.endswith(".parquet"):
-                os.rename(f"{out}/_tmpleaf/{f}", os.path.join(leaf, f"compacted-{f}"))
-        _sh.rmtree(f"{out}/_tmpleaf")
-        # and an ingest orphan in the INTACT leaf B — must stay invisible
-        _write_batch(spark, out, [("B", 99)])
-
-        snap, _listing = heal_snapshot(out)
-        assert snap is not None and snap["op"] == "heal"
-        got = sorted(r["x"] for r in S.read_table_at(spark, out, "nodes").collect())
-        assert got == [1, 2]  # leaf A healed, orphan 99 not adopted
-        assert S.read_table_at(spark, out, "nodes").count() == n0
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -786,10 +723,7 @@ def test_cow_delete_and_sort_rewrite_evolution_edge_cases(spark):
     file predates the column (phase 2 backfills NULLs like phase 1's
     merged read); (2) rewrite sort_by tolerates partition-key columns
     (constant within a leaf — dropped from the effective order instead
-    of failing analysis); (3) compact_outputs refuses over a staged
-    branch (it would absorb unaudited rows into main)."""
-    from fastobo_py_spark.plans.pipeline import compact_outputs
-
+    of failing analysis)."""
     out = tempfile.mkdtemp(prefix="snap_evo_")
     try:
         pre = S.list_data_files(out)
@@ -817,12 +751,6 @@ def test_cow_delete_and_sort_rewrite_evolution_edge_cases(spark):
         assert sorted(
             (r["idspace"], r["x"]) for r in S.read_table_at(spark, out, "nodes").collect()
         ) == got
-
-        # (3) destructive compaction refuses over a staged branch
-        _write_batch(spark, out, [("C", 9)])
-        _commit_delta(out, S.list_data_files(out), branch="wip")  # empty delta is fine
-        with pytest.raises(ValueError, match="staged branch"):
-            compact_outputs(spark, out, max_parts=0)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -1063,15 +991,6 @@ def test_tags_pin_snapshots_through_expiration(spark):
             S.create_tag(out, "")  # unset-$VAR wrapper bug → loud failure
         with pytest.raises(ValueError):
             S.read_table_at(spark, out, "nodes", tag="t", snapshot_id=s3["snapshot_id"])
-
-        # the DESTRUCTIVE compactor refuses while tags exist — it would
-        # strand them pointing at deleted files (code-review r5)
-        from fastobo_py_spark.plans.pipeline import compact_outputs
-
-        S.create_tag(out, "pin")
-        with pytest.raises(ValueError, match="strand"):
-            compact_outputs(spark, out, max_parts=0)
-        S.delete_tag(out, "pin")
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
