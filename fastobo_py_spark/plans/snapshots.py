@@ -653,12 +653,6 @@ def expire_snapshots(out_dir: str, keep_last: int = 1, tables: tuple = TABLES) -
             os.remove(p)
             expired += 1
 
-    deleted = 0
-    on_disk = list_data_files(out_dir, tables)
-    for t in tables:
-        for rel in sorted(on_disk[t] - keep_files[t]):
-            os.remove(os.path.join(out_dir, rel))
-            deleted += 1
     # equality-delete KEY files referenced by no retained snapshot go too
     # (ADVICE r5): rebased snapshots drop their delete_added fields and
     # expired ones are gone, so the _eq_deletes/ parquet files — which
@@ -667,18 +661,7 @@ def expire_snapshots(out_dir: str, keep_last: int = 1, tables: tuple = TABLES) -
     # recipe (materialize_deletes + expire_snapshots) incomplete.
     # Read the RETAINED snapshots back from disk: they are the rewritten,
     # post-rebase truth.
-    del_referenced: set[str] = set()
-    for s in list_snapshots(out_dir):
-        for fs in s.get("delete_added", {}).values():
-            del_referenced |= set(fs)
-    eq_root = os.path.join(out_dir, EQ_DELETE_DIR)
-    if os.path.isdir(eq_root):
-        for dirpath, _dirnames, files in os.walk(eq_root):
-            for f in files:
-                rel = os.path.relpath(os.path.join(dirpath, f), out_dir)
-                if f.endswith(".parquet") and rel not in del_referenced:
-                    os.remove(os.path.join(dirpath, f))
-                    deleted += 1
+    deleted = _delete_unreferenced(out_dir, tables, keep_files, list_snapshots(out_dir))
     # pinned_tags is the compliance signal a physical purge must read:
     # these tags kept their snapshots' files on disk and readable — an
     # INCOMPLETE takedown until the tags are deleted/moved and expire
@@ -708,27 +691,32 @@ def remove_orphan_files(out_dir: str, tables: tuple = TABLES) -> int:
     if not snaps:
         return 0
     referenced: dict[str, set] = {t: set() for t in tables}
-    del_referenced: set[str] = set()
     for s in snaps:
         for t in tables:
             referenced[t] |= set(s["added"].get(t, ()))
-        for fs in s.get("delete_added", {}).values():
-            del_referenced |= set(fs)
+    return _delete_unreferenced(out_dir, tables, referenced, snaps)
+
+
+def _delete_unreferenced(
+    out_dir: str, tables: tuple, referenced: dict[str, set], snaps: list[dict]
+) -> int:
+    """The one unreferenced-file sweep (expire_snapshots,
+    remove_orphan_files): delete every data file of ``tables`` outside
+    ``referenced`` and every ``_eq_deletes/`` key file no snapshot in
+    ``snaps`` names in ``delete_added``. Returns the number deleted."""
     deleted = 0
     on_disk = list_data_files(out_dir, tables)
     for t in tables:
         for rel in sorted(on_disk[t] - referenced[t]):
             os.remove(os.path.join(out_dir, rel))
             deleted += 1
-    # equality-delete files referenced by no retained snapshot
-    eq_root = os.path.join(out_dir, EQ_DELETE_DIR)
-    if os.path.isdir(eq_root):
-        for dirpath, _dirnames, files in os.walk(eq_root):
-            for f in files:
-                rel = os.path.relpath(os.path.join(dirpath, f), out_dir)
-                if f.endswith(".parquet") and rel not in del_referenced:
-                    os.remove(os.path.join(dirpath, f))
-                    deleted += 1
+    del_referenced = {f for s in snaps for fs in s.get("delete_added", {}).values() for f in fs}
+    for dirpath, _dirnames, files in os.walk(os.path.join(out_dir, EQ_DELETE_DIR)):
+        for f in files:
+            rel = os.path.relpath(os.path.join(dirpath, f), out_dir)
+            if f.endswith(".parquet") and rel not in del_referenced:
+                os.remove(os.path.join(dirpath, f))
+                deleted += 1
     return deleted
 
 
@@ -902,16 +890,29 @@ def rewrite_data_files(
     replaced files: the leaves are then compacted, one snapshot remains,
     and a plain-path read sees each row once.
 
-    ``sort_by`` switches from Iceberg's binpack strategy to its SORT
-    strategy: every leaf is rewritten (not just fragmented ones) with
-    rows range-partitioned then sorted on the given columns, so each
-    output file covers a DISJOINT value range. Parquet footer min/max
-    stats then let a point or range predicate on those columns skip
-    every other file — this is what makes `delete_where` /
-    `merge_into` probes on a well-clustered `doc_sha` scale by the
-    delta instead of the table.
+    Per table, binpack (the default) picks every leaf with more than
+    ``max_parts`` files and the SORT strategy (``sort_by``) every leaf;
+    all picked leaves are rewritten in ONE job through
+    :func:`_stage_and_adopt`: one read of the picked files with the
+    :func:`_scan_files` merged schema (a leaf mixing pre- and
+    post-evolution files keeps the added columns) and the partition
+    columns as strings (each leaf keeps its name), hash-repartitioned
+    into one task per leaf. A written file holds at most
+    ``rows × target_bytes ÷ bytes`` of the picked files' rows, so a leaf
+    over ``target_bytes`` rolls into several files.
+
+    ``sort_by`` sorts each task by the partition columns, then the
+    ``sort_by`` columns, so a leaf's files cover consecutive DISJOINT
+    value ranges and footer min/max stats let a predicate on them skip
+    every other file (what makes `delete_where` / `merge_into` probes on
+    a clustered `doc_sha` scale by the delta). The partition columns
+    lead because Spark's planned write otherwise inserts its own sort on
+    them, which would replace the ``sort_by`` order.
     """
     import shutil
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
 
     if current_snapshot_id(out_dir) is None:
         raise ValueError(
@@ -922,63 +923,50 @@ def rewrite_data_files(
     cid = uuid.uuid4().hex[:8]
     tmp_root = os.path.join(out_dir, f"_rewrite_tmp-{cid}")
     stats = {"leaves_seen": 0, "leaves_rewritten": 0, "parts_before": 0, "parts_after": 0}
-    added: dict[str, list[str]] = {t: [] for t in tables}
-    removed: dict[str, list[str]] = {t: [] for t in tables}
-    head_files = {t: set(resolve_files(out_dir, t)) for t in tables}
+    added: dict[str, list[str]] = {}
+    removed: dict[str, list[str]] = {}
     try:
         for t in tables:
             by_leaf: dict[str, list[str]] = {}
-            for rel in head_files[t]:
+            for rel in resolve_files(out_dir, t):
                 by_leaf.setdefault(os.path.dirname(rel), []).append(rel)
-            for leaf_rel, rels in sorted(by_leaf.items()):
-                stats["leaves_seen"] += 1
-                # sort strategy re-clusters EVERY leaf; binpack only
-                # rewrites fragmented ones
-                if len(rels) <= max_parts and not sort_by:
-                    continue
-                n_bytes = sum(os.path.getsize(os.path.join(out_dir, r)) for r in rels)
-                n_out = max(1, (n_bytes + target_bytes - 1) // target_bytes)
-                tmp = os.path.join(tmp_root, f"{t}-{stats['leaves_rewritten']}")
-                # explicit file list, never the leaf dir: a dir listing
-                # could pick up orphan parts from a previously crashed
-                # rewrite and double the data. mergeSchema: a leaf can mix
-                # pre- and post-evolution files — without the merge, Spark
-                # picks ONE file's schema and the compacted replacement
-                # silently drops the other files' added columns (permanent
-                # loss once expire_snapshots reaps the originals)
-                leaf_df = spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(out_dir, r) for r in sorted(rels)]
-                )
-                # partition-key columns live in the DIRECTORY name, not
-                # the leaf files (and are constant within a leaf — range-
-                # sorting by them is vacuous anyway): drop them from the
-                # effective sort order instead of failing analysis
-                leaf_keys = {
-                    seg.split("=", 1)[0] for seg in leaf_rel.split(os.sep) if "=" in seg
-                }
-                eff_sort = [c for c in (sort_by or []) if c not in leaf_keys]
-                if eff_sort:
-                    from pyspark.sql import functions as F
-
-                    leaf_df = leaf_df.repartitionByRange(
-                        int(n_out), *[F.col(c) for c in eff_sort]
-                    ).sortWithinPartitions(*eff_sort)
-                else:
-                    leaf_df = leaf_df.repartition(int(n_out))
-                leaf_df.write.mode("overwrite").parquet(tmp)
-                for f in sorted(os.listdir(tmp)):
-                    if not f.endswith(".parquet"):
-                        continue
-                    new_rel = os.path.join(leaf_rel, f"rw{cid}-{f}")
-                    os.rename(os.path.join(tmp, f), os.path.join(out_dir, new_rel))
-                    added[t].append(new_rel)
-                    stats["parts_after"] += 1
-                removed[t].extend(sorted(rels))
-                stats["parts_before"] += len(rels)
-                stats["leaves_rewritten"] += 1
+            # binpack rewrites fragmented leaves, the sort strategy every leaf
+            picked = [rels for rels in by_leaf.values() if sort_by or len(rels) > max_parts]
+            stats["leaves_seen"] += len(by_leaf)
+            if not picked:
+                continue
+            rels = sorted(r for leaf in picked for r in leaf)
+            paths = [os.path.join(out_dir, r) for r in rels]
+            n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+            n_bytes = sum(os.path.getsize(p) for p in paths)
+            part_cols = _part_cols_for(out_dir, t, rels[0])
+            # re-read with the partition columns as strings: an inferred
+            # type can re-encode a leaf name (idspace=0001 reads as int 1
+            # and would be written back as idspace=1)
+            schema = T.StructType([
+                T.StructField(f.name, T.StringType()) if f.name in part_cols else f
+                for f in _scan_files(spark, out_dir, t, rels).schema
+            ])
+            df = (
+                spark.read.schema(schema)
+                .option("basePath", os.path.join(out_dir, t))
+                .parquet(*paths)
+                .repartition(len(picked), *part_cols)
+            )
+            if sort_by:
+                sort_cols = part_cols + [c for c in sort_by if c not in part_cols]
+                df = df.sortWithinPartitions(*sort_cols)
+            max_records = max(1, n_rows * target_bytes // n_bytes)
+            added[t] = _stage_and_adopt(
+                df, out_dir, t, part_cols, f"rw{cid}", tmp_root, max_records=max_records
+            )
+            removed[t] = rels
+            stats["leaves_rewritten"] += len(picked)
+            stats["parts_before"] += len(rels)
+            stats["parts_after"] += len(added[t])
     finally:
         shutil.rmtree(tmp_root, ignore_errors=True)
-    if stats["leaves_rewritten"]:
+    if removed:
         snap = commit_snapshot(out_dir, added=added, removed=removed, op="replace")
         stats["snapshot_id"] = snap["snapshot_id"]
     return stats
@@ -1014,15 +1002,22 @@ def _part_cols_for(out_dir: str, table: str, layout_ref: str) -> list[str]:
 
 
 def _stage_and_adopt(
-    df: DataFrame, out_dir: str, table: str, part_cols: list[str], prefix: str, tmp_root: str
+    df: DataFrame, out_dir: str, table: str, part_cols: list[str], prefix: str, tmp_root: str,
+    max_records: int = 0,
 ) -> list[str]:
-    """Write ``df`` partitioned under a staging dir, then adopt each
-    parquet part into the live table tree under a run-unique name (one
-    rename per file — the same two-phase shape delete_where /
-    rewrite_data_files use so a crash never leaves a half-visible
-    rewrite). Returns the adopted out_dir-relative paths."""
+    """The one path by which the copy-on-write ops (delete_where,
+    merge_into, materialize_deletes, rewrite_data_files) put rows into a
+    table: ONE ``partitionBy`` write of ``df`` under a staging dir, then
+    each parquet part is adopted into the live table tree under a
+    run-unique name (one rename per file), invisible to snapshot readers
+    until the caller commits — a crash never leaves a half-visible
+    rewrite. ``max_records`` > 0 is the writer's ``maxRecordsPerFile``
+    (a task rolls to a new file past it). Returns the adopted
+    out_dir-relative paths."""
     tmp_t = os.path.join(tmp_root, table)
     writer = df.write.mode("overwrite")
+    if max_records:
+        writer = writer.option("maxRecordsPerFile", max_records)
     if part_cols:
         writer = writer.partitionBy(*part_cols)
     writer.parquet(tmp_t)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -722,8 +723,7 @@ def test_cow_delete_and_sort_rewrite_evolution_edge_cases(spark):
     references a schema-evolution column works even when every affected
     file predates the column (phase 2 backfills NULLs like phase 1's
     merged read); (2) rewrite sort_by tolerates partition-key columns
-    (constant within a leaf — dropped from the effective order instead
-    of failing analysis)."""
+    (real columns of the rewrite's scan, constant within a leaf)."""
     out = tempfile.mkdtemp(prefix="snap_evo_")
     try:
         pre = S.list_data_files(out)
@@ -942,6 +942,103 @@ def test_rewrite_data_files_sort_strategy(spark):
         # replace snapshot: incremental append scan still skips it
         inc = S.read_incremental(spark, out, "nodes", s1["snapshot_id"])
         assert sorted(r["x"] for r in inc.collect()) == [2, 4, 6, 8]
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def _rows(df):
+    return sorted((r["idspace"], r["x"]) for r in df.collect())
+
+
+def _files_per_leaf(out):
+    from collections import Counter
+
+    return Counter(os.path.dirname(r) for r in S.resolve_files(out, "nodes"))
+
+
+def test_rewrite_data_files_job_count_does_not_grow_with_leaves(spark):
+    """A rewrite is one write job per table, whatever the leaf count: a
+    table fragmented across 12 leaves is rewritten in at most 4 Spark
+    jobs (schema merge, shuffle, write; over 32 files Spark adds a
+    file-listing job per read), each leaf ends as one file, and the row
+    multiset is unchanged."""
+    out = tempfile.mkdtemp(prefix="snap_rwjobs_")
+    sc = spark.sparkContext
+    group = f"rewrite-jobs-{uuid.uuid4().hex[:8]}"
+    try:
+        pre = S.list_data_files(out)
+        for i in range(2):  # two appends: every leaf holds 2 files
+            _write_batch(spark, out, [(f"L{k:02d}", 10 * k + i) for k in range(12)])
+        _commit_delta(out, pre)
+        assert len(_files_per_leaf(out)) == 12
+        before = _rows(S.read_table_at(spark, out, "nodes"))
+
+        sc.setJobGroup(group, "rewrite_data_files job count")
+        try:
+            st = S.rewrite_data_files(spark, out, tables=("nodes",), max_parts=1)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert st["leaves_rewritten"] == 12
+        assert len(jobs) <= 4, jobs
+        assert set(_files_per_leaf(out).values()) == {1}
+        assert _rows(S.read_table_at(spark, out, "nodes")) == before
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_rewrite_data_files_keeps_leaf_names(spark):
+    """A rewritten leaf keeps its directory name even when its partition
+    value would infer as a number: binpack picks only idspace=0001 (int
+    1 to Spark's partition-type inference on its own), and the table
+    must still hold idspace=0001 and read '0001', not idspace=1."""
+    out = tempfile.mkdtemp(prefix="snap_rwname_")
+    try:
+        pre = S.list_data_files(out)
+        for i in range(3):
+            _write_batch(spark, out, [("0001", i)])
+        _write_batch(spark, out, [("GO", 9)])
+        _commit_delta(out, pre)
+        before = _rows(S.read_table_at(spark, out, "nodes"))
+
+        st = S.rewrite_data_files(spark, out, tables=("nodes",), max_parts=1)
+        assert st["leaves_rewritten"] == 1
+        assert dict(_files_per_leaf(out)) == {"nodes/idspace=0001": 1, "nodes/idspace=GO": 1}
+        assert _rows(S.read_table_at(spark, out, "nodes")) == before
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_rewrite_data_files_binpack_splits_leaf_over_target(spark):
+    """Binpack rolls a leaf larger than ``target_bytes`` into several
+    files from its one task, while every leaf under the target becomes
+    one file; rows are unchanged at HEAD and at the pre-rewrite
+    snapshot."""
+    out = tempfile.mkdtemp(prefix="snap_rwsplit_")
+    try:
+        pre = S.list_data_files(out)
+        for i in range(6):  # leaf A: 6 fragments of 20 rows
+            _write_batch(spark, out, [("A", 100 * i + j) for j in range(20)])
+        _write_batch(spark, out, [("B", 1), ("C", 2)])
+        s1, _ = _commit_delta(out, pre)
+        leaf_bytes: dict[str, int] = {}
+        for rel in S.resolve_files(out, "nodes"):
+            leaf = os.path.dirname(rel)
+            leaf_bytes[leaf] = leaf_bytes.get(leaf, 0) + os.path.getsize(os.path.join(out, rel))
+        target = leaf_bytes["nodes/idspace=A"] // 2
+        assert leaf_bytes["nodes/idspace=B"] < target and leaf_bytes["nodes/idspace=C"] < target
+        before = _rows(S.read_table_at(spark, out, "nodes"))
+
+        st = S.rewrite_data_files(
+            spark, out, tables=("nodes",), max_parts=0, target_bytes=target
+        )
+        assert st["leaves_rewritten"] == 3
+        per_leaf = _files_per_leaf(out)
+        assert per_leaf["nodes/idspace=A"] >= 2, per_leaf
+        assert per_leaf["nodes/idspace=B"] == per_leaf["nodes/idspace=C"] == 1, per_leaf
+        assert _rows(S.read_table_at(spark, out, "nodes")) == before
+        assert _rows(S.read_table_at(spark, out, "nodes", snapshot_id=s1["snapshot_id"])) == before
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
