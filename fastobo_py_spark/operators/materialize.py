@@ -9,7 +9,8 @@ prefixes) get a salt column so no single write task or downstream join
 partition owns an entire hub prefix (AQE skew-join handles reads, but a
 `partitionBy(idspace)` WRITE of a hot prefix needs explicit salt).
 
-``graph_writers`` / ``write_graph`` is the one node/edge layout writer.
+``graph_writers`` is the one node/edge layout writer (its one caller is
+``plans/pipeline.run_pipeline``, which the stream runs per micro-batch).
 The canonical chain arrives partitioned by document key with zero
 exchanges; the writer then adds ONE hash exchange — edges on
 ``(idspace, salt)``, nodes on ``idspace`` — so every output leaf has
@@ -22,8 +23,6 @@ forks a ``chmod`` process for each when libhadoop is missing.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, DataFrameWriter, Observation
 from pyspark.sql import functions as F
@@ -199,15 +198,6 @@ def graph_writers(
             df = df.observe(row_counts[table], F.count(F.lit(1)).alias("n"))
         writers[table] = df.write.mode("append").partitionBy(*GRAPH_PARTITIONS[table])
     return writers
-
-
-def write_graph(nodes: DataFrame, edges: DataFrame, out_dir: str, n_salts: int = 16) -> None:
-    """Append node/edge parquet under ``out_dir/{nodes,edges}`` in the
-    :func:`graph_writers` layout. On a cluster these are Iceberg tables;
-    parquet directories are the sandbox stand-in (identical partition
-    layout)."""
-    for table, writer in graph_writers(nodes, edges, n_salts).items():
-        writer.parquet(os.path.join(out_dir, table))
 
 
 def hub_degrees(edges: DataFrame, n_salts: int = 16) -> DataFrame:

@@ -232,12 +232,13 @@ def _sweep_stale_compaction_dirs(out_dir: str) -> None:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The ingest manifest, or None while it holds no part file. A
+    manifest that exists but cannot be read raises: treating it as empty
+    would silently reprocess the whole corpus into duplicate outputs."""
     _adopt_orphan_compaction(out_dir)
-    p = _manifest_path(out_dir)
-    try:
-        return spark.read.parquet(p)
-    except Exception:
+    if _manifest_part_count(out_dir) == 0:
         return None
+    return spark.read.parquet(_manifest_path(out_dir))
 
 
 def _manifest_part_count(out_dir: str) -> int:
@@ -258,7 +259,6 @@ def compact_manifest(
     spark: SparkSession,
     out_dir: str,
     max_parts: int = MANIFEST_COMPACT_MAX_PARTS,
-    target_parts: int | None = None,
 ) -> dict:
     """O19 manifest compaction: collapse the append-only manifest into a
     few doc_sha-sorted parquet files once it fragments past ``max_parts``.
@@ -304,7 +304,7 @@ def compact_manifest(
     n_bytes = sum(
         os.path.getsize(os.path.join(p, f)) for f in os.listdir(p) if f.endswith(".parquet")
     )
-    parts = target_parts or max(1, (n_bytes + _MANIFEST_TARGET_BYTES - 1) // _MANIFEST_TARGET_BYTES)
+    parts = max(1, (n_bytes + _MANIFEST_TARGET_BYTES - 1) // _MANIFEST_TARGET_BYTES)
     cid = uuid.uuid4().hex[:8]
     tmp = p + f".compact-{cid}"
     # sorted by the key: row-group min/max stats make future doc_sha
@@ -378,6 +378,7 @@ def run_pipeline(
     canonicalize: bool = True,
     compact_threshold: int | None = MANIFEST_COMPACT_MAX_PARTS,
     snapshot_branch: str | None = None,
+    stream_batch_id: int | None = None,
 ) -> dict:
     """Run the full OBO→KG job; returns the metrics dict.
 
@@ -393,6 +394,13 @@ def run_pipeline(
     the PHYSICAL work done); an audit that ends in ``delete_branch``
     should expect corrected inputs to arrive as new content (new
     doc_sha) — identical re-submissions are resume-skipped by design.
+
+    ``stream_batch_id``: the Structured Streaming micro-batch id when
+    ``streaming/kg`` runs this batch under ``foreachBatch``. The commit is
+    then ``op="stream-append"`` carrying that id, and a replayed
+    micro-batch (crash after its commit, before the checkpoint advanced)
+    finds its earlier snapshot and commits nothing: its re-written part
+    files stay invisible orphans instead of a second copy of its rows.
     """
     t0 = time.time()
     compiles0 = codegen_compiles(spark)
@@ -418,7 +426,7 @@ def run_pipeline(
 
     # every persist is released in the finally: a failed write must not
     # strand the parse, clause and canonical-chain caches in a long-lived
-    # session (the stream's _process_batch does the same per micro-batch)
+    # session (a stream enters here once per micro-batch)
     caches: list[DataFrame] = []
     try:
         # parse ONCE: both the clause and quarantine paths read this cache
@@ -469,7 +477,7 @@ def run_pipeline(
             macro_dims = clauses.where("frame_type = 'Header' OR tag = 'xref'")
             e = extract_edges_with_macros(clauses, macro_source=macro_dims, key_col=spine)
             edges = _dedup_edges(e, clauses, spine)
-        # the write_graph layout; its writes are issued from this function so
+        # the graph_writers layout; its writes are issued from this function so
         # a tracer that attributes Spark actions to their calling function
         # (perfbench/trace.py) keeps charging them to this batch's layers
         writers = graph_writers(build_nodes(clauses), edges, n_salts, row_counts=obs)
@@ -484,13 +492,23 @@ def run_pipeline(
     # idempotently instead of losing it from snapshot visibility
     post_files = _snap.list_data_files(out_dir)
     added = {t: sorted(post_files[t] - pre_files.get(t, set())) for t in _snap.TABLES}
-    snapshot = _snap.commit_snapshot(
-        out_dir,
-        added=added,
-        op="append",
-        batch_id=batch_id,
-        branch=snapshot_branch,
-    )
+    snapshot = None
+    if stream_batch_id is None:
+        op, snap_batch_id = "append", batch_id
+    else:
+        # a replayed micro-batch keeps its first commit (see the docstring)
+        op, snap_batch_id = "stream-append", str(stream_batch_id)
+        snapshot = next(
+            (s for s in _snap.list_snapshots(out_dir) if s["op"] == op and s["batch_id"] == snap_batch_id), None
+        )
+    if snapshot is None:
+        snapshot = _snap.commit_snapshot(
+            out_dir,
+            added=added,
+            op=op,
+            batch_id=snap_batch_id,
+            branch=snapshot_branch,
+        )
 
     # manifest append LAST: a crash before this line leaves the batch
     # unrecorded and it reruns idempotently (outputs keyed by doc_sha are

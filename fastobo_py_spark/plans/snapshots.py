@@ -327,6 +327,26 @@ def _scan_files(spark: SparkSession, out_dir: str, table: str, rels: list[str]) 
     )
 
 
+def _scan_with_string_parts(
+    spark: SparkSession, out_dir: str, table: str, rels: list[str], part_cols: list[str]
+) -> DataFrame:
+    """:func:`_scan_files` with the partition columns read as strings —
+    the read of every copy-on-write op that writes rows back. An inferred
+    partition type can re-encode a leaf name: ``idspace=0001`` reads as
+    int 1 and would be written back as ``idspace=1``."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField(f.name, T.StringType()) if f.name in part_cols else f
+        for f in _scan_files(spark, out_dir, table, rels).schema
+    ])
+    return (
+        spark.read.schema(schema)
+        .option("basePath", os.path.join(out_dir, table))
+        .parquet(*[os.path.join(out_dir, r) for r in rels])
+    )
+
+
 def read_table_at(
     spark: SparkSession,
     out_dir: str,
@@ -847,8 +867,8 @@ def fast_forward(out_dir: str, branch: str) -> str:
 
 
 def ensure_baseline(out_dir: str) -> dict[str, set]:
-    """Entry-time snapshot hygiene shared by every writer (batch
-    ``run_pipeline``, streaming ``stream_build_kg``): if the directory
+    """Entry-time snapshot hygiene of ``run_pipeline`` (every batch and
+    every stream micro-batch): if the directory
     predates the snapshot log, a baseline ``op='import'`` commit covers
     the existing files (Iceberg's migrate-table analogue), so the first
     real snapshot's delta doesn't strand them outside every chain.
@@ -912,7 +932,6 @@ def rewrite_data_files(
     import shutil
 
     import pyarrow.parquet as pq
-    from pyspark.sql import types as T
 
     if current_snapshot_id(out_dir) is None:
         raise ValueError(
@@ -940,18 +959,8 @@ def rewrite_data_files(
             n_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
             n_bytes = sum(os.path.getsize(p) for p in paths)
             part_cols = _part_cols_for(out_dir, t, rels[0])
-            # re-read with the partition columns as strings: an inferred
-            # type can re-encode a leaf name (idspace=0001 reads as int 1
-            # and would be written back as idspace=1)
-            schema = T.StructType([
-                T.StructField(f.name, T.StringType()) if f.name in part_cols else f
-                for f in _scan_files(spark, out_dir, t, rels).schema
-            ])
-            df = (
-                spark.read.schema(schema)
-                .option("basePath", os.path.join(out_dir, t))
-                .parquet(*paths)
-                .repartition(len(picked), *part_cols)
+            df = _scan_with_string_parts(spark, out_dir, t, rels, part_cols).repartition(
+                len(picked), *part_cols
             )
             if sort_by:
                 sort_cols = part_cols + [c for c in sort_by if c not in part_cols]
@@ -1090,16 +1099,17 @@ def delete_where(
             rels = resolve_files(out_dir, t)
             if not rels:
                 continue
-            scan = _scan_files(spark, out_dir, t, rels)
+            # partition values live in the dir names, so partitionBy on
+            # rewrite reproduces the same leaves; both phases read them as
+            # strings, so the predicate sees the same values in each
+            part_cols = _part_cols_for(out_dir, t, rels[0])
+            scan = _scan_with_string_parts(spark, out_dir, t, rels, part_cols)
             hit = F.coalesce(F.expr(predicate).cast("boolean"), F.lit(False))
             per_file = scan.where(hit).groupBy(F.input_file_name().alias("uri")).count().collect()
             if not per_file:
                 continue
             affected = sorted(_uri_to_rel(r["uri"], out_dir) for r in per_file)
-            # partition values live in the dir names, so partitionBy on
-            # rewrite reproduces the same leaves
-            part_cols = _part_cols_for(out_dir, t, affected[0])
-            keep_scan = _scan_files(spark, out_dir, t, affected)
+            keep_scan = _scan_with_string_parts(spark, out_dir, t, affected, part_cols)
             # the affected subset may be all pre-evolution files whose
             # merged schema lacks a column the predicate references
             # (phase 1 read it as NULL via the FULL file set) — backfill
@@ -1193,6 +1203,11 @@ def merge_into(
     cid = uuid.uuid4().hex[:8]
     tmp_root = os.path.join(out_dir, f"_merge_tmp-{cid}")
     rels = resolve_files(out_dir, table)
+    part_cols = _part_cols_for(out_dir, table, rels[0] if rels else "")
+    # the target's partition columns are read as strings
+    # (_scan_with_string_parts); the source's are cast to match, so the
+    # key probe and the union see one type
+    source = source.withColumns({c: F.col(c).cast("string") for c in part_cols if c in source.columns})
     # distinct keys once; reused by the probe and the anti-join rewrite
     # (Catalyst broadcasts when small, shuffles when not). NULL keys need
     # no special casing: equality joins never match them, so a NULL-keyed
@@ -1212,7 +1227,7 @@ def merge_into(
     affected: list[str] = []
     matched_rows = 0
     if rels:
-        scan = _scan_files(spark, out_dir, table, rels)
+        scan = _scan_with_string_parts(spark, out_dir, table, rels, part_cols)
         if pushdown_vals is not None:
             per_file = (
                 scan.where(F.col(on[0]).isin(pushdown_vals))
@@ -1231,11 +1246,9 @@ def merge_into(
             per_file = tagged.join(keys, on, "left_semi").groupBy("_uri").count().collect()
         affected = sorted(_uri_to_rel(r["_uri"], out_dir) for r in per_file)
         matched_rows = int(sum(r["count"] for r in per_file))
-    layout_ref = affected[0] if affected else (rels[0] if rels else "")
-    part_cols = _part_cols_for(out_dir, table, layout_ref)
     out_rows = source
     if affected:
-        aff = _scan_files(spark, out_dir, table, affected)
+        aff = _scan_with_string_parts(spark, out_dir, table, affected, part_cols)
         if pushdown_vals is not None:
             k = F.col(on[0])
             survivors = aff.where(~k.isin(pushdown_vals) | k.isNull())

@@ -669,6 +669,53 @@ def test_manifest_compaction_crash_window_adoption(spark, corpus):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def test_unreadable_manifest_fails_the_resumed_batch(spark, corpus):
+    """A manifest part that cannot be read fails the resumed batch before
+    it writes anything; read as "no manifest" it would reprocess every
+    document into duplicate outputs."""
+    import os
+
+    from fastobo_py_spark.plans.pipeline import _manifest_path, run_pipeline
+
+    out = tempfile.mkdtemp(prefix="kg_bad_manifest_")
+    try:
+        os.makedirs(_manifest_path(out))
+        with open(os.path.join(_manifest_path(out), "part-00000-garbage.snappy.parquet"), "wb") as fh:
+            fh.write(b"not a parquet file" * 8)
+        with pytest.raises(Exception):
+            run_pipeline(spark, corpus, out, resume=True)
+        assert not os.path.exists(os.path.join(out, "edges"))
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_batch_commit_is_a_plain_append(spark, corpus, monkeypatch):
+    """Without a stream batch id the commit is a plain ``op="append"``
+    under the batch's own id, and ``run_pipeline`` itself lists no
+    snapshots (only a stream micro-batch checks for its replay)."""
+    import sys
+
+    from fastobo_py_spark.plans import snapshots as S
+    from fastobo_py_spark.plans.pipeline import run_pipeline
+
+    callers = []
+    real = S.list_snapshots
+
+    def spy(out_dir):
+        callers.append(sys._getframe(1).f_code.co_name)
+        return real(out_dir)
+
+    out = tempfile.mkdtemp(prefix="kg_batch_commit_")
+    try:
+        monkeypatch.setattr(S, "list_snapshots", spy)
+        m = run_pipeline(spark, corpus, out, resume=False, canonicalize=False)
+        assert "run_pipeline" not in callers
+        (snap,) = real(out)
+        assert (snap["op"], snap["batch_id"], snap["snapshot_id"]) == ("append", m["batch_id"], m["snapshot_id"])
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_descendants_of_is_reverse_bfs(spark):
     """Subtree extraction mirrors the seeded ancestor BFS over reversed
     edges: depths measured downward, doc scoping and seed filtering hold."""

@@ -1010,6 +1010,45 @@ def test_rewrite_data_files_keeps_leaf_names(spark):
         shutil.rmtree(out, ignore_errors=True)
 
 
+def _numeric_and_text_leaves(spark, out):
+    """A nodes table with leaves idspace=0001 (one file, rows x=1 and x=2)
+    and idspace=GO, one snapshot."""
+    pre = S.list_data_files(out)
+    spark.createDataFrame([("0001", 1), ("0001", 2), ("GO", 9)], "idspace string, x int").coalesce(
+        1
+    ).write.partitionBy("idspace").parquet(f"{out}/nodes")
+    _commit_delta(out, pre)
+
+
+def test_delete_where_keeps_leaf_names(spark):
+    """delete_where rewrites only idspace=0001's file (int 1 to
+    partition-type inference on its own); the survivor keeps that leaf."""
+    out = tempfile.mkdtemp(prefix="snap_delname_")
+    try:
+        _numeric_and_text_leaves(spark, out)
+        st = S.delete_where(spark, out, "x = 1", tables=("nodes",))
+        assert st["deleted_rows"] == 1
+        assert _rows(S.read_table_at(spark, out, "nodes")) == [("0001", 2), ("GO", 9)]
+        assert set(_files_per_leaf(out)) == {"nodes/idspace=0001", "nodes/idspace=GO"}
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_merge_into_keeps_leaf_names(spark):
+    """merge_into rewrites only idspace=0001's file; its survivor and the
+    source row both land in that leaf."""
+    out = tempfile.mkdtemp(prefix="snap_mrgname_")
+    try:
+        _numeric_and_text_leaves(spark, out)
+        src = spark.createDataFrame([("0001", 1)], "idspace string, x int")
+        st = S.merge_into(spark, out, "nodes", src, on="x")
+        assert st["matched_rows"] == 1 and st["files_rewritten"] == 1
+        assert _rows(S.read_table_at(spark, out, "nodes")) == [("0001", 1), ("0001", 2), ("GO", 9)]
+        assert set(_files_per_leaf(out)) == {"nodes/idspace=0001", "nodes/idspace=GO"}
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
 def test_rewrite_data_files_binpack_splits_leaf_over_target(spark):
     """Binpack rolls a leaf larger than ``target_bytes`` into several
     files from its one task, while every leaf under the target becomes

@@ -227,6 +227,7 @@ def test_stream_kg_collision_fallback_matches_clean_batch(spark, monkeypatch):
     """A micro-batch whose doc_key audit reports a collision runs on the
     exact doc_sha spine and writes the same edge rows as a clean batch."""
     from fastobo_py_spark.operators import surrogate
+    from fastobo_py_spark.plans import pipeline
     from fastobo_py_spark.schema import CORPUS_SCHEMA
     from fastobo_py_spark.sources.corpus import generate_corpus
     from fastobo_py_spark.streaming import kg
@@ -252,8 +253,8 @@ def test_stream_kg_collision_fallback_matches_clean_batch(spark, monkeypatch):
             spines.append(key_col)
             return real_chain(clauses, persisted_out=persisted_out, key_col=key_col)
 
-        real_chain = kg.canonical_edges
-        monkeypatch.setattr(kg, "canonical_edges", spy)
+        real_chain = pipeline.canonical_edges
+        monkeypatch.setattr(pipeline, "canonical_edges", spy)
         clean = edges_written(f"{base}/clean")
 
         def fake_audit(clauses):
@@ -266,6 +267,40 @@ def test_stream_kg_collision_fallback_matches_clean_batch(spark, monkeypatch):
         fallback = edges_written(f"{base}/collision")
         assert spines == ["doc_key", "doc_sha"]
         assert fallback == clean and clean
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+def test_stream_kg_batch_records_metrics_and_manifest(spark):
+    """A micro-batch runs the batch job: it writes ``_metrics/<id>.json``
+    whose edge and node counts are the rows it wrote, and it records its
+    documents in the ingest manifest, so a later resumed batch over the
+    same rows adds no edges."""
+    import json
+
+    from fastobo_py_spark.plans.pipeline import run_pipeline
+    from fastobo_py_spark.schema import CORPUS_SCHEMA
+    from fastobo_py_spark.sources.corpus import generate_corpus
+    from fastobo_py_spark.streaming.kg import _process_batch
+
+    base = tempfile.mkdtemp(prefix="stream_kg_metrics_")
+    try:
+        out = f"{base}/out"
+        rows = generate_corpus(n_obo=6, n_noise=2, n_broken=0)
+        cols = [c.name for c in CORPUS_SCHEMA if c.name in rows[0]]
+        batch_df = spark.createDataFrame(
+            [tuple(r[c] for c in cols) for r in rows],
+            ", ".join(f"{c} string" for c in cols),
+        )
+        _process_batch(out, n_salts=4)(batch_df, 0)
+        (name,) = os.listdir(f"{out}/_metrics")
+        with open(f"{out}/_metrics/{name}") as fh:
+            m = json.load(fh)
+        n_edges = spark.read.parquet(f"{out}/edges").count()
+        assert m["edges"] == n_edges > 0
+        assert m["nodes"] == spark.read.parquet(f"{out}/nodes").count() > 0
+        assert run_pipeline(spark, batch_df, out, resume=True, n_salts=4)["edges"] == 0
+        assert spark.read.parquet(f"{out}/edges").count() == n_edges
     finally:
         shutil.rmtree(base, ignore_errors=True)
 

@@ -100,7 +100,7 @@ def test_clustered_write_matches_unclustered(spark, clauses):
     and nothing else: read back, the clustered layout holds exactly the
     rows of a plain partitionBy write of the same DataFrames, while the
     plain write fragments leaves across its tasks."""
-    from fastobo_py_spark.operators.materialize import build_nodes, with_salt, write_graph
+    from fastobo_py_spark.operators.materialize import build_nodes, graph_writers, with_salt
     from fastobo_py_spark.operators.surrogate import with_doc_key
     from fastobo_py_spark.plans.pipeline import canonical_edges
 
@@ -110,7 +110,8 @@ def test_clustered_write_matches_unclustered(spark, clauses):
     try:
         edges = canonical_edges(cl, persisted_out=caches)
         nodes = build_nodes(cl)
-        write_graph(nodes, edges, f"{base}/clustered")
+        for table, writer in graph_writers(nodes, edges).items():
+            writer.parquet(f"{base}/clustered/{table}")
         nodes.write.partitionBy("idspace").parquet(f"{base}/plain/nodes")
         with_salt(edges, "subj").write.partitionBy("idspace", "salt").parquet(f"{base}/plain/edges")
         _assert_one_file_per_leaf(f"{base}/clustered")
